@@ -39,13 +39,19 @@ def test_minhash_finds_neardups_not_distinct(docs):
         assert {a, b} != {1, 3} and {a, b} != {2, 3}  # dissimilar never pairs
 
 
-def test_simhash_identical_zero_hamming(docs):
+def test_simhash_identical_zero_hamming(spark, docs):
     sh = dd.simhash_df(docs)
     rows = {r["id"]: r["sh"] for r in sh.collect()}
     assert rows[1] == rows[4]  # normalized-identical -> same simhash
     pairs = dd.simhash_neardups(docs, max_hamming=10, prefix_bits=12)
     got = {(r["id_a"], r["id_b"]): r["hamming"] for r in pairs.collect()}
     assert got.get((1, 4)) == 0
+    # NULL text has no tokens, so explode drops the row: no signature
+    withnull = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, None), (3, "alpha beta delta")],
+        "doc_id long, text string",
+    )
+    assert [r["id"] for r in dd.simhash_df(withnull).orderBy("id").collect()] == [1, 3]
 
 
 def test_ngram_jaccard_bounds(spark, docs):
@@ -1008,65 +1014,3 @@ def test_soft_dedup_weights_keeps_null_text_rows(spark):
         assert int(by_id[i]["n_copies"]) == 3
         assert float(by_id[i]["weight"]) == 1.0 / 3
     assert int(by_id[1]["n_copies"]) == 1 and float(by_id[1]["weight"]) == 1.0
-
-
-def test_simhash_arrow_build_byte_identical(spark):
-    """The Arrow mapInPandas numpy-popcount signature build (round 14,
-    VERDICT r13 #2 A/B) must reproduce simhash_df bit-for-bit: same
-    normalize/split/xxhash64 front half, per-bit majority via
-    unpackbits + add.reduceat instead of 63 codegen sum columns. Pins
-    fixture docs AND the sf0.001 corpus, plus a long-doc corpus that
-    forces the chunked (>1 doc per reduceat slab boundary) path."""
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    a = dd.simhash_df(d).orderBy("id").collect()
-    b = dd.simhash_df_arrow(d).orderBy("id").collect()
-    assert len(a) == len(b) > 0
-    assert a == b
-    # forced multi-chunk path (review r14a #3: at the default 1M-token
-    # budget no test corpus ever crossed a chunk boundary, leaving the
-    # lo>0 branch — relative starts, searchsorted boundary, base offset
-    # — untested): a tiny budget makes EVERY doc cross it, including
-    # docs larger than the whole budget (the hi = max(hi, lo+1) path)
-    big = d.limit(20).select(
-        "doc_id",
-        F.concat_ws(" ", F.array_repeat(F.col("text"), 50)).alias("text"),
-    )
-    assert (
-        dd.simhash_df(big).orderBy("id").collect()
-        == dd.simhash_df_arrow(big, max_chunk_tokens=8).orderBy("id").collect()
-    )
-    # NULL text drops the row in BOTH paths (review r14a #1: the Arrow
-    # path crashed on the None token array instead of matching the
-    # aggregate path's explode-drop)
-    withnull = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, None), (3, "alpha beta delta")],
-        "doc_id long, text string",
-    )
-    a2 = dd.simhash_df(withnull).orderBy("id").collect()
-    b2 = dd.simhash_df_arrow(withnull).orderBy("id").collect()
-    assert [r["id"] for r in a2] == [1, 3]
-    assert a2 == b2
-
-
-def test_simhash_arrow_blocked_pairs_identical(spark):
-    """End-to-end: the blocked-exact pair set is invariant to which
-    signature build feeds it (the A/B's semantic precondition)."""
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    pert = d.select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" tail")).alias("text"),
-    )
-    both = d.unionByName(pert)
-    a = dd.simhash_blocked_pairs_from_sigs(
-        dd.simhash_df(both), max_hamming=6, combo_r=2, max_block_size=1000
-    )
-    b = dd.simhash_blocked_pairs_from_sigs(
-        dd.simhash_df_arrow(both), max_hamming=6, combo_r=2, max_block_size=1000
-    )
-    ra = sorted(tuple(r) for r in a.collect())
-    rb = sorted(tuple(r) for r in b.collect())
-    assert ra == rb and len(ra) > 0

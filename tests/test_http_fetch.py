@@ -1,6 +1,6 @@
 """Pooled HTTP fetcher against a live local server: keep-alive reuse,
-redirect following (round-1 advice: pooled path dead-lettered every 3xx
-that default_fetch's urllib would follow), and loop protection."""
+redirect following (a 3xx must download, not dead-letter), and loop
+protection."""
 
 from __future__ import annotations
 

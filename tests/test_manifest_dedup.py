@@ -388,104 +388,6 @@ def test_incremental_neardup_portable_lifecycle(spark, tmp_path):
     assert rebuilt == stored
 
 
-def test_bucketed_neardup_manifest_lifecycle(spark, tmp_path):
-    """Daily near-dup loop on the bucketed layout mirrors the
-    plain-parquet lifecycle: bootstrap, near-dup drop, novel survival,
-    day-3 catches near-dups of day-2 keepers, provenance accumulates."""
-    table = "nd_lifecycle_b"
-    path = str(tmp_path / "nd_lifecycle_b")
-    base = "the quick brown fox jumps over the lazy dog again and again today"
-    try:
-        out1 = mf.incremental_neardup_run_bucketed(
-            spark, _docs(spark, [(1, base)]),
-            table=table, path=path, buckets=4,
-            min_est_jaccard=0.6, run_id="d1",
-        )
-        assert {r["doc_id"] for r in out1.collect()} == {1}
-        day2 = _docs(
-            spark,
-            [
-                (10, base + " extra"),  # near-dup of day-1 keeper -> dropped
-                (11, "astronomy dataset with galaxies nebulae and very distant quasars observed nightly"),
-            ],
-        )
-        out2 = mf.incremental_neardup_run_bucketed(
-            spark, day2, table=table, path=path, buckets=4,
-            min_est_jaccard=0.6, run_id="d2",
-        )
-        assert {r["doc_id"] for r in out2.collect()} == {11}
-        day3 = _docs(
-            spark,
-            [(20, "astronomy dataset with galaxies nebulae and very distant quasars observed nightly always")],
-        )
-        out3 = mf.incremental_neardup_run_bucketed(
-            spark, day3, table=table, path=path, buckets=4,
-            min_est_jaccard=0.6, run_id="d3",
-        )
-        assert out3.count() == 0
-        m = mf.read_neardup_manifest_bucketed(spark, table)
-        assert {r["first_seen_run"] for r in m.collect()} == {"d1", "d2"}
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_bucketed_neardup_probe_removes_manifest_exchanges(spark, tmp_path):
-    """A/B plan evidence for the bucketed signature layout: the SAME
-    probe against the SAME manifest content plans with strictly fewer
-    Exchanges when the manifest is (band,bucket)-bucketed, and the
-    bucketed scan is actually used — the signature table (~304 B/doc,
-    hundreds of GB at web scale) never re-shuffles in the daily run."""
-    import io
-    from contextlib import redirect_stdout
-
-    def plan_of(df) -> str:
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue()
-
-    kept = spark.range(0, 500).select(
-        F.col("id").alias("doc_id"),
-        F.concat(
-            F.lit("document body number "), F.col("id"),
-            F.lit(" with several shared filler words appended"),
-        ).alias("text"),
-    )
-    plain = mf.build_neardup_manifest(kept, run_id="d1")
-    table = "nd_plan_b"
-    path = str(tmp_path / "nd_plan_b")
-    try:
-        mf.build_neardup_manifest_bucketed(
-            kept, table=table, path=path, buckets=4, run_id="d1"
-        )
-        bucketed = mf.read_neardup_manifest_bucketed(spark, table)
-        batch = spark.range(400, 600).select(
-            F.col("id").alias("doc_id"),
-            F.concat(
-                F.lit("document body number "), F.col("id"),
-                F.lit(" with several shared filler words appended"),
-            ).alias("text"),
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            p_plain = plan_of(
-                mf.neardup_manifest_dedup(batch, plain, min_est_jaccard=0.6)
-            )
-            p_bucketed = plan_of(
-                mf.neardup_manifest_dedup(batch, bucketed, min_est_jaccard=0.6)
-            )
-            assert "Bucketed: true" in p_bucketed
-            n_plain = p_plain.split("\n\n")[0].count("Exchange")
-            n_bucketed = p_bucketed.split("\n\n")[0].count("Exchange")
-            assert n_bucketed < n_plain, (n_bucketed, n_plain)
-        finally:
-            spark.conf.set(
-                "spark.sql.autoBroadcastJoinThreshold", "10485760"
-            )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
 class TestSemdedupManifest:
     """Incremental SEMANTIC dedup manifest: the daily SemDeDup loop —
     cross-run drop of semantic dups, within-batch pruning, replay

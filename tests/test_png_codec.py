@@ -2,7 +2,7 @@
 dispatch tier must execute in this container — fixture PNGs are built by
 the tests themselves (roundtrip through our encoder, hand-filtered
 scanlines, and a known third-party-encoded 1x1) and driven end-to-end
-through decode_features / resize_images on Spark."""
+through decode_features on Spark."""
 
 from __future__ import annotations
 
@@ -153,18 +153,6 @@ def test_decode_features_auto_uses_real_png_tier(spark):
     assert out[1]["feature"] != pytest.approx(mm._decode_bytes(blob))
     # the non-image row fell back to the stub, batch not poisoned
     assert out[2]["feature"] == pytest.approx(mm._decode_bytes(b"not an image"))
-
-
-def test_resize_images_auto_real_png_roundtrip(spark):
-    """resize_images on a real PNG: output payload is a decodable PNG at
-    the target geometry with nearest-resampled pixels."""
-    src = png.encode(2, 2, 1, bytes([0, 255, 255, 0]))
-    media = spark.createDataFrame([(7, src)], "media_id long, content binary")
-    row = mm.resize_images(media, width=4, height=4, decoder="auto").collect()[0]
-    assert (row["width"], row["height"]) == (4, 4)
-    w, h, nch, px = png.decode(bytes(row["content"]))
-    assert (w, h, nch) == (4, 4, 1)
-    assert px == png.resize_nearest(2, 2, 1, bytes([0, 255, 255, 0]), 4, 4)
 
 
 def test_external_red_pixel_through_spark(spark):

@@ -24,8 +24,7 @@ from wordpress_sql_to_contentstack_exporter_spark.plans.registry import (
 # (the stats module grew the skew variant + shared validation — the
 # sibling percentiles gates and robust_anomaly/quantile_buckets sit in
 # the window as the stats-family re-greens). Funded by rotating out
-# r14 oracle-greens on code untouched since (pinned clean by
-# test_rotated_out_r15_were_clean_in_r14). Pinned as SETS, not a
+# r14 oracle-greens on code untouched since. Pinned as SETS, not a
 # frozen order, so next round's rotation edits these lists
 # deliberately rather than breaking an order assertion by accident.
 ROUND15_WINDOW_NEW = {
@@ -73,11 +72,6 @@ ROUND15_WINDOW_RETAINED = {
     "eav_pivot", "group_concat", "hierarchy_parent", "broadcast_lookup",
     "semi_join",
 }
-# Funded by rotating out these r14 oracle-greens on untouched code:
-ROUND15_ROTATED_OUT = {
-    "span_coverage", "source_overlap", "audio_features", "frame_sample",
-}
-
 # The round-16 window contract (VERDICT r15 asks #1, #2): the three
 # queries whose physical plans the r15 optimizations changed AFTER the
 # r15 window was pinned rotate in for independent driver re-proof
@@ -85,8 +79,7 @@ ROUND15_ROTATED_OUT = {
 # optimization session touches (setsim_join, the winnow family,
 # repeated_spans, span_coverage, the rolling family) holds a window
 # slot. Funded by rotating out three r15 oracle-greens on code
-# untouched in r15 AND r16 (pinned by
-# test_rotated_out_r16_were_clean_in_r15).
+# untouched in r15 AND r16.
 ROUND16_WINDOW_REGREENS = {
     "span_coverage", "rolling_anomaly", "moving_average",
 }
@@ -107,105 +100,6 @@ def test_round16_window_set():
         | (ROUND15_WINDOW_RETAINED - ROUND16_ROTATED_OUT)
         | ROUND16_WINDOW_REGREENS
     )
-
-
-def test_rotated_out_r16_were_clean_in_r15():
-    """Every query rotated out of the r16 window must have a clean r15
-    oracle-green driver row — rotation never discards a query whose
-    latest driver contact was red or absent."""
-    import json
-    import os
-
-    path = os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r15.json")
-    rows = json.load(open(path))
-    for name in ROUND16_ROTATED_OUT:
-        e = rows[name]
-        assert e["rows_match"] and e["schema_match"] and e["hash_match"], name
-
-
-def test_rotated_out_r15_were_clean_in_r14():
-    """Every query rotated out of the r15 window must have a clean r14
-    oracle-green driver row — rotation never discards a query whose
-    latest driver contact was red or absent."""
-    import json
-    import os
-
-    path = os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r14.json")
-    rows = json.load(open(path))
-    for name in ROUND15_ROTATED_OUT:
-        e = rows[name]
-        assert e["rows_match"] and e["schema_match"] and e["hash_match"], name
-
-
-def test_rotated_out_r13_were_clean_in_r12():
-    """The twelve queries rotated out this round must all have clean
-    r12 driver rows — rotation never discards a query whose latest
-    driver contact was red or absent. (Eleven are rows-only first
-    contacts: clean rows, no error; unicode_clean was an r12
-    oracle-green.)"""
-    import json
-    import os
-
-    rotated_out = {
-        "incremental_neardup", "sliding_hll", "compression_ratio",
-        "approx_aggs", "hll_sketches", "ann_ivf_topk", "ann_pq_topk",
-        "ann_ivfpq_topk", "freq_items", "image_neardup", "audio_neardup",
-        "unicode_clean",
-    }
-    path = os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r12.json")
-    rows = json.load(open(path))
-    for name in rotated_out:
-        e = rows[name]
-        # rows-only entries record err='no_oracle' by design; anything
-        # else is a real failure
-        assert e["err"] in (None, "no_oracle"), (name, e)
-        assert e["spark_rows"] > 0, (name, e)
-    assert rows["unicode_clean"]["hash_match"] is True
-
-
-def test_rotated_out_r12_kept_their_greens():
-    """The eleven oracle-backed queries rotated out in r12 must all
-    be r11 driver-greens — rotation never discards a query whose latest
-    driver contact was red or absent. (The nine rows-only rotations
-    have no hash row by construction; their r11 first contacts were
-    clean rows/no-error, recorded in CORRECTNESS_r11.json.)"""
-    import json
-    import os
-
-    rotated_out = {
-        "incremental_dedup", "html_text", "windowed_dedup",
-        "incremental_dedup_bucketed", "html_quality",
-        "cluster_keepers", "centroid_similarity",
-        "winsorize", "time_rollup", "record_linkage", "event_pattern",
-    }
-    path = os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r11.json")
-    rows = json.load(open(path))
-    for name in rotated_out:
-        e = rows[name]
-        assert e["rows_match"] and e["schema_match"] and e["hash_match"], name
-    rows_only_out = {
-        "minhash_neardup", "semdedup", "dsir", "bpe_tokenize",
-        "quality_classifier", "ann_recall_sweep", "curation_pipeline",
-        "ann_lsh_topk", "embedding_neardup",
-    }
-    for name in rows_only_out:
-        e = rows[name]
-        assert e["err"] == "no_oracle" and e["spark_rows"] >= 1, name
-
-
-def test_rotated_out_r14_were_clean_in_r13():
-    """url_normalize, fd_profile and join_blowup funded the three r14
-    first-contact slots; all must have clean r13 oracle-green driver
-    rows — rotation never discards a query whose latest contact was red
-    or absent."""
-    import json
-    import os
-
-    path = os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r13.json")
-    rows = json.load(open(path))
-    for name in ("url_normalize", "fd_profile", "join_blowup"):
-        e = rows[name]
-        assert e["rows_match"] and e["schema_match"] and e["hash_match"], name
 
 
 def test_repetition_probes_stay_ordered():

@@ -221,51 +221,3 @@ def test_session_window_counts_batch_parity_and_streaming(spark, tmp_path):
         for r in spark.sql("select * from svc_test").collect()
     }
     assert srows == {(1, 10): 2, (1, 11): 1, (2, 10): 1}
-
-
-def test_attribution_join_batch_parity_and_streaming(spark, tmp_path):
-    import datetime as dt
-
-    from wordpress_sql_to_contentstack_exporter_spark.streaming.incremental import attribution_join
-
-    T = dt.datetime
-    views = spark.createDataFrame(
-        [
-            (1, T(2024, 1, 1, 10, 0), "v1"),
-            (1, T(2024, 1, 1, 12, 0), "v2"),
-            (2, T(2024, 1, 1, 10, 0), "v3"),
-        ],
-        "user_id long, view_ts timestamp, view_id string",
-    )
-    clicks = spark.createDataFrame(
-        [
-            (1, T(2024, 1, 1, 10, 30), "c1"),   # within 1h of v1
-            (1, T(2024, 1, 1, 11, 30), "c2"),   # >1h after v1, before v2 -> dropped
-            (2, T(2024, 1, 1, 13, 0), "c3"),    # >1h after v3 -> dropped
-        ],
-        "user_id long, click_ts timestamp, click_id string",
-    )
-    out = attribution_join(views, clicks)
-    got = {(r["view_id"], r["click_id"]) for r in out.collect()}
-    assert got == {("v1", "c1")}
-
-    # identical code as a real stream-stream join
-    vd, cd = tmp_path / "v", tmp_path / "c"
-    views.write.parquet(str(vd / "b0.parquet"))
-    clicks.write.parquet(str(cd / "b0.parquet"))
-    vs = spark.readStream.schema(views.schema).parquet(str(vd / "*.parquet"))
-    cs = spark.readStream.schema(clicks.schema).parquet(str(cd / "*.parquet"))
-    q = (
-        attribution_join(vs, cs)
-        .writeStream.format("memory")
-        .queryName("attr_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    srows = {
-        (r["view_id"], r["click_id"])
-        for r in spark.sql("select * from attr_test").collect()
-    }
-    assert srows == {("v1", "c1")}

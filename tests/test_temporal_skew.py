@@ -502,3 +502,54 @@ def test_gapfill_interp_guards(spark):
             aggs={"s": F.sum("value"), "s_interp": F.count(F.lit(1))},
             interp_cols=["s"],
         )
+
+
+def test_sessionize_subsecond_gap_matches_duckdb(spark, tmp_path):
+    """The 30-min session gap is compared to the microsecond: user 1's
+    1800.7 s gap starts a second session, user 2's 1799.9 s gap does
+    not. Both session queries must agree with their DuckDB oracles on
+    the same parquet file (whole-second truncation read 1800.7 as 1800)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from wordpress_sql_to_contentstack_exporter_spark.plans import registry as reg
+
+    t0 = T(2024, 3, 1, 9, 0, 0)
+    events = [
+        (1, t0, 1, "view"),
+        (2, t0 + dt.timedelta(seconds=1800, milliseconds=700), 1, "click"),
+        (3, t0, 2, "view"),
+        (4, t0 + dt.timedelta(seconds=1799, milliseconds=900), 2, "click"),
+    ]
+    ids, ts, users, types = map(list, zip(*events))
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(ids, pa.int64()),
+                "ts": pa.array(ts, pa.timestamp("us")),
+                "user_id": pa.array(users, pa.int64()),
+                "event_type": pa.array(types, pa.string()),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    # (user_id, session_id, n_events) and (path, n_sessions);
+    # session_start is left out so the compare does not depend on how
+    # each engine types the timestamp
+    widths = {"sessionize": 3, "session_paths": 2}
+    with duckdb.connect() as con:
+        con.execute(
+            f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')"
+        )
+        want = {
+            name: sorted(r[:w] for r in con.execute(reg.ORACLE_SQL[name]).fetchall())
+            for name, w in widths.items()
+        }
+    assert want["sessionize"] == [(1, 1, 1), (1, 2, 1), (2, 1, 2)]
+    assert want["session_paths"] == [("click", 1), ("view", 1), ("view>click", 1)]
+    for name, w in widths.items():
+        got = sorted(
+            tuple(r)[:w] for r in reg.SPARK_QUERIES[name](spark, str(tmp_path)).collect()
+        )
+        assert got == want[name], name

@@ -342,38 +342,6 @@ def test_tfidf_top_terms_ranks_rare_terms_first(spark):
     assert by_doc[2][0][1] == "other"
 
 
-def test_resize_images_stub_contract(spark):
-    from wordpress_sql_to_contentstack_exporter_spark.operators import multimodal as mm
-
-    docs = spark.createDataFrame(
-        [(1, "hello"), (2, "world"), (3, None)], "doc_id long, text string"
-    )
-    media = mm.synthesize_media_from_documents(docs)
-    out = mm.resize_images(media, width=32, height=16, decoder="stub")
-    rows = {r["media_id"]: r for r in out.collect()}
-    assert out.schema == mm.RESIZED_SCHEMA
-    assert rows[1]["content"].startswith(b"RESIZED:32x16:")
-    assert (rows[1]["width"], rows[1]["height"]) == (32, 16)
-    assert rows[3]["content"] is None  # null payload passes through
-    # deterministic across runs
-    again = {r["media_id"]: r["content"] for r in
-             mm.resize_images(media, width=32, height=16, decoder="stub").collect()}
-    assert {k: v["content"] for k, v in rows.items()} == again
-
-
-def test_resize_images_pil_requires_library(spark):
-    import pytest as _pytest
-
-    from wordpress_sql_to_contentstack_exporter_spark.operators import multimodal as mm
-
-    docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    media = mm.synthesize_media_from_documents(docs)
-    if "pil" in mm.available_decoders():
-        _pytest.skip("PIL installed: the pil path is covered by the real-codec test")
-    with _pytest.raises(Exception, match="PIL is not installed"):
-        mm.resize_images(media, width=4, height=4, decoder="pil").collect()
-
-
 def test_sample_frames_stub_counts_and_determinism(spark):
     from pyspark.sql import functions as F
 

@@ -7,7 +7,6 @@ from .strings import (
     slugify,
     split_to_array,
     url_basename,
-    url_encode,
 )
 from .dates import iso8601, padded_day, padded_month, year_str
 from .permalink import blogname_of, compile_permalink
@@ -23,7 +22,6 @@ __all__ = [
     "slugify",
     "split_to_array",
     "url_basename",
-    "url_encode",
     "iso8601",
     "padded_day",
     "padded_month",

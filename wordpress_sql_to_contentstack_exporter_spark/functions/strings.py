@@ -104,20 +104,6 @@ def url_basename(url: Column | str) -> Column:
     return F.element_at(F.split(c, "/"), -1)
 
 
-def url_encode(url: Column | str) -> Column:
-    """JS ``encodeURI`` approximation (assets.js:77): percent-encode spaces
-    and double quotes, the characters that actually occur in WP media GUIDs.
-
-    Full ``encodeURI`` semantics (UTF-8 percent-encoding of every
-    non-reserved codepoint) live in the Python downloader
-    (sources/http.py) where the URL is consumed — per SURVEY.md §2 row 39
-    that is the one place a non-expression implementation is acceptable.
-    """
-    c = F.col(url) if isinstance(url, str) else url
-    out = F.replace(c, F.lit(" "), F.lit("%20"))
-    return F.replace(out, F.lit('"'), F.lit("%22"))
-
-
 def html_to_text(text: Column | str) -> Column:
     """Markup → analyzable text, the extraction step between a
     WordPress export and the text-analysis operators (``post_content``

@@ -59,7 +59,3 @@ def observe_stage(df: DataFrame, stage: str, *extra: Column):
 
     obs = Observation(stage)
     return df.observe(obs, F.count(F.lit(1)).alias("rows"), *extra), obs
-
-
-def log_stage(logger: logging.Logger, stage: str, observation) -> None:
-    logger.info("stage %s complete", stage, extra={"metrics": observation.get})

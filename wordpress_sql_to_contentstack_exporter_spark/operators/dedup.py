@@ -148,20 +148,6 @@ def word_shingle_hashes(text: Column, k: int = 3) -> Column:
     return acc
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature as a single array expression (for small inputs /
-    expression contexts). Prefer ``minhash_signatures_df`` in pipelines:
-    nested higher-order functions are interpreted, not codegen'd, and this
-    form re-evaluates the shingle expression per seed.
-    """
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, lambda sh: F.xxhash64(sh, F.lit(seed))))
-            for seed in range(num_hashes)
-        ]
-    )
-
-
 def minhash_signatures_df(
     df: DataFrame,
     text_col: str = "text",
@@ -434,38 +420,6 @@ SIMHASH_BITS = 63
 _ROT_STRIDE = 29
 
 
-def simhash64(text: Column, token_sep: str = " ") -> Column:
-    """63-bit SimHash over whitespace tokens.
-
-    Per token: xxhash64; per bit: sum of +1/-1 contributions (sign of the
-    count becomes the bit). One pass over the token array via
-    ``aggregate`` with an array accumulator — JVM-side, no Python.
-    """
-    toks = F.split(normalize_text(text), token_sep)
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    zero = F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS)
-    counts = F.aggregate(
-        hashes,
-        zero,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1)),
-            lambda c, i: c
-            + F.when(F.getbit(h, i) == 1, F.lit(1).cast("long")).otherwise(
-                F.lit(-1).cast("long")
-            ),
-        ),
-    )
-    bits = F.transform(
-        counts,
-        lambda c: F.when(c > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long")),
-    )
-    # MSB-first fold: acc*2 + bit, 63 bits -> fits in signed long.
-    return F.aggregate(
-        F.reverse(bits), F.lit(0).cast("long"), lambda acc, b: acc * 2 + b
-    )
-
-
 def simhash_df(
     df: DataFrame,
     text_col: str = "text",
@@ -517,108 +471,6 @@ def simhash_df(
         ).otherwise(F.lit(0).cast("long"))
         value = piece if value is None else value + piece
     return bit_sums.select("id", value.alias(out_col))
-
-
-def simhash_df_arrow(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    out_col: str = "sh",
-    max_chunk_tokens: int = 1 << 20,
-) -> DataFrame:
-    """SimHash signatures via an Arrow ``mapInPandas`` numpy popcount —
-    byte-identical to :func:`simhash_df`, ZERO shuffle (VERDICT r13 #2).
-
-    The division of labor: tokenization and token hashing stay JVM-side
-    (``normalize_text`` → ``split`` → ``transform(xxhash64)`` — the
-    hash must match the aggregate path bit-for-bit), producing one
-    ``array<long>`` row per document; the per-bit majority vote moves
-    to numpy, where it is a dense matrix reduction instead of 63
-    codegen sum columns:
-
-    - ``unpackbits`` on the little-endian byte view of the token-hash
-      block → an (n_tokens, 64) bit matrix (two's-complement bits,
-      exactly what ``shiftright(th, b) & 1`` reads);
-    - ``add.reduceat`` at document boundaries (the list lengths give
-      them directly — no sort, no group shuffle) → per-doc ones counts;
-    - bit b set iff ``2*ones > n`` (the shared branch-free rule), then
-      ``packbits`` little-endian back into one int64 with bit 63
-      forced clear (SIMHASH_BITS = 63).
-
-    Plan shape: scan → project → ArrowEvalPython, map-only — the
-    groupBy path instead exchanges 64 partial-sum longs per (doc,
-    mapper). At 100 TB both are scan-bound; at bench scale the Arrow
-    path wins because the 64-column hash aggregate's per-row update
-    cost (63 branch-free sums through codegen) exceeds Arrow transfer
-    plus vectorized numpy (measured A/B in SCALE.md round 14). The
-    shipped :func:`simhash_df` stays as the no-Python fallback and the
-    semantics reference; equality is pinned in tests at sf0.001.
-    """
-    import numpy as np
-    import pandas as pd
-
-    # NULL text: simhash_df's explode drops the row (explode of a NULL
-    # array emits nothing), so the doc has no signature; mirror that by
-    # filtering NULL token arrays BEFORE the Python stage (review r14a
-    # #1: np.fromiter crashed on the None instead of matching).
-    hashed = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(
-            F.split(normalize_text(F.col(text_col)), " "),
-            lambda t: F.xxhash64(t),
-        ).alias("__ths"),
-    ).filter(F.col("__ths").isNotNull())
-
-    # Peak-memory bound for the unpacked bit matrix: the default 1 M
-    # tokens x 64 uint8 = 64 MB per in-flight chunk per Python worker
-    # (the first cut astype(int64)'d the matrix — 512 B/token, ~2.5 GB
-    # per 10k-doc Arrow batch, and 32 concurrent workers GC-thrashed
-    # the tier run to 3x the aggregate path; measured, SCALE.md round
-    # 14). Parameterized so tests can force the multi-chunk path
-    # (review r14a #3).
-    if max_chunk_tokens < 1:
-        raise ValueError("max_chunk_tokens >= 1 required")
-
-    def build(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["id"].to_numpy()
-            lists = pdf["__ths"].to_numpy()
-            lens = np.fromiter(
-                (len(x) for x in lists), dtype=np.int64, count=len(lists)
-            )
-            # split("") yields [""] — every doc has >= 1 token, so no
-            # empty reduceat segments exist (asserted cheaply here: a
-            # zero length would silently merge two docs' counts).
-            if lens.min() < 1:
-                raise ValueError("empty token list — split contract broken")
-            cum = np.cumsum(lens)
-            sh = np.empty(len(lens), dtype=np.int64)
-            lo = 0  # doc index of the current chunk
-            while lo < len(lens):
-                base = cum[lo - 1] if lo else 0
-                hi = int(np.searchsorted(cum, base + max_chunk_tokens))
-                hi = max(hi, lo + 1)  # always admit >= 1 doc
-                flat = np.concatenate(lists[lo:hi]).astype("<i8", copy=False)
-                bits = np.unpackbits(
-                    flat.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
-                )
-                starts = (cum[lo:hi] - lens[lo:hi] - base).astype(np.intp)
-                # dtype=int64 accumulates wide WITHOUT widening the
-                # uint8 input matrix (the memory fix above).
-                ones = np.add.reduceat(bits, starts, axis=0, dtype=np.int64)
-                sig = 2 * ones > lens[lo:hi, None]
-                sig[:, SIMHASH_BITS:] = False
-                sh[lo:hi] = (
-                    np.packbits(sig, axis=1, bitorder="little").view("<i8").ravel()
-                )
-                lo = hi
-            yield pd.DataFrame({"id": ids, out_col: sh})
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    return hashed.mapInPandas(build, f"id {id_type}, {out_col} long")
 
 
 def _rotl63(v: Column, s: int) -> Column:

@@ -604,143 +604,6 @@ def incremental_neardup_run(
 
 
 # ---------------------------------------------------------------------------
-# Bucketed NEAR-dup manifest (round 9): the (band, bucket) probe join
-# gets the same zero-manifest-shuffle treatment as the exact path
-# ---------------------------------------------------------------------------
-
-#: bucket columns of the bucketed signature manifest — the probe join's
-#: equi-keys, so co-partitioning by them is what deletes the
-#: manifest-side Exchange from the daily run.
-NEARDUP_BUCKET_COLS = ("band", "bucket")
-
-
-def build_neardup_manifest_bucketed(
-    df: DataFrame,
-    *,
-    table: str,
-    path: str,
-    buckets: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 2,
-    shingle_k: int = 3,
-    shingle_mode: str = "word",
-    run_id: str | None = None,
-) -> None:
-    """Bootstrap the signature manifest as a saved table BUCKETED by
-    ``(band, bucket)`` — the probe join's equi-keys. The daily
-    candidate join then reads the manifest pre-partitioned: only the
-    (small) batch probe shuffles, and the ``max_bucket_size`` skew
-    guard's groupBy + semi-join run exchange-free too (both sides of
-    that semi-join derive from the same bucketed scan). At web scale
-    the signature table is ~304 B/doc — hundreds of GB for a trillion
-    docs — and this layout is the difference between re-shuffling it
-    every day and never. Same contract notes as
-    ``build_manifest_bucketed``: ``path`` required (external table),
-    ``buckets`` and the signature parameters are permanent; appends
-    validate the bucket spec."""
-    banded = build_neardup_manifest(
-        df,
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_k=shingle_k,
-        shingle_mode=shingle_mode,
-        run_id=run_id,
-    )
-    (
-        banded.write.bucketBy(buckets, *NEARDUP_BUCKET_COLS)
-        .sortBy(*NEARDUP_BUCKET_COLS)
-        .option("path", path)
-        .mode("overwrite")
-        .saveAsTable(table)
-    )
-
-
-def read_neardup_manifest_bucketed(
-    spark: SparkSession, table: str, *, num_hashes: int = 16
-) -> DataFrame:
-    """Catalog read of the bucketed signature manifest (the only read
-    that keeps the bucket spec — see ``read_manifest_bucketed`` for why
-    snapshot pinning moves to the eager survivor checkpoint here). A
-    missing table bootstraps empty."""
-    if not spark.catalog.tableExists(table):
-        return spark.createDataFrame([], neardup_manifest_schema(num_hashes))
-    return spark.table(table)
-
-
-def incremental_neardup_run_bucketed(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    *,
-    table: str,
-    path: str,
-    buckets: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 2,
-    shingle_k: int = 3,
-    shingle_mode: str = "word",
-    min_est_jaccard: float = 0.9,
-    max_bucket_size: int | None = 200_000,
-    run_id: str,
-) -> DataFrame:
-    """The daily NEAR-dup step on the bucketed layout, symmetric with
-    ``incremental_dedup_run_bucketed``: catalog read (bucket spec
-    intact → manifest never shuffles) → probe → EAGER checkpoint of the
-    survivors (the snapshot-pinning mechanism; loud lost-block failure,
-    never a silent self-probe) → append the survivors' banded
-    signatures INTO the buckets → return the surviving ids."""
-    if not spark.catalog.tableExists(table):
-        build_neardup_manifest_bucketed(
-            new_docs.limit(0),
-            table=table,
-            path=path,
-            buckets=buckets,
-            text_col=text_col,
-            id_col=id_col,
-            num_hashes=num_hashes,
-            bands=bands,
-            shingle_k=shingle_k,
-            shingle_mode=shingle_mode,
-            run_id=run_id,
-        )
-    manifest = read_neardup_manifest_bucketed(
-        spark, table, num_hashes=num_hashes
-    )
-    probe, survivors = _neardup_probe_and_survivors(
-        new_docs,
-        manifest,
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_k=shingle_k,
-        shingle_mode=shingle_mode,
-        min_est_jaccard=min_est_jaccard,
-        max_bucket_size=max_bucket_size,
-    )
-    survivors = survivors.localCheckpoint(eager=True)
-    # Appended rows come from the checkpointed probe, exactly as in the
-    # plain-parquet run (same single-evaluation argument); the write
-    # lands them in their (band, bucket) buckets so the layout survives
-    # every append.
-    new_rows = probe.join(
-        survivors.select(F.col(id_col).alias("id")), "id", "left_semi"
-    ).withColumn("first_seen_run", F.lit(run_id).cast("string"))
-    (
-        new_rows.write.bucketBy(buckets, *NEARDUP_BUCKET_COLS)
-        .sortBy(*NEARDUP_BUCKET_COLS)
-        .mode("append")
-        .saveAsTable(table)
-    )
-    return survivors
-
-
-# ---------------------------------------------------------------------------
 # PORTABLE (md5) cross-run NEAR-dup manifest (round 12, VERDICT r11 #4):
 # the persisted signatures become a cross-engine artifact
 # ---------------------------------------------------------------------------
@@ -1004,49 +867,6 @@ def _unit_vector(vec):
         ).otherwise(v)
 
     return _let(_as_double(vec), body)
-
-
-def build_semdedup_manifest(
-    vectors: DataFrame,
-    *,
-    centers,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    max_cell_rows: int = 500_000,
-    run_id: str | None = None,
-) -> DataFrame:
-    """Bootstrap the semantic-dedup manifest: SemDeDup the initial
-    corpus under PREFIT ``centers`` (persist them with
-    ``similarity.save_ann_index`` — the cell layout is part of the
-    manifest's identity; see ``semdedup(centers=...)``) and emit one
-    manifest row per survivor: (vec_id, cell, unit vector). Unit
-    vectors are stored so the daily probe is a plain dot product —
-    ~8·dim bytes per kept row, text/payload never stored.
-    """
-    from . import similarity as sim
-
-    kept = sim.semdedup(
-        vectors,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_cells=len(centers),
-        threshold=threshold,
-        max_cell_rows=max_cell_rows,
-        centers=centers,
-    ).filter(F.col("keep"))
-    return (
-        vectors.select(
-            F.col(id_col).alias("vec_id"), _unit_vector(F.col(vec_col)).alias("unit")
-        )
-        .join(kept.select(F.col(id_col).alias("vec_id"), "cell"), "vec_id")
-        .select(
-            "vec_id",
-            "cell",
-            "unit",
-            F.lit(run_id).cast("string").alias("first_seen_run"),
-        )
-    )
 
 
 def read_semdedup_manifest(spark: SparkSession, path: str) -> DataFrame:

@@ -196,16 +196,6 @@ def synthesize_media_from_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-#: Output of the resize stage: same media-row shape, new payload + dims.
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-    ]
-)
-
 #: Output of the frame-sampling stage: one row per sampled frame.
 FRAMES_SCHEMA = T.StructType(
     [
@@ -215,87 +205,6 @@ FRAMES_SCHEMA = T.StructType(
         T.StructField("frame", T.BinaryType(), True),
     ]
 )
-
-
-def resize_images(
-    df: DataFrame, *, width: int, height: int, decoder: str = "auto"
-) -> DataFrame:
-    """Image resize stage over binary media rows (``mapInPandas``).
-
-    ``decoder="auto"`` cascades pil → stdlib-png → stub per row: PIL when
-    present (decode → ``Image.resize`` → PNG re-encode), the stdlib PNG
-    tier for PNG payloads (decode → nearest-neighbor resample → PNG
-    re-encode, ``operators.png`` — real pixels, no third-party library),
-    else the deterministic stub; ``"pil"`` requires PIL; ``"png"``
-    forces the stdlib tier; ``"stub"`` forces the stub. The stub payload
-    is sha256-derived and tagged with the target geometry, so the
-    Spark-side contract — binary in, smaller binary out, dims recorded —
-    is exercised end-to-end even on non-image payloads.
-
-    Same batch/partition guidance as ``decode_features``: the stage is
-    compute-bound, payload-heavy, and map-only — partitions sized to
-    cores, no shuffle.
-    """
-    if decoder not in ("auto", "pil", "png", "stub"):
-        raise ValueError(f"unknown decoder {decoder!r} (auto|pil|png|stub)")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pil_resize = None
-        if decoder in ("auto", "pil"):
-            try:
-                import io
-
-                from PIL import Image
-
-                def pil_resize(payload: bytes) -> bytes:
-                    img = Image.open(io.BytesIO(payload)).resize((width, height))
-                    buf = io.BytesIO()
-                    img.save(buf, format="PNG")
-                    return buf.getvalue()
-
-            except ImportError:
-                if decoder == "pil":
-                    raise ImportError(
-                        "decoder='pil' requested but PIL is not installed"
-                    )
-        use_png = decoder in ("auto", "png")
-
-        def png_resize(payload: bytes) -> bytes:
-            w, h, nch, px = _png.decode(payload)
-            return _png.encode(
-                width, height, nch, _png.resize_nearest(w, h, nch, px, width, height)
-            )
-
-        def stub_resize(payload: bytes) -> bytes:
-            tag = f"RESIZED:{width}x{height}:".encode()
-            return tag + hashlib.sha256(payload).digest()
-
-        def do(payload):
-            if payload is None:
-                return None
-            if pil_resize is not None:
-                try:
-                    return pil_resize(payload)
-                except Exception:  # not PIL-decodable: next tier, not poison
-                    pass
-            if use_png:
-                try:
-                    return png_resize(payload)
-                except Exception:  # non-PNG payload: stub, not poison
-                    pass
-            return stub_resize(payload)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": pdf["content"].map(do),
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return df.select("media_id", "content").mapInPandas(run, RESIZED_SCHEMA)
 
 
 def sample_frames(

@@ -59,28 +59,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot(ad, bd) / denom).otherwise(F.lit(0.0))
 
 
-def cosine_pandas(vec_col_a: str, vec_col_b: str) -> Column:
-    """Arrow-batched Pandas-UDF cosine — the vectorized Python path.
-
-    The expression form (``cosine``) stays JVM-side and is the default;
-    this exists for cases where the math outgrows Catalyst expressions
-    (e.g. swapping in a real model's scoring fn). numpy over Arrow
-    batches: one Python roundtrip per batch, not per row.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        av = np.stack(a.to_numpy()).astype(np.float64)
-        bv = np.stack(b.to_numpy()).astype(np.float64)
-        dots = (av * bv).sum(axis=1)
-        return pd.Series(
-            dots / (np.linalg.norm(av, axis=1) * np.linalg.norm(bv, axis=1))
-        )
-
-    return _cos(F.col(vec_col_a), F.col(vec_col_b))
-
-
 def embedding_neardup_pairs(
     vectors: DataFrame,
     *,

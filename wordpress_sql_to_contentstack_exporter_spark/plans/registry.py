@@ -673,22 +673,32 @@ QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC)
 """
 
 
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30-min inactivity) via lag + running sum —
-    the batch form of the streaming session operator."""
-    e = _t(spark, sf_dir, "events")
+def _sessionized(events: DataFrame) -> DataFrame:
+    """Add ``session_id``: a user's first event, or one more than 30 min
+    after their previous event, starts a new session (lag + running
+    sum). The gap is compared in microseconds, like the oracles'
+    fractional ``epoch(ts)``: whole-second ``unix_timestamp`` would read
+    a real 1800.7 s gap as 1800 and keep the session open."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    flagged = e.withColumn(
+    prev_ts = F.lag("ts").over(w)
+    gap_us = F.timestamp_diff("MICROSECOND", prev_ts, F.col("ts"))
+    return events.withColumn(
         "new_session",
-        F.when(gap.isNull() | (gap > 1800), F.lit(1)).otherwise(F.lit(0)),
-    )
-    sessioned = flagged.withColumn(
+        F.when(prev_ts.isNull() | (gap_us > 1800 * 1_000_000), F.lit(1)).otherwise(
+            F.lit(0)
+        ),
+    ).withColumn(
         "session_id",
         F.sum("new_session").over(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ),
     )
+
+
+def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gap-based sessionization (30-min inactivity) via lag + running sum —
+    the batch form of the streaming session operator."""
+    sessioned = _sessionized(_t(spark, sf_dir, "events"))
     return (
         sessioned.groupBy("user_id", "session_id")
         .agg(F.count(F.lit(1)).alias("n_events"), F.min("ts").alias("session_start"))
@@ -4820,18 +4830,7 @@ def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort_array over (ts, event_id, type) structs — deterministic under
     parallel collection (collect_list order is otherwise unspecified).
     Counts are integers; ordering (n desc, path) total — ULP-free."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    sessioned = e.withColumn(
-        "new_session",
-        F.when(gap.isNull() | (gap > 1800), F.lit(1)).otherwise(F.lit(0)),
-    ).withColumn(
-        "session_id",
-        F.sum("new_session").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
+    sessioned = _sessionized(_t(spark, sf_dir, "events"))
     paths = (
         sessioned.groupBy("user_id", "session_id")
         .agg(

@@ -320,11 +320,3 @@ TPCH_TABLES = [
     "documents",
     "embeddings",
 ]
-
-
-def testdata_catalog(spark: SparkSession, sf_dir: str) -> Catalog:
-    """Catalog over the driver-generated synthetic tables (TESTDATA.md)."""
-    cat = Catalog(spark)
-    for n in TPCH_TABLES:
-        cat.register(n, lambda s, _n=n: load_table(s, sf_dir, _n))
-    return cat

@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import os
 import urllib.parse
-import urllib.request
 from collections.abc import Callable, Iterator
 from typing import Optional
 
@@ -55,14 +54,6 @@ def encode_uri(url: str) -> str:
     return urllib.parse.quote(url, safe=_ENCODE_URI_SAFE)
 
 
-def default_fetch(url: str, timeout: float) -> bytes:
-    """One-shot HTTP GET (no connection reuse); raises on non-200."""
-    with urllib.request.urlopen(url, timeout=timeout) as resp:
-        if getattr(resp, "status", 200) != 200:
-            raise RuntimeError(f"status code: {resp.status}")
-        return resp.read()
-
-
 #: Follow at most this many 3xx hops (loop guard; WP media URLs commonly
 #: 301 to https or to a CDN host).
 _MAX_REDIRECTS = 5
@@ -76,10 +67,8 @@ def pooled_fetch_factory():
     inside the downloader.
 
     3xx responses follow ``Location`` (up to ``_MAX_REDIRECTS`` hops,
-    relative or absolute) — matching ``default_fetch``'s urllib behavior,
-    which follows redirects transparently; without this, every
-    http->https upgrade or CDN move would dead-letter under the pooled
-    path only."""
+    relative or absolute; a longer chain raises), so an http->https
+    upgrade or a CDN move downloads instead of dead-lettering."""
     import http.client
 
     conns: dict = {}

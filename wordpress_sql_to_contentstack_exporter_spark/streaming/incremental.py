@@ -125,60 +125,3 @@ def session_window_counts(
             "n_events",
         )
     )
-
-
-def attribution_join(
-    views: DataFrame,
-    clicks: DataFrame,
-    *,
-    key_col: str = "user_id",
-    view_ts: str = "view_ts",
-    click_ts: str = "click_ts",
-    attribution_window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked STREAM-STREAM interval join: attribute each click to
-    the view(s) by the same key within the preceding
-    ``attribution_window`` — the ad-tech / funnel-stitching shape
-    Structured Streaming supports natively and batch engines fake with
-    repeated re-scans.
-
-    Both sides carry a watermark and the join condition bounds
-    ``click_ts`` to ``[view_ts, view_ts + window]``, which is what lets
-    the state store EVICT: a buffered view can be dropped once the
-    click-side watermark passes ``view_ts + window`` (unbounded
-    stream-stream joins otherwise accumulate state forever — the
-    documented requirement for inner interval joins). Inner join: an
-    unattributed click expires silently; use leftOuter on the click
-    side when "unattributed" must surface as a row.
-
-    Batch parity: on batch frames the watermarks are no-ops and the
-    same plan is a plain interval equi+range join, so correctness is
-    testable without a streaming harness and the identical code
-    deploys streaming — the windowed_event_counts discipline.
-    """
-    v = views.withWatermark(view_ts, watermark).alias("v")
-    c = clicks.withWatermark(click_ts, watermark).alias("c")
-    cond = (
-        (F.col(f"v.{key_col}") == F.col(f"c.{key_col}"))
-        & (F.col(f"c.{click_ts}") >= F.col(f"v.{view_ts}"))
-        & (
-            F.col(f"c.{click_ts}")
-            <= F.col(f"v.{view_ts}") + F.expr(f"INTERVAL {attribution_window}")
-        )
-    )
-    return v.join(c, cond, "inner").select(
-        F.col(f"v.{key_col}").alias(key_col),
-        F.col(f"v.{view_ts}").alias(view_ts),
-        F.col(f"c.{click_ts}").alias(click_ts),
-        *[
-            F.col(f"v.{x}").alias(x)
-            for x in views.columns
-            if x not in (key_col, view_ts)
-        ],
-        *[
-            F.col(f"c.{x}").alias(x)
-            for x in clicks.columns
-            if x not in (key_col, click_ts)
-        ],
-    )
