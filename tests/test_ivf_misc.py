@@ -1,11 +1,10 @@
-"""IVF ANN recall, frequent items, topological load order."""
+"""IVF ANN recall, frequent items."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from wordpress_sql_to_contentstack_exporter_spark.operators import similarity as sim
-from wordpress_sql_to_contentstack_exporter_spark.plans.pipeline import topo_order
 
 
 def test_ivf_topk_recall(spark):
@@ -62,18 +61,6 @@ def test_freq_items_contains_true_heavy_hitters(spark):
     for flag, n in true_counts.items():
         if n / total >= 0.2:
             assert flag in freq
-
-
-def test_topo_order_matches_reference_priority():
-    # contenttypes/__priority.json == ["authors", "categories", "posts"]
-    assert topo_order() == ["authors", "categories", "posts"]
-
-
-def test_topo_order_detects_cycles():
-    import pytest
-
-    with pytest.raises(ValueError, match="cycle"):
-        topo_order({"a": ["b"], "b": ["a"]})
 
 
 def test_embedding_dim_metadata_probe(tmp_path, monkeypatch):

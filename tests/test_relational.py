@@ -1,5 +1,5 @@
 """Relational operators: EAV pivot drop semantics, decorrelated
-group-concat, hierarchy self-join, ID-list semi/anti joins."""
+group-concat, hierarchy self-join, ID-list semi join."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ from wordpress_sql_to_contentstack_exporter_spark.operators.relational import (
     hierarchy_parent_join,
 )
 from wordpress_sql_to_contentstack_exporter_spark.sources.idlist import (
-    exclude_ids,
     filter_by_ids,
     read_id_list,
 )
@@ -68,8 +67,6 @@ def test_id_list_roundtrip(spark, tmp_path):
     df = spark.createDataFrame([(i,) for i in range(9, 14)], "ID long")
     kept = filter_by_ids(df, ids, "ID")
     assert sorted(r["ID"] for r in kept.collect()) == [10, 11, 12]
-    dropped = exclude_ids(df, ids, "ID")
-    assert sorted(r["ID"] for r in dropped.collect()) == [9, 13]
 
 
 def test_upsert_latest_merge_semantics(spark):

@@ -124,16 +124,13 @@ def test_subset_rerun_preserves_other_entries(spark, wp_catalog, tmp_path):
     assert set(master["en-us"]) == {"10", "11"}
 
 
-def test_dlq_merge_semantics(spark, tmp_path):
+def test_dlq_merge_semantics(tmp_path):
     from wordpress_sql_to_contentstack_exporter_spark.sinks.dlq import write_dlq
 
     path = str(tmp_path / "wp_failed.json")
-    f1 = spark.createDataFrame([(21, "err-a"), (30, "err-b")], "id long, error string")
-    write_dlq(f1, path)
+    write_dlq([("21", "err-a"), ("30", "err-b")], path=path)
     # next run: 21 untouched, 30 succeeds, 31 newly fails
-    f2 = spark.createDataFrame([(31, "err-c")], "id long, error string")
-    ok = spark.createDataFrame([(30,)], "id long")
-    write_dlq(f2, path, succeeded=ok)
+    write_dlq([("31", "err-c")], path=path, succeeded=["30"])
     import json
 
     doc = json.loads(open(path).read())
@@ -173,7 +170,7 @@ def test_hyperplane_signature_32_planes_no_overflow(spark):
 # --- round-2 adversarial-review fixes ---
 
 
-def test_master_merge_preserves_other_locales(spark, tmp_path):
+def test_master_merge_preserves_other_locales(tmp_path):
     """A locale-B subset merge must not clobber locale A's mapping (the
     clobber became reachable once locale was configurable)."""
     import json
@@ -183,10 +180,8 @@ def test_master_merge_preserves_other_locales(spark, tmp_path):
     )
 
     path = str(tmp_path / "posts.json")
-    en = spark.createDataFrame([("10",), ("11",)], "k string")
-    write_master_mapping(en, F.col("k"), path, locale="en-us")
-    fr = spark.createDataFrame([("10",)], "k string")
-    write_master_mapping(fr, F.col("k"), path, locale="fr-fr", merge=True)
+    write_master_mapping(["10", "11"], path=path, locale="en-us")
+    write_master_mapping(["10"], path=path, locale="fr-fr", merge=True)
     doc = json.loads(open(path).read())
     assert doc == {"en-us": {"10": "", "11": ""}, "fr-fr": {"10": ""}}
 

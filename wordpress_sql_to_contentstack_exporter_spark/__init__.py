@@ -14,8 +14,9 @@ This package re-expresses those capabilities as idiomatic PySpark:
 - ``functions``  — scalar column expressions (slugify, host-strip, permalink
                    template compiler, ISO dates) — all JVM-side, no Python UDFs
                    in the hot path
-- ``plans``      — the WordPress export pipeline DAG (assets -> authors ->
-                   categories -> posts) and contenttype schema validation
+- ``plans``      — the WordPress export modules (assets, authors,
+                   categories, posts; run concurrently) and contenttype
+                   schema validation
 - ``sinks``      — keyed-JSON document sink, master/locale mappings, DLQ
 - ``streaming``  — incremental (Trigger.AvailableNow) export
 

@@ -5,7 +5,7 @@ SURVEY.md §2 row 43).
         [--module assets|authors|categories|posts] [--ids-file ids.txt]
 
 Module selection and the resume-by-ID file behave like the reference CLI;
-with no module, all four run in the reference's fixed order.
+with no module, all four run (concurrently, see ``plans.pipeline``).
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ def main(argv: list[str] | None = None) -> int:
         "--module",
         choices=["assets", "authors", "categories", "posts"],
         default=None,
-        help="run a single module (default: all, in reference order)",
+        help="run a single module (default: all four)",
     )
     exp.add_argument("--ids-file", default=None, help="comma/newline-separated IDs to (re-)export")
     qry = sub.add_parser(
@@ -117,7 +117,8 @@ def main(argv: list[str] | None = None) -> int:
     cat = build_catalog(spark, cfg)
     ids = read_id_list(spark, args.ids_file) if args.ids_file else None
     modules = [args.module] if args.module else None
-    results = run_export(
+    # each module logs its own line from the rows it collected
+    run_export(
         cat,
         cfg.data_dir,
         modules=modules,
@@ -127,8 +128,6 @@ def main(argv: list[str] | None = None) -> int:
         http_timeout_s=cfg.http_timeout_s,
         http_retries=cfg.http_retries,
     )
-    for mod, df in results.items():
-        logger.info("exported module %s", mod, extra={"metrics": {"rows": df.count()}})
     logger.info("Data exporting has been completed")  # app.js:40-43
     return 0
 

@@ -13,6 +13,7 @@ from __future__ import annotations
 import json
 import logging
 import sys
+import threading
 import time
 
 from pyspark.sql import Column, DataFrame
@@ -37,14 +38,18 @@ class JsonFormatter(logging.Formatter):
         return json.dumps(doc)
 
 
+_SETUP = threading.Lock()  # export modules log from concurrent threads
+
+
 def get_logger(name: str = "wordpress_sql_to_contentstack_exporter_spark", stream=None) -> logging.Logger:
     logger = logging.getLogger(name)
-    if not logger.handlers:
-        handler = logging.StreamHandler(stream or sys.stderr)
-        handler.setFormatter(JsonFormatter())
-        logger.addHandler(handler)
-        logger.setLevel(logging.INFO)
-        logger.propagate = False
+    with _SETUP:
+        if not logger.handlers:
+            handler = logging.StreamHandler(stream or sys.stderr)
+            handler.setFormatter(JsonFormatter())
+            logger.addHandler(handler)
+            logger.setLevel(logging.INFO)
+            logger.propagate = False
     return logger
 
 

@@ -147,7 +147,7 @@ def q_posts_export_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics, made oracle-able (round 15 — VERDICT r14 #5's "the
     keyed-JSON sharded mode is the path"): every entry renders to its
     final JSON line ON EXECUTORS (``to_json``, exactly what
-    sinks/keyed_json._write_keyed_json_sharded ships to shard files),
+    sinks/keyed_json.write_keyed_json_sharded ships to shard files),
     is assigned to one of 8 shards by the portable content-independent
     sha256-prefix hash (the ``shard_manifest`` device — deterministic
     cross-engine, unlike ``repartitionByRange``'s sampled bounds), and

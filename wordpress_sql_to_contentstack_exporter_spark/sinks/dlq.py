@@ -4,55 +4,41 @@ The reference accumulates ``{ID: error}`` for failed asset downloads into
 ``wp_failed.json`` (assets.js:24,88,100,114,214), clears an entry on later
 success, and re-drives failures via the ID-file path (README.md:57-62).
 
-Here the DLQ is a DataFrame of (id, error); the JSON file keeps the
-reference's ``{id: error}`` shape, and ``read_dlq_ids`` closes the loop by
-turning run N's failures into run N+1's ID input.
+Here the DLQ is the (id, error) pairs of the download results the assets
+module already collected; the JSON file keeps the reference's
+``{id: error}`` shape, and ``read_dlq_ids`` closes the loop by turning run
+N's failures into run N+1's ID input (a missing file re-drives nothing).
 """
 
 from __future__ import annotations
 
-import json
-import os
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .keyed_json import Written, read_document, write_document
 
 
 def write_dlq(
-    failures: DataFrame,
-    path: str,
+    failures: Iterable[tuple[str, str]],
     *,
-    id_col: str = "id",
-    error_col: str = "error",
-    succeeded: DataFrame | None = None,
-) -> None:
-    """Merge this run's failures into the DLQ file, mirroring the
-    reference's behavior exactly (assets.js:24,133-137): existing entries
-    are PRELOADED and kept, an id that succeeded this run is cleared, a
-    failure (re)writes its entry. Untouched failures from prior runs
-    survive — overwriting would silently orphan them."""
-    doc: dict = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            content = f.read().strip()
-            if content:
-                doc = json.loads(content)
-    if succeeded is not None:
-        for r in succeeded.select(F.col(id_col).cast("string").alias("k")).collect():
-            doc.pop(r["k"], None)
-    rows = failures.select(
-        F.col(id_col).cast("string").alias("k"), F.col(error_col).cast("string").alias("v")
-    ).collect()
-    for r in rows:
-        doc[r["k"]] = r["v"]
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
-        f.write(json.dumps(dict(sorted(doc.items())), indent=4))
+    path: str,
+    succeeded: Iterable[str] = (),
+) -> Written:
+    """Merge this run's (id, error) failures into the DLQ file, mirroring
+    the reference's behavior exactly (assets.js:24,133-137): existing
+    entries are PRELOADED and kept, an id that succeeded this run is
+    cleared, a failure (re)writes its entry. Untouched failures from prior
+    runs survive — overwriting would silently orphan them."""
+    doc = read_document(path)
+    for k in succeeded:
+        doc.pop(k, None)
+    doc.update(failures)
+    doc = dict(sorted(doc.items()))
+    return Written(write_document(path, doc), len(doc))
 
 
 def read_dlq_ids(spark: SparkSession, path: str, *, col_name: str = "id") -> DataFrame:
     """DLQ file -> one-column id DataFrame (the resume-by-ID input)."""
-    with open(path) as f:
-        doc = json.load(f)
-    ids = [(int(k),) for k in doc]
-    return spark.createDataFrame(ids or [], schema=f"{col_name} long")
+    ids = [(int(k),) for k in read_document(path)]
+    return spark.createDataFrame(ids, schema=f"{col_name} long")

@@ -4,7 +4,9 @@ Reproduces the reference's download semantics (assets.js:70-140):
 
 - filename = last ``/``-segment of the guid (assets.js:74-76)
 - URL percent-encoded like JS ``encodeURI`` (assets.js:77)
-- idempotent skip if ``<dest>/<ID>/<name>`` already exists (assets.js:78-80)
+- idempotent skip if ``<dest>/<ID>/<name>`` already exists (assets.js:78-80);
+  a body is written to ``<name>.part`` and renamed on success, so the
+  skip never trusts a download a crash cut short
 - 60 s timeout (assets.js:84), retry-once then dead-letter (assets.js:88-125)
 - successful download clears any previous DLQ entry (assets.js:133-137)
 
@@ -161,8 +163,9 @@ def download_assets(
                         try:
                             body = fetch_fn(url, timeout)
                             os.makedirs(target_dir, exist_ok=True)
-                            with open(target, "wb") as f:
+                            with open(target + ".part", "wb") as f:
                                 f.write(body)
+                            os.replace(target + ".part", target)
                             last_err = None
                             break
                         except Exception as e:  # noqa: BLE001 — any failure dead-letters

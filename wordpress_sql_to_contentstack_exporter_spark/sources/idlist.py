@@ -31,9 +31,3 @@ def filter_by_ids(df: DataFrame, ids: DataFrame, key: str) -> DataFrame:
     (SURVEY.md §2 rows 14, 23)."""
     id_col = ids.columns[0]
     return df.join(ids.withColumnRenamed(id_col, key), on=key, how="left_semi")
-
-
-def exclude_ids(df: DataFrame, ids: DataFrame, key: str) -> DataFrame:
-    """Anti-join: the idempotent 'skip already done' path (assets.js:78-80)."""
-    id_col = ids.columns[0]
-    return df.join(ids.withColumnRenamed(id_col, key), on=key, how="left_anti")
