@@ -751,6 +751,8 @@ def main() -> None:
         "queries_runs": timings_runs,
         "total_cold": round(sum(timings_cold.values()), 3),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "sf_dir": sf_dir,
+        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         # r14 REBASELINE (VERDICT r13 #2, option c — recorded, not
         # silent): the exact-recall blocked simhash headline is accepted
         # at its measured wall ± session spread; the ≤3 s ABSOLUTE bar
@@ -851,45 +853,57 @@ def main() -> None:
     with open(detail_path, "w") as f:
         json.dump(result, f, indent=1)
 
-    dedup_ops = (
-        "exact_dedup", "minhash_neardup", "simhash_neardup",
-        "paragraph_dedup", "setsim_join", "boilerplate_removal",
-        "repeated_spans",
+    print(compact_line(result))
+
+
+_DEDUP_OPS = (
+    "exact_dedup", "minhash_neardup", "simhash_neardup",
+    "paragraph_dedup", "setsim_join", "boilerplate_removal",
+    "repeated_spans",
+)
+
+
+def _tier_total(tier: str, d: dict) -> float:
+    if tier == "posts_tier":
+        return round(d["cold_wall"] + d["wall"], 3)
+    if tier == "dedup_tier":
+        return round(sum(d[k] for k in _DEDUP_OPS if k in d), 3)
+    # events/rolling tiers: nested {"wall": ...} entries
+    return round(
+        sum(
+            v["wall"]
+            for v in d.values()
+            if isinstance(v, dict)
+            and isinstance(v.get("wall"), (int, float))
+        ),
+        3,
     )
 
-    def tier_total(tier: str, d: dict) -> float:
-        if tier == "posts_tier":
-            return round(d["cold_wall"] + d["wall"], 3)
-        if tier == "dedup_tier":
-            return round(sum(d[k] for k in dedup_ops if k in d), 3)
-        # events/rolling tiers: nested {"wall": ...} entries
-        return round(
-            sum(
-                v["wall"]
-                for v in d.values()
-                if isinstance(v, dict)
-                and isinstance(v.get("wall"), (int, float))
-            ),
-            3,
-        )
 
+def compact_line(result: dict) -> str:
+    """The last stdout line: totals, per-query medians, per-tier totals,
+    load and calibration stamps, and the cores and table dir the run
+    used. Falls back to ``fallback_line`` when it would reach 1,500
+    characters."""
     compact = {
         "metric": result["metric"],
         "value": result["value"],
         "unit": result["unit"],
         "sf": result["sf"],
+        "sf_dir": result["sf_dir"],
+        "cpus": result["cpus"],
         "queries": result["queries"],
         "total_cold": result["total_cold"],
         "methodology": result["methodology"],
-        "load1_start": load_start,
-        "cpu_calib": cpu_calib,
+        "load1_start": result["load1_start"],
+        "cpu_calib": result["cpu_calib"],
         "load1_end": result["load1_end"],
         "polluted": result["polluted"],
         "detail_file": "BENCH_detail.json",
     }
     for tier in ("posts_tier", "dedup_tier", "events_tier", "rolling_tier"):
         if tier in result:
-            compact[f"{tier}_total"] = tier_total(tier, result[tier])
+            compact[f"{tier}_total"] = _tier_total(tier, result[tier])
     if "posts_tier" in result:
         compact["posts_entries_per_s"] = result["posts_tier"]["entries_per_s"]
     if "posts_tier_slope" in result:
@@ -908,12 +922,12 @@ def main() -> None:
         # (ADVICE r7). Fall back to a minimal parseable headline; the
         # full record is in the detail file either way.
         line = fallback_line(result)
-    print(line)
+    return line
 
 
 def fallback_line(result: dict) -> str:
     """Minimal parseable headline for when the compact line outgrows the
-    tail buffer. BOUNDED by construction: eight fixed scalar fields, no
+    tail buffer. BOUNDED by construction: ten fixed scalar fields, no
     per-query dict — the one component that grows as gates accumulate
     (ADVICE r8). Per-query numbers live in the detail file.
     test_bench_contract pins the bound against regression."""
@@ -923,6 +937,8 @@ def fallback_line(result: dict) -> str:
             "value": result["value"],
             "unit": result["unit"],
             "sf": result["sf"],
+            "sf_dir": result["sf_dir"],
+            "cpus": result["cpus"],
             "total_cold": result["total_cold"],
             "polluted": result["polluted"],
             "detail_file": "BENCH_detail.json",

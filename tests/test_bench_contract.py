@@ -24,6 +24,12 @@ def _result(n_queries: int) -> dict:
         "queries": {f"q{i}": 0.123 for i in range(n_queries)},
         "total_cold": 45.678,
         "polluted": False,
+        "sf_dir": "/data/sf0.1",
+        "cpus": 4,
+        "methodology": "median-of-3 warm",
+        "load1_start": 0.5,
+        "load1_end": 1.5,
+        "cpu_calib": {"int_loop_s": 1.0},
     }
 
 
@@ -39,3 +45,14 @@ def test_fallback_line_is_bounded_and_parseable():
     # the driver's parse keys survive
     for key in ("metric", "value", "unit", "sf"):
         assert key in parsed
+
+
+def test_compact_and_fallback_lines_name_cpus_and_sf_dir():
+    """Both stdout lines say which cores and table dir the run used, so
+    two artifacts are never compared across configurations unawares."""
+    compact = json.loads(bench.compact_line(_result(1)))
+    assert "truncated" not in compact and "queries" in compact
+    fallback = json.loads(bench.compact_line(_result(10_000)))
+    assert fallback["truncated"] is True
+    for line in (compact, fallback, json.loads(bench.fallback_line(_result(1)))):
+        assert line["cpus"] == 4 and line["sf_dir"] == "/data/sf0.1"

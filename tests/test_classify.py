@@ -1,6 +1,6 @@
 """Distributed hashed-BoW logistic regression (operators/classify):
-learnability on a separable fixture, the bit-stable-under-partitioning
-claim (the module's central determinism contract), and prediction."""
+learnability on a separable fixture and the bit-stable-under-partitioning
+claim (the module's central determinism contract)."""
 
 from __future__ import annotations
 
@@ -31,16 +31,10 @@ def test_featurize_l1_normalized_and_sorted(spark):
 
 
 def test_learns_separable_labels(labeled):
-    w, hist = clf.train_logreg(labeled, n_features=64, iters=15, lr=2.0)
+    _, hist = clf.train_logreg(labeled, n_features=64, iters=15, lr=2.0)
     rows = sorted(hist.collect(), key=lambda r: r["iter"])
     assert rows[-1]["correct"] == rows[-1]["n"] == 6  # fits the fixture
     assert rows[-1]["loss_q"] < rows[0]["loss_q"]  # loss decreased
-    pred = {
-        r["doc_id"]: r["prediction"]
-        for r in clf.predict_logreg(labeled, w, n_features=64).collect()
-    }
-    assert all(pred[i] == 1 for i in range(3))
-    assert all(pred[i + 100] == 0 for i in range(3))
 
 
 def test_training_is_bit_stable_under_repartitioning(labeled):
@@ -69,38 +63,3 @@ def test_parameter_guards(labeled):
         clf.train_logreg(labeled, iters=0)
     with pytest.raises(ValueError, match="n_features"):
         clf.featurize_hashed_bow(labeled, n_features=1)
-    with pytest.raises(ValueError, match="weights length"):
-        clf.predict_logreg(labeled, np.zeros(5), n_features=64)
-
-
-def test_predict_scores_a_stream(spark, tmp_path, labeled):
-    """Train on a batch, score a STREAM with the same weights — the
-    deployment shape of the quality filter (the model is a closure
-    constant, so predict_logreg is a stateless map and works unchanged
-    under Structured Streaming)."""
-    w, _ = clf.train_logreg(labeled, n_features=64, iters=15, lr=2.0)
-    src = tmp_path / "in"
-    src.mkdir()
-    labeled.select("doc_id", "text").write.parquet(str(src / "b0.parquet"))
-    stream = spark.readStream.schema("doc_id long, text string").parquet(
-        str(src / "*")
-    )
-    scored = clf.predict_logreg(stream, w, n_features=64)
-    q = (
-        scored.writeStream.format("memory")
-        .queryName("qc_stream_scores")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["doc_id"]: r["prediction"]
-        for r in spark.sql("select * from qc_stream_scores").collect()
-    }
-    batch = {
-        r["doc_id"]: r["prediction"]
-        for r in clf.predict_logreg(
-            labeled.select("doc_id", "text"), w, n_features=64
-        ).collect()
-    }
-    assert got == batch and len(got) == 6

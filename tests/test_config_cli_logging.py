@@ -6,13 +6,10 @@ import io
 import json
 import logging
 
-from pyspark.sql import functions as F
+import pytest
 
 from wordpress_sql_to_contentstack_exporter_spark.config import ExportConfig, build_catalog
-from wordpress_sql_to_contentstack_exporter_spark.logging_utils import (
-    JsonFormatter,
-    observe_stage,
-)
+from wordpress_sql_to_contentstack_exporter_spark.logging_utils import JsonFormatter
 
 
 def test_config_roundtrip(tmp_path):
@@ -83,13 +80,6 @@ def test_json_log_format():
     assert doc["message"] == "exported post '16'"
     assert doc["metrics"] == {"rows": 3}
     assert doc["timestamp"].endswith("Z")
-
-
-def test_observe_stage_metrics(spark):
-    df = spark.createDataFrame([(1,), (2,), (3,)], "x long")
-    observed, obs = observe_stage(df, "mystage", F.sum("x").alias("sum_x"))
-    observed.write.format("noop").mode("overwrite").save()
-    assert obs.get == {"rows": 3, "sum_x": 6}
 
 
 def test_cli_locale_threads_into_paths_and_master(spark, tmp_path):
@@ -189,3 +179,14 @@ def test_cli_sql_subcommand(tmp_path, capsys):
     assert main(["sql", "--file", str(qfile),
                  "--sf-dir", "/root/testdata/sf0.001"]) == 0
     assert "n" in capsys.readouterr().out
+
+
+def test_cli_sql_names_a_table_that_does_not_load(tmp_path):
+    """A table file that is there but does not load fails the command
+    with its path, instead of surfacing later as a missing view."""
+    from wordpress_sql_to_contentstack_exporter_spark.__main__ import main
+
+    (tmp_path / "orders.parquet").write_bytes(b"this is not parquet")
+    with pytest.raises(Exception, match="orders.parquet"):
+        main(["sql", "--query", "SELECT count(*) AS n FROM orders",
+              "--sf-dir", str(tmp_path)])

@@ -43,7 +43,7 @@ def test_suite_handworked(spark):
 def test_all_green_passes(spark):
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
     rows = ex.run_expectations(
-        df, [ex.expect_not_null("id"), ex.expect_unique("id"), ex.expect_regex("s", "^[ab]$")]
+        df, [ex.expect_not_null("id"), ex.expect_unique("id")]
     ).collect()
     assert all(r["passed"] == 1 and r["n_violations"] == 0 for r in rows)
 

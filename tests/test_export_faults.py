@@ -1,7 +1,8 @@
 """Crash safety of the export plane: documents are replaced whole, a
 download becomes visible only once complete, a prior document that does
-not parse fails with its path named, and a rerun after each fault
-converges to the files of a clean run."""
+not parse fails with its path named when a run must merge into it (a
+full run rewrites it), and a rerun after each fault converges to the
+files of a clean run."""
 
 from __future__ import annotations
 
@@ -67,3 +68,34 @@ def test_truncated_prior_document_names_its_path(spark, wp_catalog, tmp_path, cl
     assert tree(data) == clean
     with open(doc) as f:
         assert set(json.load(f)) == {"10", "11"}
+
+
+def _cut_off_dlq(wp_catalog, data: str) -> str:
+    pl.run_export(wp_catalog, data, fetch=fake_fetch)
+    dlq = f"{data}/master/wp_failed.json"
+    with open(dlq, "w") as f:
+        f.write('{"21": "status co')
+    return dlq
+
+
+def test_truncated_dlq_does_not_block_a_full_run(wp_catalog, tmp_path, clean):
+    """A full run attempts every attachment, so it rewrites the DLQ from
+    its own failures instead of preloading the cut-off file."""
+    data = str(tmp_path / "data")
+    dlq = _cut_off_dlq(wp_catalog, data)
+    out = pl.run_export(wp_catalog, data, modules=["assets"], fetch=fake_fetch)
+    failed = {
+        str(r["id"]): r["error"] for r in out["assets"].collect() if r["status"] == "failed"
+    }
+    assert failed and read_document(dlq) == failed
+    assert tree(data) == clean
+
+
+def test_truncated_dlq_names_its_path_on_an_ids_run(spark, wp_catalog, tmp_path):
+    """An ids run keeps the other pending re-drives, so it must read the
+    prior DLQ and cannot go on when that file does not parse."""
+    data = str(tmp_path / "data")
+    dlq = _cut_off_dlq(wp_catalog, data)
+    ids = spark.createDataFrame([(21,)], "id long")
+    with pytest.raises(CorruptDocumentError, match=dlq):
+        pl.run_export(wp_catalog, data, modules=["assets"], ids=ids, fetch=fake_fetch)

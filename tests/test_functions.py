@@ -16,7 +16,6 @@ from wordpress_sql_to_contentstack_exporter_spark.functions import (
     host_strip,
     iso8601,
     slugify,
-    url_basename,
 )
 
 
@@ -67,10 +66,6 @@ def test_slugify(spark, text, prefix, expected):
 
 def test_decode_entities_only_amp(spark):
     assert one(spark, decode_entities(F.col("t")), t="A &amp; B &lt;x&gt;") == "A & B &lt;x&gt;"
-
-
-def test_url_basename(spark):
-    assert one(spark, url_basename(F.col("t")), t="http://x/y/img one.png") == "img one.png"
 
 
 def test_iso8601_matches_js_toISOString(spark):

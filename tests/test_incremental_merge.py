@@ -1,5 +1,6 @@
-"""Incremental keyed-JSON export: streaming micro-batches merge into the
-document (reference read-modify-write semantics) + contenttype JSON parsing."""
+"""Incremental keyed-JSON export: a later batch merges into the document
+(reference read-modify-write semantics), and the sharded posts gate
+accounts for exactly the flagship entries."""
 
 from __future__ import annotations
 
@@ -7,13 +8,8 @@ import json
 
 from pyspark.sql import functions as F
 
-from wordpress_sql_to_contentstack_exporter_spark.plans.validate import from_contenttype_json
-from wordpress_sql_to_contentstack_exporter_spark.sinks import merge_keyed_json, write_keyed_json
-from wordpress_sql_to_contentstack_exporter_spark.sinks.keyed_json import (
-    render_entries,
-    write_keyed_json_sharded,
-)
-from wordpress_sql_to_contentstack_exporter_spark.streaming import incremental_export
+from wordpress_sql_to_contentstack_exporter_spark.sinks import merge_keyed_json
+from wordpress_sql_to_contentstack_exporter_spark.sinks.keyed_json import render_entries
 
 
 def test_merge_keyed_json_overwrites_and_keeps(spark, tmp_path):
@@ -26,96 +22,10 @@ def test_merge_keyed_json_overwrites_and_keeps(spark, tmp_path):
     assert doc == {"1": {"v": "a"}, "2": {"v": "B"}, "3": {"v": "c"}}
 
 
-def test_sharded_keyed_json_equivalent_to_document_mode(spark, tmp_path):
-    """VERDICT r4 ask #8: the fact-scale escape hatch. The sharded writer
-    (no driver collect — executors render + range-sort entries, the
-    packager streams shard files) must produce a document that parses
-    identically to the collected document, including JSON-escaping
-    hazards in keys and values, null fields, and unicode."""
-    rows = [(i, f'v "quoted" é{i}' if i % 3 else None, i * 2) for i in range(200)]
-    df = spark.createDataFrame(rows, "id long, v string, n long")
-    entry = F.struct(F.col("v"), F.col("n"))
-    doc_path, shard_path = str(tmp_path / "doc.json"), str(tmp_path / "sharded.json")
-    write_keyed_json(render_entries(df, F.col("id"), entry), path=doc_path)
-    write_keyed_json_sharded(df, F.col("id"), entry, shard_path)
-    doc = json.loads(open(doc_path).read())
-    sharded = json.loads(open(shard_path).read())
-    assert sharded == doc and len(sharded) == 200
-    # entries in the sharded document are in key order (the range sort)
-    keys = list(sharded.keys())
-    assert keys == sorted(keys)
-    # no shard directory left behind
-    assert not (tmp_path / "sharded.json.shards").exists()
-
-
-def test_sharded_keyed_json_empty(spark, tmp_path):
-    df = spark.createDataFrame([], "id long, v string")
-    path = str(tmp_path / "empty.json")
-    written = write_keyed_json_sharded(df, F.col("id"), F.struct(F.col("v")), path)
-    assert json.loads(open(path).read()) == {}
-    assert written.entries == 0 and written.bytes == len("{}")
-
-
-def test_streaming_incremental_posts_merge(spark, tmp_path):
-    """New post files arrive -> AvailableNow run merges only the new
-    entries into the keyed document."""
-    inp = tmp_path / "posts_in"
-    ckpt = str(tmp_path / "ckpt")
-    out_path = str(tmp_path / "en-us.json")
-
-    schema = "ID long, post_title string"
-
-    def batch_fn(df, batch_id):
-        entry = F.struct(F.col("post_title").alias("title"), F.col("ID").alias("uid"))
-        merge_keyed_json(render_entries(df, F.col("ID"), entry), path=out_path)
-
-    spark.createDataFrame([(1, "first")], schema).write.parquet(str(inp / "f1"))
-    incremental_export(spark, f"{inp}/*", spark.createDataFrame([], schema).schema,
-                       batch_fn, ckpt)
-    assert json.loads(open(out_path).read()) == {"1": {"title": "first", "uid": 1}}
-
-    spark.createDataFrame([(2, "second")], schema).write.parquet(str(inp / "f2"))
-    incremental_export(spark, f"{inp}/*", spark.createDataFrame([], schema).schema,
-                       batch_fn, ckpt)
-    doc = json.loads(open(out_path).read())
-    assert set(doc) == {"1", "2"}  # run 2 merged, not rewrote
-
-
-def test_from_contenttype_json():
-    doc = {
-        "title": "Posts",
-        "uid": "posts",
-        "schema": [
-            {"uid": "title", "data_type": "text", "mandatory": True, "unique": True},
-            {"uid": "url", "data_type": "text", "mandatory": True},
-            {"uid": "author", "data_type": "reference", "multiple": True},
-            {
-                "uid": "seo",
-                "data_type": "group",
-                "schema": [
-                    {"uid": "meta_title", "data_type": "text", "mandatory": False}
-                ],
-            },
-        ],
-    }
-    ct = from_contenttype_json(doc)
-    by_name = {f.name: f for f in ct.fields}
-    assert by_name["title"].mandatory and by_name["title"].unique
-    assert by_name["author"].multiple
-    assert "seo.meta_title" in by_name  # group flattened to dotted names
-
-
-def test_posts_export_sharded_gate_consistent_with_flagship_and_writer(
-    spark, tmp_path
-):
+def test_posts_export_sharded_gate_consistent_with_flagship_and_writer(spark):
     """The r15 gate's per-shard manifest must account for EXACTLY the
     flagship entries (sum of n_entries == flagship row count, ids
-    cover the same range), and the bytes it checksums are the same
-    rendered entries the real sharded writer emits: writing the
-    flagship through write_keyed_json_sharded produces a
-    document whose entry count equals the gate's total."""
-    import json
-
+    cover the same range)."""
     from wordpress_sql_to_contentstack_exporter_spark.plans.registry import SPARK_QUERIES
 
     sf = "/root/testdata/sf0.001"
@@ -135,13 +45,3 @@ def test_posts_export_sharded_gate_consistent_with_flagship_and_writer(
     assert min(r["min_id"] for r in shards) == renderable.agg(
         F.min("order_id")
     ).first()[0]
-    # the real no-collect writer round-trips the same entry set
-    path = str(tmp_path / "posts.json")
-    write_keyed_json_sharded(
-        flag,
-        F.col("order_id"),
-        F.struct("order_id", "author", "date_iso", "url", "flags"),
-        path,
-    )
-    doc = json.loads(open(path).read())
-    assert len(doc) == n_flag

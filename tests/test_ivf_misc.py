@@ -197,26 +197,10 @@ def test_ann_recall_sweep_shape_and_floors(spark):
 
 
 class TestAnnIndexPersistence:
-    """save_ann_index / load_ann_index: bit-exact round-trip and the
-    prefit-centers path producing identical retrieval."""
+    """The prefit-centers path: a fit reused as ``centers=`` produces
+    identical retrieval, and a fit of the wrong shape is rejected."""
 
-    def test_round_trip_bit_exact(self, spark, tmp_path):
-        import numpy as np
-
-        from wordpress_sql_to_contentstack_exporter_spark.operators import similarity as sim
-
-        rng = np.random.default_rng(3)
-        centers = rng.random((4, 8))
-        books = rng.random((2, 16, 4))
-        path = str(tmp_path / "idx")
-        sim.save_ann_index(spark, path, centers=centers, codebooks=books)
-        loaded = sim.load_ann_index(spark, path)
-        assert np.array_equal(loaded["centers"], centers)
-        assert np.array_equal(loaded["codebooks"], books)
-
-    def test_prefit_centers_reproduce_retrieval(self, spark, tmp_path):
-        import numpy as np
-
+    def test_prefit_centers_reproduce_retrieval(self, spark):
         from wordpress_sql_to_contentstack_exporter_spark.operators import similarity as sim
 
         vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -226,25 +210,20 @@ class TestAnnIndexPersistence:
         centers = sim._fit_coarse_centers(
             vecs, "embedding", 4, seed=42, max_iter=10, fit_sample=512
         )
-        path = str(tmp_path / "idx")
-        sim.save_ann_index(spark, path, centers=centers)
-        loaded = sim.load_ann_index(spark, path)["centers"]
         a = sorted(map(tuple, sim.ivf_topk(
             queries, vecs, k=3, n_cells=4, n_probe=2,
         ).collect()))
         b = sorted(map(tuple, sim.ivf_topk(
-            queries, vecs, k=3, n_cells=4, n_probe=2, centers=loaded,
+            queries, vecs, k=3, n_cells=4, n_probe=2, centers=centers,
         ).collect()))
         assert a == b
 
-    def test_guards(self, spark, tmp_path):
+    def test_guards(self, spark):
         import numpy as np
         import pytest
 
         from wordpress_sql_to_contentstack_exporter_spark.operators import similarity as sim
 
-        with pytest.raises(ValueError, match="nothing to save"):
-            sim.save_ann_index(spark, str(tmp_path / "x"))
         vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         with pytest.raises(ValueError, match="prefit centers"):
             sim.ivf_topk(
@@ -254,8 +233,8 @@ class TestAnnIndexPersistence:
 
 class TestIvfpqBuildProbeSplit:
     """Round 15: ivfpq_topk == ivfpq_index ∘ ivfpq_probe, and a
-    persisted index round-trips into the probe bit-exactly — the
-    build-once/probe-many production shape."""
+    persisted encoded table round-trips into the probe bit-exactly —
+    the build-once/probe-many production shape."""
 
     def test_split_identical_to_composed(self, spark):
         e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -276,8 +255,6 @@ class TestIvfpqBuildProbeSplit:
         assert composed == split and len(split) > 0
 
     def test_persisted_index_reproduces_probe(self, spark, tmp_path):
-        import numpy as np
-
         e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         q = e.filter(F.col("vec_id") % 40 == 0)
         idx, centers, books = sim.ivfpq_index(e, n_cells=8, m=16)
@@ -287,19 +264,13 @@ class TestIvfpqBuildProbeSplit:
                 q, idx, centers, books, candidates=e, k=5, n_probe=4, rerank=16
             ).collect()
         )
-        # persist fit + encoded table; reload into a fresh probe
-        sim.save_ann_index(
-            spark, str(tmp_path / "fit"), centers=centers, codebooks=books
-        )
+        # persist the encoded table; reload it into a fresh probe
         idx.write.parquet(str(tmp_path / "enc"))
-        loaded = sim.load_ann_index(spark, str(tmp_path / "fit"))
-        assert np.array_equal(loaded["centers"], centers)
-        assert np.array_equal(loaded["codebooks"], books)
         idx2 = spark.read.parquet(str(tmp_path / "enc"))
         again = sorted(
             tuple(r)
             for r in sim.ivfpq_probe(
-                q, idx2, loaded["centers"], loaded["codebooks"],
+                q, idx2, centers, books,
                 candidates=e, k=5, n_probe=4, rerank=16,
             ).collect()
         )

@@ -268,45 +268,3 @@ def test_derby_dialect_null_string_roundtrip_and_pushdown(spark, tmp_path):
     flt = back.filter(F.col("name") == "alice")
     assert "EqualTo(name,alice)" in plan_of(flt)
     assert [r["id"] for r in flt.collect()] == [1]
-
-
-def test_incremental_watermark_jdbc_roundtrip(spark, tmp_path):
-    """High-watermark incremental pull against Derby: first run exports
-    everything and advances the watermark; an appended batch is the only
-    content of the second run; the PK predicate pushes into the remote
-    scan; an empty increment leaves the watermark untouched."""
-    from wordpress_sql_to_contentstack_exporter_spark.sources.incremental import (
-        advance_watermark,
-        incremental_scan,
-        read_watermark,
-    )
-
-    url = f"jdbc:derby:{tmp_path}/incdb;create=true"
-    props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
-    wm = str(tmp_path / "posts.watermark.json")
-
-    def write(df, mode="append"):
-        df.write.format("jdbc").option("url", url).option("dbtable", "posts").option(
-            "driver", props["driver"]
-        ).mode(mode).save()
-
-    write(spark.range(1, 101).select(F.col("id").alias("ID")), mode="overwrite")
-    table = jdbc_table(url, "posts", properties=props)
-
-    inc1 = incremental_scan(table(spark), "ID", read_watermark(wm))
-    assert inc1.count() == 100
-    assert advance_watermark(wm, inc1, "ID") == 100
-    assert read_watermark(wm) == 100
-
-    write(spark.range(101, 131).select(F.col("id").alias("ID")))
-    inc2 = incremental_scan(table(spark), "ID", read_watermark(wm))
-    assert sorted(r["ID"] for r in inc2.collect()) == list(range(101, 131))
-    # the watermark predicate reaches the remote scan
-    assert "GreaterThan(ID,100)" in plan_of(inc2)
-    assert advance_watermark(wm, inc2, "ID") == 130
-
-    # nothing new: empty increment, watermark unchanged
-    inc3 = incremental_scan(table(spark), "ID", read_watermark(wm))
-    assert inc3.count() == 0
-    assert advance_watermark(wm, inc3, "ID") is None
-    assert read_watermark(wm) == 130

@@ -1,87 +1,13 @@
-"""Data-layout writer: partition pruning, footer-stats clustering, and
-Z-order multi-dimensional clustering — verified against the actual
-parquet files and scan plans, not just the API."""
+"""Z-order sort keys and the layout analysis operators: the 2-column
+Morton interleave, the n-dimensional key, deterministic file assignment
+and the min/max skip audit."""
 
 from __future__ import annotations
 
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from wordpress_sql_to_contentstack_exporter_spark.sinks import write_layout, zorder_key
-
-
-def _file_ranges(root, column):
-    """[(min, max)] of ``column`` across every parquet data file under root."""
-    import pathlib
-
-    out = []
-    for f in pathlib.Path(root).rglob("*.parquet"):
-        md = pq.ParquetFile(str(f)).metadata
-        idx = md.schema.names.index(column)
-        lo = min(md.row_group(g).column(idx).statistics.min for g in range(md.num_row_groups))
-        hi = max(md.row_group(g).column(idx).statistics.max for g in range(md.num_row_groups))
-        out.append((lo, hi))
-    return out
-
-
-def test_partitioned_sorted_write_prunes(spark, tmp_path):
-    path = str(tmp_path / "docs")
-    docs = spark.range(10_000).select(
-        F.col("id").alias("doc_id"),
-        (F.col("id") % 4).cast("string").alias("shard"),
-        F.col("id").alias("val"),
-    )
-    write_layout(
-        docs, path, partition_by=["shard"], sort_by=["val"], target_file_rows=1000
-    )
-
-    back = spark.read.parquet(path)
-    assert back.count() == 10_000
-
-    # 1. hive partition pruning reaches the scan
-    plan = back.filter(F.col("shard") == "2")._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "shard" in plan
-
-    # 2. footer min/max are tight per file: each file covers ~its rows'
-    # range, not the global range (sorted within partitions + capped files)
-    ranges = _file_ranges(path, "val")
-    assert len(ranges) >= 8  # 4 partitions x >=2 files (1000-row cap on 2500)
-    global_span = 10_000
-    for lo, hi in ranges:
-        assert hi - lo <= global_span // 2  # each file a fraction of global
-
-    # a point filter must skip most files: at most ONE file per hive
-    # partition can cover a given value (sorted non-overlapping files
-    # within each partition; ranges across partitions still overlap)
-    covering = [r for r in ranges if r[0] <= 42 <= r[1]]
-    assert len(covering) <= 4
-
-
-def test_zorder_bounds_both_dimensions(spark, tmp_path):
-    n_side = 64  # 64x64 grid
-    grid = spark.range(n_side * n_side).select(
-        (F.col("id") % n_side).alias("x"),
-        (F.col("id") / n_side).cast("long").alias("y"),
-    )
-    z_path = str(tmp_path / "zorder")
-    lin_path = str(tmp_path / "linear")
-    write_layout(grid, z_path, zorder_by=("x", "y"), n_files_per_partition=1,
-                 target_file_rows=256)
-    write_layout(grid, lin_path, sort_by=["x"], n_files_per_partition=1,
-                 target_file_rows=256)
-
-    assert spark.read.parquet(z_path).columns == ["x", "y"]  # synthetic key dropped
-
-    # linear sort by x: y ranges are full-width in every file
-    lin_y = _file_ranges(lin_path, "y")
-    assert all(hi - lo >= n_side - 1 for lo, hi in lin_y)
-
-    # z-order: BOTH x and y per-file spans are bounded fractions
-    z_x, z_y = _file_ranges(z_path, "x"), _file_ranges(z_path, "y")
-    assert len(z_x) >= 16
-    assert max(hi - lo for lo, hi in z_x) <= n_side // 2
-    assert max(hi - lo for lo, hi in z_y) <= n_side // 2
+from wordpress_sql_to_contentstack_exporter_spark.sinks import zorder_key
 
 
 def test_zorder_key_is_morton_interleave(spark):
@@ -91,12 +17,6 @@ def test_zorder_key_is_morton_interleave(spark):
     # a=101, b=011 -> interleave (a even positions, b odd):
     # bit0=a0=1, bit1=b0=1, bit2=a1=0, bit3=b1=1, bit4=a2=1, bit5=b2=0
     assert rows[0]["z"] == 0b011011
-
-
-def test_layout_rejects_conflicting_clustering(spark, tmp_path):
-    df = spark.range(10).select(F.col("id").alias("a"), F.col("id").alias("b"))
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        write_layout(df, str(tmp_path / "x"), sort_by=["a"], zorder_by=("a", "b"))
 
 
 # ---------------------------------------------------------------------------

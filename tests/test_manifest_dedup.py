@@ -17,57 +17,6 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_first_run_bootstraps_from_missing_path(spark, tmp_path):
-    path = str(tmp_path / "manifest")
-    docs = _docs(spark, [(1, "alpha"), (2, "beta"), (3, "alpha")])
-    out = mf.incremental_dedup_run(spark, docs, path, run_id="r1")
-    rows = {r["doc_id"] for r in out.collect()}
-    # within-batch dedup keeps min-id for the duplicated content
-    assert rows == {1, 2}
-    # the manifest now holds exactly the survivors' hashes
-    m = mf.read_manifest(spark, path)
-    assert m.count() == 2
-    assert {r["first_seen_run"] for r in m.collect()} == {"r1"}
-
-
-def test_replayed_batch_appends_nothing(spark, tmp_path):
-    path = str(tmp_path / "manifest")
-    docs = _docs(spark, [(1, "alpha"), (2, "beta")])
-    first = mf.incremental_dedup_run(spark, docs, path, run_id="r1")
-    assert first.count() == 2
-    replay = mf.incremental_dedup_run(spark, docs, path, run_id="r2")
-    assert replay.count() == 0
-    assert mf.read_manifest(spark, path).count() == 2  # no r2 rows
-
-
-def test_cross_run_accumulation_and_new_content(spark, tmp_path):
-    path = str(tmp_path / "manifest")
-    mf.incremental_dedup_run(
-        spark, _docs(spark, [(1, "alpha"), (2, "beta")]), path, run_id="r1"
-    )
-    # day 2: one repeat (different id, same content), one new
-    out = mf.incremental_dedup_run(
-        spark, _docs(spark, [(10, "alpha"), (11, "gamma")]), path, run_id="r2"
-    )
-    assert {r["doc_id"] for r in out.collect()} == {11}
-    m = mf.read_manifest(spark, path)
-    assert m.count() == 3
-    runs = {r["first_seen_run"] for r in m.collect()}
-    assert runs == {"r1", "r2"}
-
-
-def test_survivors_recompute_against_pre_append_snapshot(spark, tmp_path):
-    """The hazard the pinned read exists for: the returned lazy frame is
-    acted on AFTER the append; an unpinned directory read would see the
-    batch's own hashes and recompute to empty."""
-    path = str(tmp_path / "manifest")
-    docs = _docs(spark, [(1, "alpha"), (2, "beta")])
-    out = mf.incremental_dedup_run(spark, docs, path, run_id="r1")
-    # two separate actions post-append: both must see the survivors
-    assert out.count() == 2
-    assert {r["doc_id"] for r in out.collect()} == {1, 2}
-
-
 def test_hash_matches_exact_dedup_rule(spark):
     """One content-identity definition across the dedup family:
     normalization (case, whitespace) folds into the same hash that
@@ -133,7 +82,7 @@ def test_build_manifest_default_run_id_is_writable(spark, tmp_path):
     m = mf.build_manifest(_docs(spark, [(1, "alpha")]))
     assert dict(m.dtypes)["first_seen_run"] == "string"
     m.write.parquet(path)  # must not raise
-    assert mf.read_manifest(spark, path).count() == 1
+    assert spark.read.parquet(path).count() == 1
 
 
 def test_read_manifest_raises_on_corrupt_data(spark, tmp_path):
@@ -144,81 +93,9 @@ def test_read_manifest_raises_on_corrupt_data(spark, tmp_path):
     bad = tmp_path / "corrupt"
     bad.mkdir()
     (bad / "part-00000.parquet").write_bytes(b"this is not parquet")
-    df = mf.read_manifest(spark, str(bad))
+    df = mf.read_neardup_manifest_portable(spark, str(bad))
     with _pytest.raises(Exception):
         df.count()
-
-
-def test_bucketed_manifest_lifecycle(spark, tmp_path):
-    """The bucketed saved-table variant runs the same daily loop as the
-    plain-parquet one: bootstrap from a missing table, dedup across
-    runs, accumulate, and return pre-append survivors from post-append
-    actions (the eager-checkpoint pinning)."""
-    table = "m_lifecycle_b"
-    path = str(tmp_path / "m_lifecycle_b")
-    try:
-        out1 = mf.incremental_dedup_run_bucketed(
-            spark,
-            _docs(spark, [(1, "alpha"), (2, "beta"), (3, "alpha")]),
-            table=table,
-            path=path,
-            buckets=4,
-            run_id="r1",
-        )
-        # post-append actions, twice, must see the pre-append survivors
-        assert out1.count() == 2
-        assert {r["doc_id"] for r in out1.collect()} == {1, 2}
-        # day 2: one repeat (new id, same content), one new
-        out2 = mf.incremental_dedup_run_bucketed(
-            spark,
-            _docs(spark, [(10, "alpha"), (11, "gamma")]),
-            table=table,
-            path=path,
-            buckets=4,
-            run_id="r2",
-        )
-        assert {r["doc_id"] for r in out2.collect()} == {11}
-        m = mf.read_manifest_bucketed(spark, table)
-        assert m.count() == 3
-        assert {r["first_seen_run"] for r in m.collect()} == {"r1", "r2"}
-        # replay of an applied batch appends nothing
-        replay = mf.incremental_dedup_run_bucketed(
-            spark,
-            _docs(spark, [(10, "alpha"), (11, "gamma")]),
-            table=table,
-            path=path,
-            buckets=4,
-            run_id="r3",
-        )
-        assert replay.count() == 0
-        assert mf.read_manifest_bucketed(spark, table).count() == 3
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_bucketed_manifest_append_rejects_bucket_drift(spark, tmp_path):
-    """The bucket count is the table's permanent contract: an append
-    with a different count must fail loudly, never silently corrupt the
-    layout."""
-    import pytest as _pytest
-
-    table = "m_drift_b"
-    path = str(tmp_path / "m_drift_b")
-    try:
-        mf.build_manifest_bucketed(
-            _docs(spark, [(1, "alpha")]), table=table, path=path, buckets=4
-        )
-        with _pytest.raises(Exception):
-            mf.append_survivors_bucketed(
-                mf.build_manifest(_docs(spark, [(2, "beta")])).select(
-                    "content_hash"
-                ),
-                table,
-                run_id="r2",
-                buckets=8,
-            )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_bucketed_manifest_anti_join_has_no_manifest_side_exchange(
@@ -289,41 +166,6 @@ def test_bucketed_manifest_anti_join_has_no_manifest_side_exchange(
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_incremental_neardup_run_lifecycle(spark, tmp_path):
-    """Daily near-dup loop end-to-end: bootstrap run, then a second run
-    whose near-dup of a day-1 KEEPER is dropped while novel content
-    survives and is appended for day 3."""
-    path = str(tmp_path / "nd_manifest")
-    base = "the quick brown fox jumps over the lazy dog again and again today"
-    day1 = _docs(spark, [(1, base)])
-    out1 = mf.incremental_neardup_run(
-        spark, day1, path, min_est_jaccard=0.6, run_id="d1"
-    )
-    assert {r["doc_id"] for r in out1.collect()} == {1}
-    day2 = _docs(
-        spark,
-        [
-            (10, base + " extra"),  # near-dup of day-1 keeper -> dropped
-            (11, "astronomy dataset with galaxies nebulae and very distant quasars observed nightly"),
-        ],
-    )
-    out2 = mf.incremental_neardup_run(
-        spark, day2, path, min_est_jaccard=0.6, run_id="d2"
-    )
-    assert {r["doc_id"] for r in out2.collect()} == {11}
-    # day 3: near-dup of the DAY-2 survivor is now also caught
-    day3 = _docs(
-        spark,
-        [(20, "astronomy dataset with galaxies nebulae and very distant quasars observed nightly always")],
-    )
-    out3 = mf.incremental_neardup_run(
-        spark, day3, path, min_est_jaccard=0.6, run_id="d3"
-    )
-    assert out3.count() == 0
-    m = mf.read_neardup_manifest(spark, path)
-    assert {r["first_seen_run"] for r in m.collect()} == {"d1", "d2"}
-
-
 def test_incremental_neardup_portable_lifecycle(spark, tmp_path):
     """The PORTABLE (md5) daily loop mirrors the xxhash64 lifecycle —
     bootstrap, near-dup drop with an exact integer agreement score,
@@ -389,94 +231,7 @@ def test_incremental_neardup_portable_lifecycle(spark, tmp_path):
 
 
 class TestSemdedupManifest:
-    """Incremental SEMANTIC dedup manifest: the daily SemDeDup loop —
-    cross-run drop of semantic dups, within-batch pruning, replay
-    idempotency, and the fixed-centers contract."""
-
-    @staticmethod
-    def _centers():
-        import numpy as np
-
-        # two well-separated cells in 4-d
-        return np.array([[1.0, 0.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0]])
-
-    def test_daily_loop_drops_kept_semantics_keeps_novel(self, spark, tmp_path):
-        from wordpress_sql_to_contentstack_exporter_spark.operators import manifest as mf
-
-        path = str(tmp_path / "sem")
-        c = self._centers()
-        day1 = spark.createDataFrame(
-            [
-                (1, [1.0, 0.01, 0.0, 0.0]),
-                (2, [0.99, 0.0, 0.01, 0.0]),   # semantic dup of 1
-                (3, [0.0, 0.0, 1.0, 0.02]),
-            ],
-            "vec_id long, embedding array<double>",
-        )
-        s1 = mf.incremental_semdedup_run(
-            spark, day1, path, centers=c, threshold=0.95, run_id="d1"
-        ).collect()
-        kept1 = sorted(r["vec_id"] for r in s1)
-        assert len(kept1) == 2 and 3 in kept1  # one of {1,2} + 3
-        day2 = spark.createDataFrame(
-            [
-                (10, [1.0, 0.0, 0.005, 0.0]),   # dup of day-1 family {1,2}
-                (11, [0.0, 0.01, 0.99, 0.0]),   # dup of day-1 vec 3
-                (12, [0.5, 0.0, 0.86, 0.0]),    # novel direction
-                (13, [0.505, 0.0, 0.855, 0.0]), # within-batch dup of 12
-            ],
-            "vec_id long, embedding array<double>",
-        )
-        s2 = mf.incremental_semdedup_run(
-            spark, day2, path, centers=c, threshold=0.95, run_id="d2"
-        ).collect()
-        kept2 = sorted(r["vec_id"] for r in s2)
-        assert 10 not in kept2 and 11 not in kept2  # cross-run dups die
-        assert len(set(kept2) & {12, 13}) == 1      # within-batch resolved
-        # manifest accumulated: 2 (day1) + 1 (day2)
-        m = mf.read_semdedup_manifest(spark, path).collect()
-        assert len(m) == 3
-        assert {r["first_seen_run"] for r in m} == {"d1", "d2"}
-
-    def test_replayed_batch_is_idempotent(self, spark, tmp_path):
-        from wordpress_sql_to_contentstack_exporter_spark.operators import manifest as mf
-
-        path = str(tmp_path / "sem")
-        c = self._centers()
-        batch = spark.createDataFrame(
-            [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 0.0, 1.0, 0.0])],
-            "vec_id long, embedding array<double>",
-        )
-        first = mf.incremental_semdedup_run(
-            spark, batch, path, centers=c, run_id="a"
-        ).count()
-        replay = mf.incremental_semdedup_run(
-            spark, batch, path, centers=c, run_id="b"
-        ).count()
-        assert first == 2 and replay == 0
-        assert mf.read_semdedup_manifest(spark, path).count() == 2
-
-    def test_zero_vector_never_drops_or_is_dropped(self, spark, tmp_path):
-        from wordpress_sql_to_contentstack_exporter_spark.operators import manifest as mf
-
-        path = str(tmp_path / "sem")
-        c = self._centers()
-        batch = spark.createDataFrame(
-            [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 0.0, 0.0, 0.0])],
-            "vec_id long, embedding array<double>",
-        )
-        s1 = mf.incremental_semdedup_run(
-            spark, batch, path, centers=c, run_id="a"
-        ).count()
-        assert s1 == 2  # zero vector survives (cosine 0 to everything)
-        again = spark.createDataFrame(
-            [(5, [0.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
-        )
-        # a second zero vector also survives: dot(0,0)=0 < threshold
-        s2 = mf.incremental_semdedup_run(
-            spark, again, path, centers=c, run_id="b"
-        ).count()
-        assert s2 == 1
+    """The fixed-centers contract of ``semdedup(centers=...)``."""
 
     def test_prefit_center_shape_enforced(self, spark):
         import numpy as np
@@ -503,30 +258,6 @@ def test_manifest_diff_three_statuses(spark):
     assert got == {
         "h1": "removed", "h2": "retained", "h3": "retained", "h4": "added"
     }
-
-
-def test_manifest_diff_append_only_run_yields_no_removed(spark, tmp_path):
-    """The audit contract: an append-only incremental loop's snapshots
-    diff to added/retained ONLY — a 'removed' row is the signal the
-    diff exists to catch."""
-    docs1 = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta")], "doc_id long, text string"
-    )
-    docs2 = spark.createDataFrame(
-        [(1, "alpha"), (3, "gamma")], "doc_id long, text string"
-    )
-    path = str(tmp_path / "m")
-    mf.incremental_dedup_run(spark, docs1, path, run_id="r1")
-    # localCheckpoint (eager): a cache() pin can be EVICTED and lazily
-    # recomputed from the path AFTER run r2 appends to it, collapsing
-    # the diff to {'retained'} (review r15) — the checkpoint severs
-    # lineage so the pre-append snapshot is immutable
-    snap1 = mf.read_manifest(spark, path).select("content_hash").localCheckpoint()
-    mf.incremental_dedup_run(spark, docs2, path, run_id="r2")
-    snap2 = mf.read_manifest(spark, path).select("content_hash")
-    statuses = {r["status"] for r in mf.manifest_diff(snap1, snap2).collect()}
-    assert "removed" not in statuses
-    assert statuses == {"retained", "added"}
 
 
 def test_manifest_diff_dedups_raw_survivor_logs(spark):

@@ -225,54 +225,6 @@ def test_semantic_decontaminate_planted(spark):
         sim.semantic_decontaminate(corpus, bench, threshold=1.5)
 
 
-# ------------------------------------------------------------ jsonl sink
-
-
-def test_jsonl_roundtrip_and_dlq(spark, tmp_path):
-    from wordpress_sql_to_contentstack_exporter_spark.sinks import jsonl as jl
-
-    df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text", "lang", "source"
-    )
-    out = str(tmp_path / "corpus")
-    jl.write_jsonl_corpus(df, out, n_shards=3)
-    import glob
-
-    shards = glob.glob(out + "/part-*.json.gz")
-    # AT MOST n_shards: Spark emits no file for empty partitions, so
-    # hash-collided/tiny inputs can land on fewer files (ADVICE r10 #3)
-    assert 1 <= len(shards) <= 3
-
-    clean, dlq = jl.read_jsonl_corpus(
-        spark, out, "doc_id long, text string, lang string, source string"
-    )
-    assert dlq.count() == 0
-    a = sorted(map(tuple, df.collect()))
-    b = sorted(map(tuple, clean.collect()))
-    assert a == b  # exact round trip
-
-    # malformed lines land in the DLQ frame, clean ones still parse
-    bad = tmp_path / "corrupt" ; bad.mkdir()
-    (bad / "part-0.json").write_text(
-        '{"doc_id": 1, "text": "ok", "lang": "en", "source": "s"}\n'
-        'NOT JSON AT ALL\n'
-        '{"doc_id": 2, "text": "also ok", "lang": "en", "source": "s"}\n'
-    )
-    clean2, dlq2 = jl.read_jsonl_corpus(
-        spark, str(bad), "doc_id long, text string, lang string, source string"
-    )
-    assert clean2.count() == 2
-    assert [r.raw_line for r in dlq2.collect()] == ["NOT JSON AT ALL"]
-
-    # reserved-column guards fail loudly
-    with pytest.raises(ValueError):
-        jl.write_jsonl_corpus(df.withColumn("_corrupt_record", df.text), out, n_shards=1)
-    with pytest.raises(ValueError):
-        jl.read_jsonl_corpus(spark, out, "doc_id long, _corrupt_record string")
-    with pytest.raises(ValueError):
-        jl.write_jsonl_corpus(df, out, n_shards=0)
-
-
 # ------------------------------------------------------------- bigram LM
 
 
@@ -324,56 +276,6 @@ def test_semantic_decontaminate_empty_benchmark_keeps_rows(spark):
     assert sorted(out) == [1, 2]
     assert all(r.contaminated == 0 for r in out.values())
     assert all(r.max_sim is None and r.nearest_bench_id is None for r in out.values())
-
-
-def test_jsonl_blank_and_null_lines_go_to_dlq(spark, tmp_path):
-    from wordpress_sql_to_contentstack_exporter_spark.sinks import jsonl as jl
-
-    d = tmp_path / "blanks" ; d.mkdir()
-    (d / "part-0.json").write_text(
-        '{"doc_id": 1, "text": "ok"}\n'
-        '\n'
-        '   \n'
-        'null\n'
-        '{"doc_id": 2, "text": "ok2"}\n'
-    )
-    clean, dlq = jl.read_jsonl_corpus(spark, str(d), "doc_id long, text string")
-    assert sorted(r.doc_id for r in clean.collect()) == [1, 2]
-    # blank, whitespace-only and JSON-null lines are non-documents:
-    # they must surface in the DLQ, not as phantom all-null rows
-    assert sorted(r.raw_line for r in dlq.collect()) == ["", "   ", "null"]
-
-
-def test_jsonl_streaming_ingest_incremental_and_idempotent(spark, tmp_path):
-    from wordpress_sql_to_contentstack_exporter_spark.streaming.jsonl_ingest import jsonl_ingest
-
-    src = tmp_path / "landing" ; src.mkdir()
-    clean_dir = str(tmp_path / "clean")
-    dlq_dir = str(tmp_path / "dlq")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id long, text string"
-
-    (src / "a.jsonl").write_text(
-        '{"doc_id": 1, "text": "one"}\nBROKEN\n{"doc_id": 2, "text": "two"}\n'
-    )
-    jsonl_ingest(spark, str(src), schema, clean_dir=clean_dir, dlq_dir=dlq_dir,
-                 checkpoint_dir=ckpt)
-    assert sorted(r.doc_id for r in spark.read.parquet(clean_dir).collect()) == [1, 2]
-    assert [r.raw_line for r in spark.read.parquet(dlq_dir).collect()] == ["BROKEN"]
-
-    # second run with NO new files: checkpoint manifest means nothing
-    # re-processes — outputs unchanged (replay idempotency)
-    jsonl_ingest(spark, str(src), schema, clean_dir=clean_dir, dlq_dir=dlq_dir,
-                 checkpoint_dir=ckpt)
-    assert spark.read.parquet(clean_dir).count() == 2
-    assert spark.read.parquet(dlq_dir).count() == 1
-
-    # a NEW file is picked up incrementally; earlier batches untouched
-    (src / "b.jsonl").write_text('{"doc_id": 3, "text": "three"}\n')
-    jsonl_ingest(spark, str(src), schema, clean_dir=clean_dir, dlq_dir=dlq_dir,
-                 checkpoint_dir=ckpt)
-    assert sorted(r.doc_id for r in spark.read.parquet(clean_dir).collect()) == [1, 2, 3]
-    assert spark.read.parquet(dlq_dir).count() == 1
 
 
 # -------------------------------------------------------------- winnowing

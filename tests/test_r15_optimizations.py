@@ -5,7 +5,7 @@ its physical execution; these tests pin the old semantics as an inline
 reference model so a future edit cannot silently drift the new form.
 """
 
-from pyspark.sql import Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from wordpress_sql_to_contentstack_exporter_spark.operators import text as tx
@@ -48,6 +48,20 @@ ADVERSARIAL = [
 ]
 
 
+def _anchored_span_hashes(
+    df: DataFrame, *, text_col: str, id_col: str, span: int
+) -> DataFrame:
+    """(id, h) rows: ``xxhash64`` of each anchored span, hashed INSIDE
+    the span array before the explode so the 64-char span strings are
+    never materialized as row fields — the counting passes only ever
+    consume the hash (r15; the explode emits 8-byte longs instead of
+    ~``span``-byte strings)."""
+    arr = tx._anchored_span_arrays(df, text_col=text_col, id_col=id_col, span=span)
+    return arr.select(
+        "id", F.explode(F.transform("sp", lambda s: F.xxhash64(s))).alias("h")
+    )
+
+
 def test_anchored_spans_regex_equals_positional(spark):
     """The r15 regex extraction (`(?s)(?= (.{span}))` + position-1
     prepend) yields exactly the positional form's span multiset per doc
@@ -62,7 +76,7 @@ def test_anchored_spans_regex_equals_positional(spark):
     assert new.exceptAll(old).count() == 0
     assert old.exceptAll(new).count() == 0
     # and the fused-hash path hashes exactly those strings
-    hashes = tx._anchored_span_hashes(
+    hashes = _anchored_span_hashes(
         df, text_col="text", id_col="doc_id", span=span
     )
     ref = old.select("id", F.xxhash64("s").alias("h"))

@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from wordpress_sql_to_contentstack_exporter_spark.operators import dedup as dd
 from wordpress_sql_to_contentstack_exporter_spark.operators import text as tx
 
+from test_r15_optimizations import _anchored_span_hashes
+
 
 def _collect_sorted(df):
     return sorted(tuple(r) for r in df.collect())
@@ -163,7 +165,7 @@ def test_anchored_span_hash_counts_equals_explode_groupby(spark):
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     old = (
-        tx._anchored_span_hashes(df, text_col="text", id_col="doc_id", span=span)
+        _anchored_span_hashes(df, text_col="text", id_col="doc_id", span=span)
         .groupBy("h", "id")
         .agg(F.count(F.lit(1)).alias("c"))
         .select("id", "h", "c")

@@ -130,7 +130,7 @@ def test_dlq_merge_semantics(tmp_path):
     path = str(tmp_path / "wp_failed.json")
     write_dlq([("21", "err-a"), ("30", "err-b")], path=path)
     # next run: 21 untouched, 30 succeeds, 31 newly fails
-    write_dlq([("31", "err-c")], path=path, succeeded=["30"])
+    write_dlq([("31", "err-c")], path=path, succeeded=["30"], merge=True)
     import json
 
     doc = json.loads(open(path).read())

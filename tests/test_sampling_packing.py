@@ -66,38 +66,6 @@ def test_pack_sequences_budget_and_coverage(spark):
     assert avg_fill > 256 * 0.5
 
 
-def test_weighted_sample_wor_favors_heavy_rows(spark):
-    from pyspark.sql import functions as F
-
-    from wordpress_sql_to_contentstack_exporter_spark.operators.sampling import (
-        weighted_sample_wor,
-    )
-
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "lang", "n_chars"
-    )
-    out = weighted_sample_wor(
-        d, key_col="doc_id", weight_col="n_chars", n=20, strata=["lang"], seed=42
-    )
-    # exactly min(20, stratum size) rows per stratum, no duplicates
-    sizes = {r["lang"]: r["n"] for r in d.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    got = {r["lang"]: r["n"] for r in out.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    assert got == {k: min(20, v) for k, v in sizes.items() if min(20, v) > 0}
-    assert out.select("doc_id").distinct().count() == out.count()
-    # weight-proportional selection: sampled mean n_chars exceeds corpus mean
-    mean_all = d.agg(F.avg("n_chars")).first()[0]
-    mean_sel = out.agg(F.avg("n_chars")).first()[0]
-    assert mean_sel > mean_all
-    # zero/negative weights are never selected
-    d2 = d.withColumn(
-        "n_chars", F.when(F.col("doc_id") % 2 == 0, F.lit(0)).otherwise(F.col("n_chars"))
-    )
-    out2 = weighted_sample_wor(
-        d2, key_col="doc_id", weight_col="n_chars", n=20, strata=["lang"], seed=42
-    )
-    assert out2.filter(F.col("doc_id") % 2 == 0).count() == 0
-
-
 def test_epoch_upsample_whole_and_fractional_copies(spark):
     from wordpress_sql_to_contentstack_exporter_spark.operators.sampling import epoch_upsample
 

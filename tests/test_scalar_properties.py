@@ -15,7 +15,6 @@ from wordpress_sql_to_contentstack_exporter_spark.functions import (
     host_strip,
     slugify,
     split_to_array,
-    url_basename,
 )
 
 ALPHABET = (
@@ -63,10 +62,6 @@ def js_decode(s: str) -> str:
     return s.replace("&amp;", "&")
 
 
-def js_basename(s: str) -> str:
-    return s.split("/")[-1]
-
-
 def test_rule_port_equals_reference_regex_on_short_inputs():
     """The linear rule must equal the reference's backtracking regex
     everywhere it can be evaluated safely (short strings, exhaustive-ish
@@ -106,7 +101,6 @@ def test_scalar_functions_match_js_ports(spark):
         slugify(F.col("t")).alias("slug"),
         host_strip(F.col("t")).alias("strip"),
         decode_entities(F.col("t")).alias("dec"),
-        url_basename(F.col("t")).alias("base"),
         F.array_join(split_to_array(F.col("t"), ","), "\x00").alias("split"),
     ).collect()
     for r in rows:
@@ -114,7 +108,6 @@ def test_scalar_functions_match_js_ports(spark):
         assert r["slug"] == js_slugify(t), repr(t)
         assert r["strip"] == js_host_strip(t), repr(t)
         assert r["dec"] == js_decode(t), repr(t)
-        assert r["base"] == js_basename(t), repr(t)
         assert r["split"] == "\x00".join(t.split(",")), repr(t)
 
 

@@ -12,6 +12,7 @@ import re
 
 from wordpress_sql_to_contentstack_exporter_spark.plans.registry import (
     ORACLE_SQL,
+    _PORTABLE_TOKS_SQL,
     _SQL_BPE_TOKEN_RE,
     _SQL_NORM_TEXT,
 )
@@ -41,6 +42,22 @@ def test_sql_constants_derive_from_spark_side():
     # the translate hazards in the SQL mirror match portable_lower's:
     # İ→i before lower, ς→σ after (functions/portable.py docstring)
     assert "'İ', 'i'" in _SQL_NORM_TEXT and "'ς', 'σ'" in _SQL_NORM_TEXT
+
+
+def test_python_built_sql_constants_are_byte_stable():
+    """Both constants are built from ``sql_portable_lower`` (the string
+    the DuckDB parity test checks); the build must render exactly the
+    text the oracle has always run, so no oracle digest moves."""
+    assert _SQL_NORM_TEXT == (
+        "regexp_replace(translate(lower(translate(trim(text, ' '), 'İ', 'i')),"
+        " 'ς', 'σ'), '[ \\t\\n\\r\\f\\x0b]+', ' ', 'g')"
+    )
+    assert _PORTABLE_TOKS_SQL == (
+        "list_filter(string_split(translate(lower(translate(replace(replace("
+        "replace(replace(replace(text, chr(10), ' '), chr(9), ' '), chr(13),"
+        " ' '), chr(12), ' '), chr(11), ' '), 'İ', 'i')), 'ς', 'σ'), ' '),"
+        " x -> x != '')"
+    )
 
 
 def test_bpe_token_regex_spellings_are_canonical():

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from wordpress_sql_to_contentstack_exporter_spark.plans import pipeline as pl
 from wordpress_sql_to_contentstack_exporter_spark.plans import validate as val
-from wordpress_sql_to_contentstack_exporter_spark.sinks.dlq import read_dlq_ids
+from wordpress_sql_to_contentstack_exporter_spark.sources.idlist import read_id_list
 
 
 def make_fake_fetch():
@@ -100,8 +100,11 @@ def test_full_export(spark, wp_catalog, tmp_path):
     urlmap = read(f"{data}/master/wp_urls.json")
     assert any(u.endswith("img%20one.png") for u in urlmap)
 
-    # --- resume loop: DLQ ids -> re-export only the failed asset
-    ids = read_dlq_ids(spark, f"{data}/master/wp_failed.json")
+    # --- resume loop: DLQ keys -> ids file -> re-export only the failed
+    # asset (the reference's re-drive, README.md:57-62; CLI --ids-file)
+    ids_file = tmp_path / "failed_ids.txt"
+    ids_file.write_text(",".join(dlq))
+    ids = read_id_list(spark, str(ids_file))
     assert [r["id"] for r in ids.collect()] == [21]
     rerun = pl.run_export(wp_catalog, data, modules=["assets"], ids=ids, fetch=fake_fetch)
     rr = {r["id"]: r["status"] for r in rerun["assets"].collect()}

@@ -757,7 +757,7 @@ def quantitative_evidence(spark, sf_dir: str) -> dict[str, dict]:
     # gram contributes one floored weight, so the PRINCIPLED bound is
     # |py − spark| <= n_grams per doc; exact equality is reported (and
     # has held on every run so far) while the bound is the hard claim —
-    # the weighted_sample_wor log-ulp discipline applied to evidence.
+    # the log-ulp discipline of the sampling operators applied to evidence.
     score_mismatch = [
         r["doc_id"]
         for r in dsir_rows

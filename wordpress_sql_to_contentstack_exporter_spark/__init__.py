@@ -18,7 +18,6 @@ This package re-expresses those capabilities as idiomatic PySpark:
                    categories, posts; run concurrently) and contenttype
                    schema validation
 - ``sinks``      — keyed-JSON document sink, master/locale mappings, DLQ
-- ``streaming``  — incremental (Trigger.AvailableNow) export
 
 Everything is DataFrame-first so Catalyst handles pushdown, pruning, join
 selection and AQE; designed for multi-executor scale even though tests run

@@ -6,7 +6,6 @@ from .strings import (
     null_default_array,
     slugify,
     split_to_array,
-    url_basename,
 )
 from .dates import iso8601, padded_day, padded_month, year_str
 from .permalink import blogname_of, compile_permalink
@@ -21,7 +20,6 @@ __all__ = [
     "null_default_array",
     "slugify",
     "split_to_array",
-    "url_basename",
     "iso8601",
     "padded_day",
     "padded_month",

@@ -98,12 +98,6 @@ def conditional_array_wrap(cond: Column, value: Column) -> Column:
     return F.when(cond, F.array(value)).otherwise(F.array(F.lit("")))
 
 
-def url_basename(url: Column | str) -> Column:
-    """``url.split("/")[len-1]`` — assets.js:74-76 (asset filename)."""
-    c = F.col(url) if isinstance(url, str) else url
-    return F.element_at(F.split(c, "/"), -1)
-
-
 def html_to_text(text: Column | str) -> Column:
     """Markup → analyzable text, the extraction step between a
     WordPress export and the text-analysis operators (``post_content``

@@ -3,9 +3,9 @@
 The reference uses winston JSON loggers with success/error/warn channels
 and per-entity lines (logger.js:46-100, "exported post '16'"). Per-entity
 logging is an anti-pattern at 100 TB (a log write per row); the engine
-logs per-stage counts instead, collected for free via
-``DataFrame.observe`` — metrics ride the action that already runs, no
-extra pass over the data.
+logs one line per export module instead, with counts taken from the rows
+that module already collected — metrics ride the action that already
+runs, no extra pass over the data.
 """
 
 from __future__ import annotations
@@ -15,9 +15,6 @@ import logging
 import sys
 import threading
 import time
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 
 class JsonFormatter(logging.Formatter):
@@ -51,16 +48,3 @@ def get_logger(name: str = "wordpress_sql_to_contentstack_exporter_spark", strea
             logger.setLevel(logging.INFO)
             logger.propagate = False
     return logger
-
-
-def observe_stage(df: DataFrame, stage: str, *extra: Column):
-    """Attach named observation metrics (row count + optional aggregates).
-
-    Returns ``(df, observation)``; after any action on ``df``,
-    ``observation.get`` holds the metrics dict. Rides the existing action —
-    no extra pass.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(stage)
-    return df.observe(obs, F.count(F.lit(1)).alias("rows"), *extra), obs

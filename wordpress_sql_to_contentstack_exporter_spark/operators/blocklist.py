@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["host_suffixes", "blocklist_flags", "blocklist_filter"]
+__all__ = ["host_suffixes", "blocklist_flags"]
 
 
 def host_suffixes(host: Column, *, max_labels: int = 12) -> Column:
@@ -92,28 +92,3 @@ def blocklist_flags(
     return out.withColumn(
         "blocked", F.when(F.col("__h").isNotNull(), 1).otherwise(0).cast("long")
     ).drop("__h")
-
-
-def blocklist_filter(
-    df: DataFrame,
-    *,
-    host_col: str,
-    blocklist: DataFrame,
-    domain_col: str = "domain",
-) -> DataFrame:
-    """Keep only rows whose host is NOT under any blocklisted domain —
-    the anti-join form: explode suffixes, broadcast the blocklist, and
-    anti-join on the suffix hit (no groupBy needed: a row survives iff
-    none of its suffixes match)."""
-    bl = blocklist.select(F.col(domain_col).alias("__bldom")).distinct()
-    hit_keys = (
-        df.select(F.col(host_col).alias("__h"))
-        .distinct()
-        .withColumn("__sfx", F.explode(host_suffixes(F.col("__h"))))
-        .join(F.broadcast(bl), F.col("__sfx") == F.col("__bldom"), "left_semi")
-        .select("__h")
-        .distinct()
-    )
-    return df.join(
-        F.broadcast(hit_keys), df[host_col] == hit_keys["__h"], "left_anti"
-    )

@@ -262,53 +262,3 @@ def train_logreg(
         hist, "iter int, loss_q long, correct long, n long"
     )
     return w, history
-
-
-def predict_logreg(
-    df: DataFrame,
-    weights: np.ndarray,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_features: int | None = None,
-    l1_normalize: bool = True,
-) -> DataFrame:
-    """Score documents with a trained model: (id, margin double,
-    prediction int). Map-only — the weight vector rides the closure;
-    margin is a per-row float dot product (no cross-row float sums, so
-    the determinism contract holds row-wise)."""
-    w = np.asarray(weights, dtype=np.float64)
-    b = (len(w) - 1) if n_features is None else n_features
-    if len(w) != b + 1:
-        raise ValueError("weights length must be n_features + 1 (bias last)")
-    feats = featurize_hashed_bow(
-        df, id_col=id_col, text_col=text_col, n_features=b,
-        l1_normalize=l1_normalize,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("margin", T.DoubleType(), False),
-            T.StructField("prediction", T.IntegerType(), False),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, margins = [], []
-            for i, fs, vs in zip(pdf[id_col], pdf["feats"], pdf["vals"]):
-                fs = np.asarray(fs, dtype=np.int64)
-                vs = np.asarray(vs, dtype=np.float64)
-                ids.append(int(i))
-                margins.append(float(vs @ w[fs] + w[-1]))
-            m = np.asarray(margins)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "margin": m,
-                    "prediction": (m >= 0).astype(np.int32),
-                }
-            )
-
-    return feats.mapInPandas(run, out_schema)

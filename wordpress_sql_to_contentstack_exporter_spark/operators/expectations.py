@@ -34,7 +34,6 @@ __all__ = [
     "expect_not_null",
     "expect_between",
     "expect_in",
-    "expect_regex",
     "expect_unique",
     "run_expectations",
 ]
@@ -71,12 +70,6 @@ def expect_between(col: str, lo, hi) -> Expectation:
 def expect_in(col: str, values: list) -> Expectation:
     return Expectation(
         f"in_set({col})", F.col(col).isNotNull() & ~F.col(col).isin(values)
-    )
-
-
-def expect_regex(col: str, pattern: str) -> Expectation:
-    return Expectation(
-        f"regex({col})", F.col(col).isNotNull() & ~F.col(col).rlike(pattern)
     )
 
 

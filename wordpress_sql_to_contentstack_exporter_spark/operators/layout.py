@@ -27,13 +27,13 @@ Pieces:
   a file is scanned iff its [min,max] envelope intersects the box,
   which is exactly the pruning rule a stats-based reader applies.
 
-The production WRITE path already exists as
-``sinks.layout.write_layout(zorder_by=...)`` (which delegates its
-2-column interleave to :func:`zorder_key` here) — per-file stats then
-come for free from the parquet footers. This module is the ANALYSIS
-side: the rank construction is the oracle-able skeleton of the same
-assignment (the audit needs deterministic file boundaries to be
-checkable cross-engine), and the audit quantifies what the layout buys.
+``sinks.layout.zorder_key`` is the 2-column write-side sort key and
+delegates its interleave to :func:`zorder_key` here; per-file stats of a
+written dataset come for free from the parquet footers. This module is
+the ANALYSIS side: the rank construction is the oracle-able skeleton of
+the same assignment (the audit needs deterministic file boundaries to
+be checkable cross-engine), and the audit quantifies what the layout
+buys.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Distributed linear algebra for embedding columns: exact Gramian
-sufficient statistics + PCA whitening.
+sufficient statistics.
 
 Embedding preprocessing at corpus scale (whitening before ANN/dedup,
 PCA for dimension reduction, covariance drift monitoring) needs ONE
@@ -20,19 +20,11 @@ any partitioning, any retry. Overflow bound (documented, asserted):
 still gives ~3 decimal digits of per-coordinate precision, and the
 driver-side covariance divides the scale back out).
 
-Stages:
-
-- :func:`gram_stats` — Arrow-batched partial Gramians (numpy int64
-  matmul per batch: d x d work per row batch, emitted as the d(d+1)/2
-  upper triangle + d sums + count), then one tiny aggregation keyed on
-  (i, j): the shuffle carries ~2k rows per PARTITION, independent of
-  row count.
-- :func:`pca_components` — driver-side covariance eigendecomposition
-  from the collected statistics frame (a bounded d(d+1)/2-row collect,
-  same contract as the IVF fit-sample collect).
-- :func:`pca_project` — broadcast the (k x d) component matrix back
-  into an Arrow-batched projection (optionally whitened:
-  eigenvalue-normalized), map-only.
+:func:`gram_stats` computes Arrow-batched partial Gramians (numpy int64
+matmul per batch: d x d work per row batch, emitted as the d(d+1)/2
+upper triangle + d sums + count), then one tiny aggregation keyed on
+(i, j): the shuffle carries ~2k rows per PARTITION, independent of row
+count.
 """
 
 from __future__ import annotations
@@ -45,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["gram_stats", "pca_components", "pca_project"]
+__all__ = ["gram_stats"]
 
 _STATS_SCHEMA = T.StructType(
     [
@@ -135,80 +127,3 @@ def gram_stats(
 
     partial = df.select(vec_col).mapInPandas(run, _STATS_SCHEMA)
     return partial.groupBy("i", "j").agg(F.sum("val").cast("long").alias("val"))
-
-
-def pca_components(
-    stats: DataFrame, *, dim: int, scale_bits: int = 20, k: int | None = None
-):
-    """Driver-side eigendecomposition of the covariance implied by
-    :func:`gram_stats` output. Returns ``(eigvals desc, components
-    (k x dim), mean (dim,))`` as numpy float64 — a d x d problem, the
-    one place a bounded collect (d(d+1)/2 + d + 1 rows) is the right
-    call, mirroring the IVF fit-sample contract."""
-    rows = {(r["i"], r["j"]): r["val"] for r in stats.collect()}
-    n = rows.get((-1, -1), 0)  # empty stats frame == zero vectors
-    if n < 2:
-        raise ValueError(f"need >= 2 vectors, got {n}")
-    scale = float(1 << scale_bits)
-    mean = np.array([rows[(i, -1)] for i in range(dim)], dtype=np.float64) / n
-    gram = np.zeros((dim, dim), dtype=np.float64)
-    for i in range(dim):
-        for j in range(i, dim):
-            gram[i, j] = gram[j, i] = rows[(i, j)]
-    cov = (gram - np.outer(mean, mean) * n) / (n - 1) / (scale * scale)
-    eigvals, eigvecs = np.linalg.eigh(cov)
-    order = np.argsort(eigvals)[::-1]
-    eigvals = eigvals[order]
-    comps = eigvecs[:, order].T  # (dim, dim), row per component
-    if k is not None:
-        eigvals, comps = eigvals[:k], comps[:k]
-    return eigvals, comps, mean / scale
-
-
-def pca_project(
-    df: DataFrame,
-    components: np.ndarray,
-    mean: np.ndarray,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    eigvals: np.ndarray | None = None,
-    eps: float = 1e-9,
-) -> DataFrame:
-    """Project embeddings onto the component rows (center → matmul),
-    whitened (unit variance per component) when ``eigvals`` is given.
-    The (k x d) matrix rides the closure to every executor — a few KB —
-    and the work is one numpy matmul per Arrow batch, map-only, no
-    shuffle. Output: (``id_col``, projection array<double>); rows with
-    a NULL id or malformed vector are skipped (gram_stats' discipline —
-    a NULL id arrives as pandas NaN and int() on it would otherwise
-    fail the task)."""
-    comp = np.asarray(components, dtype=np.float64)
-    mu = np.asarray(mean, dtype=np.float64)
-    if eigvals is not None:
-        comp = comp / np.sqrt(np.asarray(eigvals, dtype=np.float64) + eps)[:, None]
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("projection", T.ArrayType(T.DoubleType()), False),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keep = [
-                (i, v)
-                for i, v in zip(pdf[id_col], pdf[vec_col])
-                if not pd.isna(i) and v is not None and len(v) == mu.shape[0]
-            ]
-            if not keep:
-                continue
-            ids = [int(i) for i, _ in keep]
-            v = np.asarray([x for _, x in keep], dtype=np.float64)
-            proj = (v - mu) @ comp.T
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="int64"), "projection": list(proj)}
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(run, out_schema)

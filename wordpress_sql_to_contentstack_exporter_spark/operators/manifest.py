@@ -1,5 +1,4 @@
-"""Cross-run incremental dedup manifest: the batch analogue of
-``streaming/bloom_dedup`` (VERDICT r7 #7).
+"""Cross-run incremental dedup manifest (VERDICT r7 #7).
 
 The operational loop a 100 TB curation pipeline runs daily: a new batch
 of documents arrives; anything whose CONTENT was already kept by a
@@ -144,56 +143,6 @@ def manifest_dedup(
     ).select(id_col, "content_hash")
 
 
-def read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    """Load the manifest PINNED to the files present right now; a
-    missing/empty path yields an empty manifest (first run bootstraps
-    from nothing, the ``assets.js`` pattern where an absent file means
-    "download everything").
-
-    The pinning is load-bearing, not hygiene: the daily step reads the
-    manifest, anti-joins, then APPENDS to the same path. A plain
-    ``read.parquet(path)`` plan is lazy over the DIRECTORY, so any
-    recompute of the survivor frame after the append (task retry,
-    executor loss, a second action on the returned DataFrame) would see
-    the batch's own freshly-appended hashes and anti-join the batch
-    against itself — silently emptying the result. Enumerating the
-    files once and reading exactly that list makes every recompute see
-    the same pre-append snapshot."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        snapshot = spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-        files = snapshot.inputFiles()
-    except AnalysisException as e:
-        # ONLY path-absent means first-run bootstrap. Anything else — a
-        # transient storage error, permissions, a corrupt footer — must
-        # RAISE: swallowing it would return an empty manifest, the
-        # anti-join would pass the entire previously-kept corpus, and
-        # the run would silently re-ship and re-append everything
-        # (round-8 review finding).
-        if _is_path_absent(e):
-            return spark.createDataFrame([], MANIFEST_SCHEMA)
-        raise
-    if not files:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
-    return spark.read.schema(MANIFEST_SCHEMA).parquet(*files)
-
-
-def append_survivors(
-    survivors: DataFrame, path: str, *, run_id: str
-) -> None:
-    """Append the batch's surviving hashes to the manifest. Semantics
-    make this idempotent across re-runs of an applied batch (the
-    survivors of a replayed batch are empty — see module docstring)."""
-    (
-        survivors.select(
-            "content_hash", F.lit(run_id).cast("string").alias("first_seen_run")
-        )
-        .write.mode("append")
-        .parquet(path)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Bucketed saved-table variant (VERDICT r8 #4): the daily-loop fast path
 # ---------------------------------------------------------------------------
@@ -241,93 +190,19 @@ def build_manifest_bucketed(
 
 def read_manifest_bucketed(spark: SparkSession, table: str) -> DataFrame:
     """Load the bucketed manifest via the catalog — the ONLY read that
-    preserves the bucket spec (reading the parquet files directly, as
-    the snapshot-pinned ``read_manifest`` does, drops the bucketing
-    metadata and re-introduces the manifest-side Exchange). A missing
-    table bootstraps empty, same as ``read_manifest``.
+    preserves the bucket spec (reading the parquet files directly drops
+    the bucketing metadata and re-introduces the manifest-side
+    Exchange). A missing table bootstraps empty.
 
-    Snapshot pinning is therefore handled DIFFERENTLY here: a catalog
-    read is lazy over the table's current file listing, so
-    ``incremental_dedup_run_bucketed`` materializes the survivor frame
-    with an EAGER localCheckpoint before appending — the returned
-    frame's lineage is truncated at materialized blocks computed
-    strictly pre-append, and a lost-block failure raises (localCheckpoint
-    cannot silently recompute through truncated lineage) rather than
-    ever anti-joining the batch against its own append."""
+    A catalog read is lazy over the table's current file listing, so a
+    caller that appends to the table must first materialize its
+    survivor frame with an EAGER localCheckpoint: the frame's lineage
+    is then truncated at blocks computed strictly pre-append, and a
+    lost-block failure raises rather than ever anti-joining the batch
+    against its own append."""
     if not spark.catalog.tableExists(table):
         return spark.createDataFrame([], MANIFEST_SCHEMA)
     return spark.table(table)
-
-
-def append_survivors_bucketed(
-    survivors: DataFrame, table: str, *, run_id: str, buckets: int = 64
-) -> None:
-    """Append surviving hashes INTO THE BUCKET LAYOUT: each appended
-    file lands in its hash bucket, so tomorrow's scan partitioning (and
-    the zero-Exchange plan) survives every append. The bucket spec must
-    match the table's stored spec — Spark validates and fails loudly on
-    drift. Per-file sort within a bucket is kept (``sortBy``); once a
-    bucket holds multiple files Spark conservatively drops the
-    sorted-scan property and plans a local Sort before the merge join —
-    cheap, and the Exchange elimination (the 70 GB item) is unaffected."""
-    (
-        survivors.select(
-            BUCKET_COL, F.lit(run_id).cast("string").alias("first_seen_run")
-        )
-        .write.bucketBy(buckets, BUCKET_COL)
-        .sortBy(BUCKET_COL)
-        .mode("append")
-        .saveAsTable(table)
-    )
-
-
-def incremental_dedup_run_bucketed(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    *,
-    table: str,
-    path: str,
-    buckets: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    run_id: str,
-) -> DataFrame:
-    """The daily step on the bucketed layout: catalog read (bucket spec
-    intact → manifest never shuffles) → anti-join → EAGER checkpoint of
-    the survivors → append into the buckets → return the survivors.
-
-    The eager checkpoint replaces ``read_manifest``'s file pinning
-    (which is unavailable here — see ``read_manifest_bucketed``): the
-    survivor rows are fully materialized from the pre-append snapshot
-    before the append begins, and any post-append action reads those
-    blocks. The failure mode under executor loss is a LOUD lost-block
-    error, never a silent self-anti-join. On a multi-node cluster,
-    substitute a reliable ``checkpoint()`` (checkpoint dir on shared
-    storage) for the same guarantee across executor deaths."""
-    if not spark.catalog.tableExists(table):
-        build_manifest_bucketed(
-            new_docs.limit(0),
-            table=table,
-            path=path,
-            buckets=buckets,
-            text_col=text_col,
-            run_id=run_id,
-        )
-    manifest = read_manifest_bucketed(spark, table)
-    survivors = manifest_dedup(
-        new_docs,
-        manifest,
-        text_col=text_col,
-        id_col=id_col,
-        # pin the batch exchange to the bucket count so the manifest is
-        # never the side EnsureRequirements re-shuffles (see
-        # manifest_dedup's batch_partitions note)
-        batch_partitions=buckets,
-    ).localCheckpoint(eager=True)
-    append_survivors_bucketed(
-        survivors, table, run_id=run_id, buckets=buckets
-    )
-    return survivors
 
 
 def build_neardup_manifest(
@@ -403,41 +278,6 @@ def neardup_manifest_dedup(
     standard exact→LSH→cluster-keepers pipeline over the survivors
     before appending them (composition keeps each stage's oracle).
     """
-    _probe, survivors = _neardup_probe_and_survivors(
-        new_docs,
-        manifest,
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_k=shingle_k,
-        shingle_mode=shingle_mode,
-        min_est_jaccard=min_est_jaccard,
-        max_bucket_size=max_bucket_size,
-    )
-    return survivors
-
-
-def _neardup_probe_and_survivors(
-    new_docs: DataFrame,
-    manifest: DataFrame,
-    *,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_k: int,
-    shingle_mode: str,
-    min_est_jaccard: float,
-    max_bucket_size: int | None,
-) -> tuple[DataFrame, DataFrame]:
-    """Core of ``neardup_manifest_dedup``, also returning the
-    checkpointed probe frame so ``incremental_neardup_run`` can append
-    the SAME banded rows the dedup decision used — re-deriving
-    signatures from ``new_docs`` would be a second evaluation, both
-    wasteful and (for a non-deterministic source) able to append
-    signatures for different content than the returned ids
-    (round-8 review finding)."""
     from .dedup import minhash_banded
 
     probe = minhash_banded(
@@ -477,130 +317,12 @@ def _neardup_probe_and_survivors(
         .select(F.col("id"))
         .distinct()
     )
-    survivors = (
+    return (
         probe.select("id")
         .distinct()
         .join(dropped, "id", "left_anti")
         .select(F.col("id").alias(id_col))
     )
-    return probe, survivors
-
-
-def incremental_dedup_run(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    manifest_path: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    run_id: str,
-) -> DataFrame:
-    """The whole daily step: read manifest (pinned snapshot) →
-    anti-join the batch → append the survivors' hashes → return the
-    survivors. The returned frame stays lazy but recomputes against the
-    PRE-append snapshot (see ``read_manifest``), so a caller action
-    after the append returns the same rows that were appended."""
-    manifest = read_manifest(spark, manifest_path)
-    survivors = manifest_dedup(
-        new_docs, manifest, text_col=text_col, id_col=id_col
-    ).localCheckpoint(eager=False)
-    # lazy localCheckpoint (the neardup twin's pattern): the append
-    # materializes the survivor frame ONCE; caller actions afterwards
-    # read the checkpointed blocks instead of re-running the batch
-    # hash + anti-join — and, for a non-deterministic source, the
-    # appended rows and the returned rows come from the SAME
-    # evaluation (round-8 review finding).
-    append_survivors(survivors, manifest_path, run_id=run_id)
-    return survivors
-
-def neardup_manifest_schema(num_hashes: int = 16) -> T.StructType:
-    """Parquet schema of the persisted near-dup manifest: the flat
-    signature columns plus (band, bucket) and provenance."""
-    return T.StructType(
-        [T.StructField("id", T.LongType(), False)]
-        + [
-            T.StructField(f"h{i}", T.LongType(), True)
-            for i in range(num_hashes)
-        ]
-        + [
-            T.StructField("band", T.IntegerType(), False),
-            T.StructField("bucket", T.LongType(), True),
-            T.StructField("first_seen_run", T.StringType(), True),
-        ]
-    )
-
-
-def read_neardup_manifest(
-    spark: SparkSession, path: str, *, num_hashes: int = 16
-) -> DataFrame:
-    """Load the signature manifest, snapshot-pinned for the same
-    read-probe-append reason as ``read_manifest`` (a post-append
-    recompute must not probe the batch's own signatures)."""
-    from pyspark.errors import AnalysisException
-
-    schema = neardup_manifest_schema(num_hashes)
-    try:
-        snapshot = spark.read.schema(schema).parquet(path)
-        files = snapshot.inputFiles()
-    except AnalysisException as e:
-        if _is_path_absent(e):
-            return spark.createDataFrame([], schema)
-        raise
-    if not files:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*files)
-
-
-def incremental_neardup_run(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    manifest_path: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 2,
-    shingle_k: int = 3,
-    shingle_mode: str = "word",
-    min_est_jaccard: float = 0.9,
-    max_bucket_size: int | None = 200_000,
-    run_id: str,
-) -> DataFrame:
-    """The daily NEAR-dup step, symmetric with
-    ``incremental_dedup_run``: read the signature manifest (pinned
-    snapshot) → probe with the batch → append the SURVIVORS' banded
-    signatures → return the surviving ids. The signature parameters
-    must match the manifest's for its whole lifetime (see
-    ``build_neardup_manifest``); survivors should additionally be
-    near-deduped among themselves (the standard exact→LSH→keepers
-    pipeline) before downstream use — their signatures are appended
-    as-is, so tomorrow's batch dedups against ALL of today's keepers.
-    """
-    manifest = read_neardup_manifest(
-        spark, manifest_path, num_hashes=num_hashes
-    )
-    probe, survivors = _neardup_probe_and_survivors(
-        new_docs,
-        manifest,
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_k=shingle_k,
-        shingle_mode=shingle_mode,
-        min_est_jaccard=min_est_jaccard,
-        max_bucket_size=max_bucket_size,
-    )
-    # Append the survivors' rows FROM THE CHECKPOINTED PROBE — the very
-    # signatures the dedup decision consumed — never a fresh
-    # minhash_banded over new_docs (a second evaluation: wasteful, and
-    # able to diverge from the returned ids on a non-deterministic
-    # source). Ids are stored as `id` (minhash_banded's convention).
-    new_rows = probe.join(
-        survivors.select(F.col(id_col).alias("id")), "id", "left_semi"
-    ).withColumn("first_seen_run", F.lit(run_id).cast("string"))
-    new_rows.write.mode("append").parquet(path=manifest_path)
-    return survivors
 
 
 # ---------------------------------------------------------------------------
@@ -676,9 +398,16 @@ def build_neardup_manifest_portable(
 def read_neardup_manifest_portable(
     spark: SparkSession, path: str, *, num_hashes: int = 16
 ) -> DataFrame:
-    """Snapshot-pinned load of the portable signature manifest (same
-    read-probe-append rationale as ``read_manifest``); a missing path
-    bootstraps empty."""
+    """Load the portable signature manifest PINNED to the files present
+    right now; a missing path bootstraps empty (first run). The pinning
+    is load-bearing: the daily step reads, probes, then APPENDS to the
+    same path, and a plain ``read.parquet(path)`` plan is lazy over the
+    directory — a recompute after the append (task retry, a second
+    action) would probe the batch against its own signatures. Reading
+    the file list enumerated once keeps every recompute on the
+    pre-append snapshot. Any error other than path-absent raises:
+    bootstrapping empty on a transient storage error would re-ship the
+    whole kept corpus."""
     from pyspark.errors import AnalysisException
 
     schema = neardup_manifest_portable_schema(num_hashes)
@@ -834,165 +563,6 @@ def incremental_neardup_run_portable(
     return scored
 
 
-# ---------------------------------------------------------------------------
-# Incremental SEMANTIC dedup manifest (round 9): the daily SemDeDup loop
-# ---------------------------------------------------------------------------
-
-SEMDEDUP_MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("cell", T.IntegerType(), False),
-        T.StructField("unit", T.ArrayType(T.DoubleType()), False),
-        T.StructField("first_seen_run", T.StringType(), True),
-    ]
-)
-
-
-def _unit_vector(vec):
-    """L2-normalized copy as a Column expression (zero vectors stay
-    zero — cosine 0 to everything, the semdedup convention, so they can
-    never be dropped as a dup of anything). The cast vector is
-    let-bound and the norm rides an array_repeat argument (evaluated
-    once): a computed ``n`` inside the per-element lambda re-ran the
-    O(d) dot product per ELEMENT — O(d^2) per row (the round-11 HOF
-    hazard; similarity.unit dodged it the same way)."""
-    from ..functions.expr import let as _let
-    from .similarity import _as_double, dot
-
-    def body(v):
-        n = F.sqrt(dot(v, v))
-        return F.when(
-            n > 0,
-            F.zip_with(v, F.array_repeat(n, F.size(v)), lambda x, y: x / y),
-        ).otherwise(v)
-
-    return _let(_as_double(vec), body)
-
-
-def read_semdedup_manifest(spark: SparkSession, path: str) -> DataFrame:
-    """Load the semantic manifest, snapshot-pinned for the same
-    read-probe-append reason as ``read_manifest`` (a post-append
-    recompute must not probe the batch's own survivors)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        snapshot = spark.read.schema(SEMDEDUP_MANIFEST_SCHEMA).parquet(path)
-        files = snapshot.inputFiles()
-    except AnalysisException as e:
-        if _is_path_absent(e):
-            return spark.createDataFrame([], SEMDEDUP_MANIFEST_SCHEMA)
-        raise
-    if not files:
-        return spark.createDataFrame([], SEMDEDUP_MANIFEST_SCHEMA)
-    return spark.read.schema(SEMDEDUP_MANIFEST_SCHEMA).parquet(*files)
-
-
-def semdedup_manifest_dedup(
-    batch: DataFrame,
-    manifest: DataFrame,
-    *,
-    centers,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    max_cell_rows: int = 500_000,
-) -> DataFrame:
-    """Batch rows that are NOT semantic duplicates of the kept corpus,
-    then SemDeDup'd within the batch — the daily loop that never
-    recomputes over the kept corpus (its unit vectors are read back,
-    not re-embedded or re-clustered):
-
-    1. assign batch cells under the SAME prefit centers (map-only) and
-       L2-normalize;
-    2. probe: ONE cell-keyed equi-join against the manifest, kill any
-       batch row whose dot product with a kept unit vector is >=
-       ``threshold`` (distinct batch-id semi-set, then anti-join);
-    3. within-batch pass: ``semdedup(centers=...)`` over the remaining
-       rows (a batch can contain its own semantic dups).
-
-    Cost model matches semdedup itself: the probe join fans out
-    |batch ∩ cell| x |kept ∩ cell| per cell — bounded by cell sizes,
-    never corpus-quadratic; the manifest side carries (cell, unit)
-    rows only. Output: manifest-schema rows for the batch's survivors
-    (append with :func:`append_semdedup_survivors`).
-    """
-    from . import similarity as sim
-
-    assigned = batch.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col),
-        sim.cell_assign_pandas(vec_col, centers).alias("cell"),
-        _unit_vector(F.col(vec_col)).alias("unit"),
-    ).localCheckpoint(eager=False)
-    kept_side = manifest.select(
-        "cell", F.col("unit").alias("__kept_unit")
-    )
-    dup_ids = (
-        assigned.join(kept_side, "cell")
-        .filter(sim.dot(F.col("unit"), F.col("__kept_unit")) >= threshold)
-        .select("vec_id")
-        .distinct()
-    )
-    remaining = assigned.join(dup_ids, "vec_id", "left_anti")
-    within = sim.semdedup(
-        remaining.select("vec_id", F.col(vec_col)),
-        id_col="vec_id",
-        vec_col=vec_col,
-        n_cells=len(centers),
-        threshold=threshold,
-        max_cell_rows=max_cell_rows,
-        centers=centers,
-    ).filter(F.col("keep"))
-    return remaining.join(within.select("vec_id"), "vec_id").select(
-        "vec_id", "cell", "unit", F.lit(None).cast("string").alias("first_seen_run")
-    )
-
-
-def append_semdedup_survivors(
-    survivors: DataFrame, path: str, *, run_id: str
-) -> None:
-    """Append the batch's surviving (vec_id, cell, unit) rows. Same
-    serial-runs contract as ``append_survivors`` (module docstring)."""
-    (
-        survivors.select(
-            "vec_id", "cell", "unit",
-            F.lit(run_id).cast("string").alias("first_seen_run"),
-        )
-        .write.mode("append")
-        .parquet(path)
-    )
-
-
-def incremental_semdedup_run(
-    spark: SparkSession,
-    batch: DataFrame,
-    path: str,
-    *,
-    centers,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    max_cell_rows: int = 500_000,
-    run_id: str = "run",
-) -> DataFrame:
-    """One daily semantic-dedup step: read (snapshot-pinned) -> probe +
-    within-batch prune -> append survivors -> return them. First run
-    against an absent path bootstraps (the whole batch is the probe's
-    trivial survivor set and seeds the manifest)."""
-    manifest = read_semdedup_manifest(spark, path)
-    survivors = semdedup_manifest_dedup(
-        batch,
-        manifest,
-        centers=centers,
-        id_col=id_col,
-        vec_col=vec_col,
-        threshold=threshold,
-        max_cell_rows=max_cell_rows,
-    ).localCheckpoint(eager=False)
-    append_semdedup_survivors(survivors, path, run_id=run_id)
-    return survivors
-
-
 def manifest_diff(
     old: DataFrame,
     new: DataFrame,
@@ -1010,8 +580,8 @@ def manifest_diff(
     removed?" (an append-only manifest must never produce ``removed``
     rows; a compaction or re-bootstrap legitimately does, and the diff
     is how that is signed off). Works over any of the family's
-    manifests — the exact, bucketed and portable variants all carry
-    ``content_hash``; pass ``key`` for the semantic manifest's id.
+    manifests — the exact and bucketed ones carry ``content_hash``;
+    pass ``key="id"`` for the portable signature manifest.
 
     Shape: distinct on each side (manifests are distinct-by-contract
     already; the projection keeps the diff safe over raw survivor

@@ -14,8 +14,7 @@ the REAL-pixel-decode path executes even in this codec-less container),
 and finally the deterministic sha256-derived stub. ``decoder="png"``
 forces the stdlib tier, ``decoder="stub"`` the stub; the driver gate
 query pins ``"stub"`` so oracle parity cannot depend on which libraries
-happen to be installed. ``available_decoders()`` reports what THIS
-interpreter can really decode.
+happen to be installed.
 """
 
 from __future__ import annotations
@@ -101,15 +100,6 @@ def _make_pil_decoder():
         ]
 
     return decode
-
-
-def available_decoders() -> list[str]:
-    """Names of real codec backends usable in THIS interpreter. "png"
-    (the stdlib tier) is always present; "pil" only when importable —
-    so the list is never empty, but a PIL-less container honestly shows
-    the stdlib decoder is the only real-pixel path."""
-    out = ["pil"] if _make_pil_decoder() is not None else []
-    return out + ["png"]
 
 
 def decode_features(

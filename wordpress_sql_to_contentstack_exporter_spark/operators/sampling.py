@@ -168,55 +168,6 @@ def domain_mixture(
     return kept.withColumn(out_key_col, order_key)
 
 
-def weighted_sample_wor(
-    df: DataFrame,
-    *,
-    key_col: str,
-    weight_col: str,
-    n: int,
-    strata: list[str] | None = None,
-    seed: int = 42,
-) -> DataFrame:
-    """Weighted sampling WITHOUT replacement (Efraimidis-Spirakis 2006),
-    deterministic and cross-engine reproducible.
-
-    Per row: a uniform u in (0, 1] derived from md5 (not ``rand()`` —
-    stable under task retry, and any engine recomputes the same draw),
-    then score = ln(u)/w, the monotone equivalent of the paper's
-    u^(1/w); the n LARGEST scores per stratum are an exact weighted
-    sample without replacement. Rows with non-positive weight are
-    excluded (the scheme requires w > 0).
-
-    Cross-engine caveat (ADVICE r4): the md5-derived u is bit-exact in
-    any engine, but ``ln`` is NOT specified to be correctly rounded —
-    JVM ``Math.log`` and a libm ``ln`` may differ in the last ulp. The
-    selection is therefore exact-by-construction only AWAY from the
-    rank-n boundary: a row whose score ties the boundary row to within
-    1 ulp could flip in or out between engines. With 60-bit uniforms
-    and continuous weights an exact boundary tie has vanishing
-    probability (none observed across 5 rounds of the oracle gate), but
-    the guarantee is "exact selection modulo log-ulp boundary ties",
-    not unconditional. A log-free monotone key (u^(1/w) via exact
-    integer arithmetic) does not exist for general w, so the contract
-    is documented rather than worked around.
-
-    Scale shape: the stratified form is one shuffle + per-stratum top-n
-    window; the global form compiles to TakeOrdered (per-partition heap,
-    driver merges n rows) — no global sort of the corpus either way.
-    """
-    u = _md5_uniform(f"wsample:{seed}:", F.col(key_col))
-    score = F.log(u) / F.col(weight_col).cast("double")
-    out = df.filter(F.col(weight_col) > 0).withColumn("__es", score)
-    if strata:
-        w = Window.partitionBy(*strata).orderBy(F.col("__es").desc(), F.col(key_col))
-        return (
-            out.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") <= n)
-            .drop("__es", "__rk")
-        )
-    return out.orderBy(F.col("__es").desc(), F.col(key_col)).limit(n).drop("__es")
-
-
 def weighted_sample_wor_exact(
     df: DataFrame,
     *,
@@ -228,9 +179,8 @@ def weighted_sample_wor_exact(
     weight_cap: int = 64,
 ) -> DataFrame:
     """Weighted sampling without replacement with a LOG-FREE integer
-    score — the unconditionally cross-engine-exact companion to
-    ``weighted_sample_wor`` (VERDICT r5 #6: no oracle-compared column
-    may depend on a transcendental).
+    score, exact in every engine (VERDICT r5 #6: no oracle-compared
+    column may depend on a transcendental).
 
     For an INTEGER weight w, the Efraimidis-Spirakis key u^(1/w) is
     distributed as the maximum of w iid uniforms (P(max(u_1..u_w) <= x)
@@ -249,9 +199,7 @@ def weighted_sample_wor_exact(
     of the contract. The draws stay MAP-ONLY — a ``transform`` over
     ``sequence(1, w)`` reduced by ``array_max``, no explode and no
     extra shuffle; the only shuffle is the per-stratum top-n window
-    (global form compiles to TakeOrdered). For heavy-tailed continuous
-    weights at the 100 TB tier, ``weighted_sample_wor`` (1 hash + ln
-    per row, documented ulp-tie caveat) remains the scale path.
+    (global form compiles to TakeOrdered).
     """
     w_int = F.greatest(
         F.lit(1).cast("long"),
@@ -736,10 +684,11 @@ def dsir_resample(
     ``rand()``); the n largest keys are exactly a without-replacement
     draw with probabilities ∝ exp(score) — the log-domain equivalent
     of Efraimidis–Spirakis on weight exp(score), with no overflowing
-    ``exp`` anywhere. Same log-ulp boundary-tie caveat as
-    :func:`weighted_sample_wor` (documented there). Compiles to
-    TakeOrdered: per-partition heap + driver merge of n rows, no
-    global sort."""
+    ``exp`` anywhere. Cross-engine caveat: ``ln`` is not specified to
+    be correctly rounded (JVM ``Math.log`` and a libm ``ln`` may differ
+    in the last ulp), so the selection is exact modulo keys that tie
+    the rank-n boundary to within 1 ulp. Compiles to TakeOrdered:
+    per-partition heap + driver merge of n rows, no global sort."""
     u = _md5_uniform(f"dsir:{seed}:", F.col(id_col))
     key = F.col(score_col).cast("double") - F.log(-F.log(u))
     return (

@@ -269,7 +269,7 @@ def ivf_topk(
     The fitted centroids are driver-side (tiny); assignment and rerank
     are distributed.
 
-    Pass prefit ``centers`` (e.g. from :func:`load_ann_index`) to skip
+    Pass prefit ``centers`` (e.g. an earlier run's fit) to skip
     the fit — the production shape: an index is trained once and reused
     across query batches and sessions; refitting per query batch both
     wastes the sample collect and silently changes the cell layout
@@ -611,10 +611,10 @@ def ivfpq_topk(
 
     Round 15: split into :func:`ivfpq_index` (build side) and
     :func:`ivfpq_probe` (query side) — the build-once/probe-many shape
-    production vector search actually runs (persist centers+codebooks
-    with ``save_ann_index`` and the encoded table as parquet; tomorrow's
-    queries pay only the probe). This wrapper composes the halves
-    unchanged — same plan, same rows.
+    production vector search actually runs (keep centers+codebooks and
+    persist the encoded table as parquet; tomorrow's queries pay only
+    the probe). This wrapper composes the halves unchanged — same plan,
+    same rows.
     """
     assigned, centers, books = ivfpq_index(
         candidates,
@@ -651,8 +651,8 @@ def ivfpq_index(
     Returns ``(index_df, centers, codebooks)`` where ``index_df`` is
     (neighbor_id, cell, codes array<int>, recon_norm) — 1/32 the bytes
     of the raw vectors, the table a production job writes once and
-    probes daily. Pass prefit ``centers``/``codebooks`` (e.g. from
-    :func:`load_ann_index`) to skip the fit — the cell layout and
+    probes daily. Pass prefit ``centers``/``codebooks`` (an earlier
+    build's fit) to skip the fit — the cell layout and
     quantization grid are part of a persisted index's identity, so
     re-fitting on a grown corpus would silently reshape cells.
 
@@ -1145,10 +1145,10 @@ def semdedup(
             seed=seed, max_iter=max_iter, fit_sample=fit_sample, id_col=id_col,
         )
     else:
-        # prefit centers (load_ann_index / the incremental manifest loop):
-        # the CELL LAYOUT is part of a manifest's identity — a refit
-        # would re-cluster tomorrow's corpus differently and silently
-        # split semantic families across cell boundaries
+        # prefit centers (an earlier run's fit): the CELL LAYOUT is
+        # part of a persisted index's identity — a refit would
+        # re-cluster tomorrow's corpus differently and silently split
+        # semantic families across cell boundaries
         centers = np.asarray(centers, dtype=np.float64)
         if centers.ndim != 2 or len(centers) != n_cells:
             raise ValueError(
@@ -1213,97 +1213,6 @@ def semdedup(
         )
 
     return assigned.groupBy("cell").applyInPandas(prune, out_schema)
-
-
-def save_ann_index(
-    spark,
-    path: str,
-    *,
-    centers: np.ndarray | None = None,
-    codebooks: np.ndarray | None = None,
-) -> None:
-    """Persist a fitted ANN index (IVF coarse centers and/or PQ
-    codebooks) as ONE parquet table — the train-once/reuse-everywhere
-    shape of production vector search (FAISS writes index files; the
-    Spark-native equivalent is a tiny parquet any session can read).
-
-    Layout: (part string, i int, j int, vec array<double>) —
-    part='center' rows carry (cell_id, -1, centroid); part='book' rows
-    carry (subspace, code, sub-centroid). Doubles round-trip parquet
-    bit-exactly, so a loaded index reproduces assignments and
-    quantization decisions EXACTLY (asserted in tests) — re-fitting per
-    run, by contrast, silently reshapes cells whenever the corpus
-    sample changes. The table is index-metadata-scale (KBs), written
-    with a single partition."""
-    rows = []
-    if centers is not None:
-        c = np.asarray(centers, dtype=np.float64)
-        if c.ndim != 2:
-            raise ValueError(f"centers must be 2-D, got {c.shape}")
-        rows += [
-            ("center", int(i), -1, [float(x) for x in c[i]])
-            for i in range(len(c))
-        ]
-    if codebooks is not None:
-        b = np.asarray(codebooks, dtype=np.float64)
-        if b.ndim != 3:
-            raise ValueError(f"codebooks must be 3-D, got {b.shape}")
-        rows += [
-            ("book", int(s), int(k), [float(x) for x in b[s, k]])
-            for s in range(b.shape[0])
-            for k in range(b.shape[1])
-        ]
-    if not rows:
-        raise ValueError("nothing to save: pass centers and/or codebooks")
-    spark.createDataFrame(
-        rows, "part string, i int, j int, vec array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_ann_index(spark, path: str) -> dict:
-    """Load :func:`save_ann_index` output. Returns
-    ``{"centers": (k, d) float64 or None,
-       "codebooks": (m, n_codes, d_sub) float64 or None}`` — pass
-    straight into ``ivf_topk(centers=...)`` / the PQ encoders. The read
-    is a driver-side collect of an index-metadata-scale table; row
-    order is pinned by explicit (part, i, j) sorting, never file
-    layout."""
-    rows = spark.read.parquet(path).collect()
-    centers_rows = sorted(
-        ((r["i"], r["vec"]) for r in rows if r["part"] == "center")
-    )
-    books_rows = sorted(
-        ((r["i"], r["j"], r["vec"]) for r in rows if r["part"] == "book")
-    )
-    out: dict = {"centers": None, "codebooks": None}
-    if centers_rows:
-        if [i for i, _ in centers_rows] != list(range(len(centers_rows))):
-            raise ValueError("corrupt index: center ids are not dense 0..k-1")
-        out["centers"] = np.array([v for _, v in centers_rows], dtype=np.float64)
-    if books_rows:
-        m = max(i for i, _, _ in books_rows) + 1
-        n_codes = max(j for _, j, _ in books_rows) + 1
-        # validate the KEY SET, not just the count: one duplicated plus
-        # one missing (i, j) has the right count but would leave a cell
-        # uninitialized — corruption must be loud, never a garbage
-        # codebook (round-9 review)
-        keys = [(i, j) for i, j, _ in books_rows]
-        expected = [(i, j) for i in range(m) for j in range(n_codes)]
-        if keys != expected:
-            raise ValueError(
-                "corrupt index: codebook (subspace, code) keys are not the "
-                f"dense {m}x{n_codes} grid (duplicates or gaps present)"
-            )
-        d_sub = len(books_rows[0][2])
-        b = np.empty((m, n_codes, d_sub), dtype=np.float64)
-        for i, j, v in books_rows:
-            if len(v) != d_sub:
-                raise ValueError(
-                    f"corrupt index: codebook vec width {len(v)} != {d_sub}"
-                )
-            b[i, j] = v
-        out["codebooks"] = b
-    return out
 
 
 def semantic_decontaminate(

@@ -891,81 +891,6 @@ def _bpe_encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     return syms
 
 
-def bpe_learn(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    n_merges: int = 100,
-    max_vocab_words: int = 100_000,
-) -> list[tuple[str, str]]:
-    """Learn a BPE merge table from a corpus — the tokenizer-TRAINING
-    stage of an LLM pipeline, shaped the way production trainers shape
-    it: the cluster reduces the corpus to a (word, count) frequency
-    table with ONE aggregate (shuffle keys are words, not documents),
-    and the merge loop runs driver-side over that table, which is small
-    by Zipf's law (distinct words, not corpus size — HF/sentencepiece
-    train exactly this way, typically on a corpus SAMPLE; at 100 TB you
-    sample first, which is standard practice, not a shortcut).
-
-    ``max_vocab_words`` bounds the driver table to the most frequent
-    words (deterministic count-desc, word-asc order). Words come from
-    the engine's canonical portable tokenization so the tokenizer and
-    every other text operator agree on what a word is. Returns the
-    merge list in priority order — feed it to ``bpe_apply``.
-    """
-    if n_merges < 0 or max_vocab_words < 1:
-        raise ValueError("n_merges >= 0 and max_vocab_words >= 1 required")
-    counts = (
-        df.select(
-            F.explode(
-                F.filter(
-                    F.split(
-                        portable_lower(F.trim(F.col(text_col))), PORTABLE_WS_PLUS
-                    ),
-                    lambda t: t != "",
-                )
-            ).alias("word")
-        )
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.col("c").desc(), F.col("word").asc())
-        .limit(max_vocab_words)
-        .collect()
-    )
-    # driver-side classic pair-count loop over symbolized words
-    vocab: dict[tuple[str, ...], int] = {
-        tuple(r["word"]): r["c"] for r in counts
-    }
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        pair_counts: dict[tuple[str, str], int] = {}
-        for syms, c in vocab.items():
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                pair_counts[p] = pair_counts.get(p, 0) + c
-        if not pair_counts:
-            break
-        # deterministic argmax: count desc, then lexicographic pair
-        best = min(pair_counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        merges.append(best)
-        merged = best[0] + best[1]
-        new_vocab: dict[tuple[str, ...], int] = {}
-        for syms, c in vocab.items():
-            out: list[str] = []
-            i = 0
-            while i < len(syms):
-                if i + 1 < len(syms) and (syms[i], syms[i + 1]) == best:
-                    out.append(merged)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            key = tuple(out)
-            new_vocab[key] = new_vocab.get(key, 0) + c
-        vocab = new_vocab
-    return merges
-
-
 def bpe_apply(
     df: DataFrame,
     merges: list[tuple[str, str]],
@@ -1031,7 +956,6 @@ def bpe_apply(
     ).mapInPandas(run, out_schema)
 
 
-
 def _anchored_span_arrays(
     df: DataFrame, *, text_col: str, id_col: str, span: int
 ) -> DataFrame:
@@ -1079,26 +1003,12 @@ def _anchored_spans(
     ).select("id", F.explode("sp").alias("s"))
 
 
-def _anchored_span_hashes(
-    df: DataFrame, *, text_col: str, id_col: str, span: int
-) -> DataFrame:
-    """(id, h) rows: ``xxhash64`` of each anchored span, hashed INSIDE
-    the span array before the explode so the 64-char span strings are
-    never materialized as row fields — the counting passes only ever
-    consume the hash (r15; the explode emits 8-byte longs instead of
-    ~``span``-byte strings)."""
-    arr = _anchored_span_arrays(df, text_col=text_col, id_col=id_col, span=span)
-    return arr.select(
-        "id", F.explode(F.transform("sp", lambda s: F.xxhash64(s))).alias("h")
-    )
-
-
 def _anchored_span_hash_counts(
     df: DataFrame, *, text_col: str, id_col: str, span: int
 ) -> DataFrame:
     """(id, h, c) rows: per document, each DISTINCT anchored-span hash
     with its within-doc occurrence count ``c`` — exactly the multiset
-    ``_anchored_span_hashes(..).groupBy(h, id).count()`` produces, but
+    an explode of the span hashes + ``groupBy(h, id).count()`` produces, but
     computed INSIDE the span array (sort + run-length boundaries), so
     the per-(h, id) pre-aggregation needs NO exchange (r16, guide §2.3
     "aggregate before you shuffle" taken to its limit: the aggregate

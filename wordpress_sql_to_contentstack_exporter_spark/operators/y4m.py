@@ -92,26 +92,6 @@ def frame_offsets(data: bytes, hdr: dict) -> list[int]:
     return offs
 
 
-def n_frames(data: bytes) -> int:
-    return len(frame_offsets(data, parse_header(data)))
-
-
-def extract_frame(data: bytes, idx: int) -> bytes:
-    """Raw YCbCr plane bytes of frame ``idx`` (0-based)."""
-    hdr = parse_header(data)
-    offs = frame_offsets(data, hdr)
-    if not 0 <= idx < len(offs):
-        raise IndexError(f"frame {idx} of {len(offs)}")
-    return data[offs[idx] : offs[idx] + hdr["frame_bytes"]]
-
-
-def duration_ms(data: bytes) -> int:
-    """Stream duration in milliseconds from frame count x frame rate."""
-    hdr = parse_header(data)
-    count = len(frame_offsets(data, hdr))
-    return (count * 1000 * hdr["fps_den"]) // hdr["fps_num"]
-
-
 def encode(
     width: int,
     height: int,

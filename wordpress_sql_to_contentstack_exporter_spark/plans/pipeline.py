@@ -164,12 +164,11 @@ def export_assets(
             [r["url"] for r in ok], path=f"{data_dir}/master/wp_urls.json", locale=None, merge=partial
         ),
     ]
-    # DLQ always merges (reference preloads wp_failed.json): successes
-    # clear their entries, untouched prior failures survive
     dlq = write_dlq(
         [(str(r["id"]), r["error"]) for r in rows if r["status"] == "failed"],
         path=f"{data_dir}/master/wp_failed.json",
         succeeded=ok_ids,
+        merge=partial,
     )
     written.append(dlq)
     statuses = [r["status"] for r in rows]

@@ -41,6 +41,7 @@ from ..functions.portable import (
     PORTABLE_WS_PLUS,
     portable_lower,
     portable_upper,
+    sql_portable_lower,
 )
 from ..functions import (
     compile_permalink,
@@ -146,11 +147,10 @@ def q_posts_export_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship export through the NO-COLLECT sharded path's
     semantics, made oracle-able (round 15 — VERDICT r14 #5's "the
     keyed-JSON sharded mode is the path"): every entry renders to its
-    final JSON line ON EXECUTORS (``to_json``, exactly what
-    sinks/keyed_json.write_keyed_json_sharded ships to shard files),
-    is assigned to one of 8 shards by the portable content-independent
-    sha256-prefix hash (the ``shard_manifest`` device — deterministic
-    cross-engine, unlike ``repartitionByRange``'s sampled bounds), and
+    final JSON line ON EXECUTORS (``to_json``), is assigned to one of 8
+    shards by the portable content-independent sha256-prefix hash (the
+    ``shard_manifest`` device — deterministic cross-engine, unlike
+    ``repartitionByRange``'s sampled bounds), and
     each shard row carries the release-manifest evidence: entry count,
     total rendered bytes, an order-free bit_xor checksum of per-line
     sha256 prefixes, and the id range. The checksum covers the FULL
@@ -696,8 +696,8 @@ def _sessionized(events: DataFrame) -> DataFrame:
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30-min inactivity) via lag + running sum —
-    the batch form of the streaming session operator."""
+    """Gap-based sessionization (30-min inactivity) via lag + running
+    sum."""
     sessioned = _sessionized(_t(spark, sf_dir, "events"))
     return (
         sessioned.groupBy("user_id", "session_id")
@@ -1134,15 +1134,16 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # asserts every occurrence in this module canonicalizes to THESE
 # strings — an edit to one spelling fails the suite until all match.
 # Both derive from the SPARK-side spellings (ADVICE r14 #1): the token
-# regex IS operators.text.TOKEN_RE and the whitespace class IS
-# functions.portable.PORTABLE_WS_PLUS, so an edit to either Spark-side
-# constant changes these mirrors too (and trips the occurrence tests
+# regex IS operators.text.TOKEN_RE, the whitespace class IS
+# functions.portable.PORTABLE_WS_PLUS and the lowercase IS
+# functions.portable.sql_portable_lower, so an edit to any Spark-side
+# spelling changes these mirrors too (and trips the occurrence tests
 # until every literal SQL spelling is updated to match) instead of
 # silently diverging the two engines.
 _SQL_BPE_TOKEN_RE = tx.TOKEN_RE
 _SQL_NORM_TEXT = (
-    r"regexp_replace(translate(lower(translate(trim(text, ' '), "
-    r"'İ', 'i')), 'ς', 'σ'), '" + PORTABLE_WS_PLUS + r"', ' ', 'g')"
+    "regexp_replace(" + sql_portable_lower("trim(text, ' ')")
+    + ", '" + PORTABLE_WS_PLUS + "', ' ', 'g')"
 )
 # curation_pipeline's quality gate threshold (Spark wrapper + mirror).
 _CP_MIN_BPE = 30
@@ -2260,10 +2261,12 @@ FROM lines
 # ::BIGINT, lint family F). The portable tokenizer is kept: it is
 # strictly more build-independent and locally byte-identical.
 _PORTABLE_TOKS_SQL = (
-    "list_filter(string_split(translate(lower(translate("
-    "replace(replace(replace(replace(replace(text, chr(10), ' '), chr(9), ' '),"
-    " chr(13), ' '), chr(12), ' '), chr(11), ' ')"
-    ", 'İ', 'i')), 'ς', 'σ'), ' '), x -> x != '')"
+    "list_filter(string_split("
+    + sql_portable_lower(
+        "replace(replace(replace(replace(replace(text, chr(10), ' '), chr(9), ' '),"
+        " chr(13), ' '), chr(12), ' '), chr(11), ' ')"
+    )
+    + ", ' '), x -> x != '')"
 )
 
 _REPETITION_CORPUS_CTE = """
@@ -4151,9 +4154,8 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     score is array_max of w pinned md5 60-bit integers — u^(1/w) is
     the max of w iid uniforms — so the DuckDB oracle reproduces the
     EXACT selection with no transcendental anywhere in the contract
-    (VERDICT r5 #6 retired the former ln(u)/w score's ulp-tie caveat;
-    weighted_sample_wor keeps the 1-hash ln path for heavy-tailed
-    continuous weights at scale)."""
+    (VERDICT r5 #6 retired the former ln(u)/w score's ulp-tie
+    caveat)."""
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", ((F.col("n_chars") % 59) + 1).cast("long").alias("w")
     )
@@ -5394,8 +5396,7 @@ FROM base WHERE n > 0
 
 #: Fixed merge table for the bpe_tokenize gate — pinned (not learned at
 #: build time) so the registry entry stays lazy and the output is a
-#: stable contract; bpe_learn is exercised by its own tests. Common
-#: English letter-pair merges, priority order.
+#: stable contract. Common English letter-pair merges, priority order.
 BPE_GATE_MERGES: list[tuple[str, str]] = [
     ("t", "h"), ("th", "e"), ("i", "n"), ("a", "n"), ("o", "n"),
     ("e", "r"), ("an", "d"), ("r", "e"), ("o", "r"), ("e", "n"),
@@ -7853,9 +7854,8 @@ def q_embedding_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~2k rows regardless of corpus size; vectors are floor(x * 2^20)
     integer-scaled BEFORE any product (exact in both engines, the
     registry's float doctrine), making the statistics bit-identical
-    under any partitioning/combine order. The d x d eigen-step happens
-    driver-side downstream (pca_components/pca_project, whitening
-    property pytest-verified)."""
+    under any partitioning/combine order. Any d x d eigen-step (PCA,
+    whitening) is a driver-side problem on these statistics."""
     e = _t(spark, sf_dir, "embeddings")
     return lin.gram_stats(e, vec_col="embedding", dim=64, scale_bits=20).select(
         F.col("i").cast("long").alias("i"),

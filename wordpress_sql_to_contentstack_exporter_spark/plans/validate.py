@@ -69,33 +69,6 @@ class ContentType:
         return out
 
 
-def from_contenttype_json(doc: dict) -> ContentType:
-    """Parse a contenttype declaration (the reference's contenttypes/*.json
-    format: top-level ``title``/``uid`` + ``schema`` list whose items carry
-    ``uid``, ``data_type``, ``mandatory``, ``unique``, ``multiple``) into
-    executable rules. Nested ``group`` fields contribute their children as
-    dotted names."""
-
-    def walk(fields: list[dict], prefix: str = "") -> list[FieldRule]:
-        out: list[FieldRule] = []
-        for f_ in fields:
-            name = prefix + f_.get("uid", "")
-            if f_.get("data_type") == "group":
-                out.extend(walk(f_.get("schema", []), name + "."))
-                continue
-            out.append(
-                FieldRule(
-                    name=name,
-                    mandatory=bool(f_.get("mandatory", False)),
-                    unique=bool(f_.get("unique", False)),
-                    multiple=bool(f_.get("multiple", False)),
-                )
-            )
-        return out
-
-    return ContentType(doc.get("uid", doc.get("title", "unnamed")), walk(doc.get("schema", [])))
-
-
 POSTS_TYPE = ContentType(
     "posts",
     [

@@ -1,13 +1,11 @@
 from .keyed_json import merge_keyed_json, write_keyed_json, write_master_mapping
-from .dlq import read_dlq_ids, write_dlq
-from .layout import write_layout, zorder_key
+from .dlq import write_dlq
+from .layout import zorder_key
 
 __all__ = [
     "merge_keyed_json",
     "write_keyed_json",
     "write_master_mapping",
     "write_dlq",
-    "read_dlq_ids",
-    "write_layout",
     "zorder_key",
 ]

@@ -2,19 +2,17 @@
 
 The reference accumulates ``{ID: error}`` for failed asset downloads into
 ``wp_failed.json`` (assets.js:24,88,100,114,214), clears an entry on later
-success, and re-drives failures via the ID-file path (README.md:57-62).
+success, and re-drives failures via the ID-file path (README.md:57-62):
+the DLQ's keys, written to a file, are the next run's ``--ids-file``.
 
 Here the DLQ is the (id, error) pairs of the download results the assets
 module already collected; the JSON file keeps the reference's
-``{id: error}`` shape, and ``read_dlq_ids`` closes the loop by turning run
-N's failures into run N+1's ID input (a missing file re-drives nothing).
+``{id: error}`` shape.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterable
-
-from pyspark.sql import DataFrame, SparkSession
 
 from .keyed_json import Written, read_document, write_document
 
@@ -24,21 +22,25 @@ def write_dlq(
     *,
     path: str,
     succeeded: Iterable[str] = (),
+    merge: bool = False,
 ) -> Written:
-    """Merge this run's (id, error) failures into the DLQ file, mirroring
-    the reference's behavior exactly (assets.js:24,133-137): existing
-    entries are PRELOADED and kept, an id that succeeded this run is
-    cleared, a failure (re)writes its entry. Untouched failures from prior
-    runs survive — overwriting would silently orphan them."""
-    doc = read_document(path)
+    """Write this run's (id, error) failures to the DLQ file.
+
+    ``merge=True`` (ids-subset runs) mirrors the reference exactly
+    (assets.js:24,133-137): existing entries are PRELOADED and kept, an
+    id that succeeded this run is cleared, a failure (re)writes its
+    entry. Untouched failures from prior runs survive — overwriting
+    would silently orphan them. A prior DLQ that does not parse raises
+    ``CorruptDocumentError`` naming its path.
+
+    ``merge=False`` (full runs) rewrites the file from this run's
+    failures alone, so a cut-off DLQ never blocks a full run. A full run
+    attempts every attachment, so each entry it could have kept is
+    cleared or rewritten anyway; the only entries it drops are those of
+    attachments that no longer exist, which cannot be re-driven."""
+    doc = read_document(path) if merge else {}
     for k in succeeded:
         doc.pop(k, None)
     doc.update(failures)
     doc = dict(sorted(doc.items()))
     return Written(write_document(path, doc), len(doc))
-
-
-def read_dlq_ids(spark: SparkSession, path: str, *, col_name: str = "id") -> DataFrame:
-    """DLQ file -> one-column id DataFrame (the resume-by-ID input)."""
-    ids = [(int(k),) for k in read_document(path)]
-    return spark.createDataFrame(ids, schema=f"{col_name} long")

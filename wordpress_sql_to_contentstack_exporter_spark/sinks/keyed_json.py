@@ -13,15 +13,6 @@ struct per entry in ONE ``collect()``, and every document and mapping of
 an export module is built from that one list, so the module's plan runs
 once. These files are human-scale (content entries, not fact data).
 
-For fact-scale output ``write_keyed_json_sharded`` (VERDICT r4 ask #8)
-removes the driver ``collect()`` entirely: entries are rendered and
-range-sorted on executors, written as ordered text shards, then PACKAGED
-into the same keyed document by streaming the shard files in filename
-order — O(1) driver memory, bounded by disk bandwidth, never by entry
-count. (For line-oriented output ``df.write.json`` remains the
-plain-writer alternative; the sharded writer exists when the
-keyed-document FORMAT itself is the contract.)
-
 Crash safety: every document goes through ``atomic_open`` — written to a
 temp file beside the target and ``os.replace``-d into place — so a crash
 mid-write leaves the previous document (or none), never a truncated one.
@@ -32,10 +23,8 @@ naming its path instead of a bare ``JSONDecodeError``.
 from __future__ import annotations
 
 import contextlib
-import glob
 import json
 import os
-import shutil
 from collections.abc import Iterable
 from operator import itemgetter
 from typing import Any, NamedTuple
@@ -120,49 +109,6 @@ def write_keyed_json(entries: Iterable[tuple[str, Any]], *, path: str) -> Writte
     keeps its last entry."""
     doc = dict(sorted(entries, key=itemgetter(0)))
     return Written(write_document(path, doc), len(doc))
-
-
-def write_keyed_json_sharded(df: DataFrame, key: Column, value: Column, path: str) -> Written:
-    """Fact-scale keyed-JSON assembly with NO driver collect.
-
-    Plan: each entry renders to a single-pair JSON fragment on the
-    executors (``to_json`` of a one-entry map — to_json handles the
-    key's JSON escaping), range-repartitioned + sorted by key so the
-    numbered shard files come out in global key order (range partition i
-    holds keys entirely below partition i+1's). The packaging step then
-    streams the shards in filename order into the final ``{...}``
-    document — the driver never holds more than one line in memory, so
-    the ceiling is disk bandwidth, not heap. Output parses identically
-    to ``write_keyed_json`` over ``render_entries`` (entry order sorted
-    by key); under duplicate keys it would emit both, so dedup upstream."""
-    shard_dir = path + ".shards"
-    fragment = F.to_json(
-        F.map_from_arrays(F.array(key.cast("string")), F.array(value))
-    )
-    (
-        df.select(key.cast("string").alias("__k"), fragment.alias("__frag"))
-        .repartitionByRange("__k")
-        .sortWithinPartitions("__k")
-        .select("__frag")
-        .write.mode("overwrite")
-        .text(shard_dir)
-    )
-    entries = 0
-    try:
-        with atomic_open(path) as out:
-            for part in sorted(glob.glob(os.path.join(shard_dir, "part-*"))):
-                with open(part) as f:
-                    for line in f:
-                        line = line.strip()
-                        if not line:
-                            continue
-                        # strip the one-entry map's outer braces -> `"k": {...}`
-                        out.write(("," if entries else "{") + "\n    " + line[1:-1])
-                        entries += 1
-            out.write("\n}" if entries else "{}")
-    finally:
-        shutil.rmtree(shard_dir, ignore_errors=True)
-    return Written(os.path.getsize(path), entries)
 
 
 def merge_keyed_json(entries: Iterable[tuple[str, Any]], *, path: str) -> Written:

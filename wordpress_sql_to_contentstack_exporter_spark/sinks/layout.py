@@ -1,30 +1,17 @@
-"""Data-layout writer: partitioned, clustered parquet for prunable scans.
+"""Two-column Morton (Z-order) sort key for clustered parquet writes.
 
-At 100 TB the fastest query is the one that never reads most of the
-data. Three pruning levers, all decided at WRITE time:
-
-1. **Partition pruning** — hive-style ``partitionBy`` directories; a
-   filter on the partition column eliminates whole directories at plan
-   time (``PartitionFilters`` in the scan node).
-2. **Row-group pruning** — parquet footers store per-column min/max;
-   they only help if values are CLUSTERED. ``sortWithinPartitions``
-   makes each file (and row group) cover a narrow value range, so a
-   point/range filter skips almost all of them.
-3. **Multi-dimensional clustering** — sorting by one column leaves the
-   other columns' per-file ranges full-width. Interleaving the bits of
-   two sort keys (``zorder_key``, Morton order) bounds BOTH columns'
-   per-file ranges at once — the standard Delta/Iceberg Z-ORDER trick,
-   done here as pure codegen bit arithmetic.
-
-Nothing here is proprietary engine magic: it composes
-``repartition`` + ``sortWithinPartitions`` + ``maxRecordsPerFile`` so
-the resulting directory tree is a plain parquet dataset any reader
-prunes for free.
+Parquet footers store per-column min/max; they only prune row groups
+when values are CLUSTERED. Sorting by one column leaves the other
+columns' per-file ranges full-width; sorting by the interleaved bits of
+two keys (``zorder_key``) bounds BOTH columns' per-file ranges at once —
+the Delta/Iceberg Z-ORDER trick, as pure codegen bit arithmetic. Sort
+with it inside ``sortWithinPartitions`` before the write; the result is
+a plain parquet dataset any stats-based reader prunes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: Bits per column in the Z-order interleave. 31 keeps the interleaved
@@ -55,97 +42,3 @@ def zorder_key(a: Column, b: Column, *, bits: int = 21) -> Column:
         [a.cast("long").bitwiseAND(mask), b.cast("long").bitwiseAND(mask)],
         bits=bits,
     )
-
-
-def write_layout(
-    df: DataFrame,
-    path: str,
-    *,
-    partition_by: list[str] | None = None,
-    sort_by: list[str] | None = None,
-    zorder_by: tuple[str, str] | None = None,
-    target_file_rows: int | None = None,
-    n_files_per_partition: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as a pruning-friendly parquet dataset.
-
-    - ``partition_by``: hive directory partitioning (low-cardinality
-      columns only — every distinct value is a directory).
-    - ``sort_by``: cluster rows within files so footer min/max prune
-      (range/point filters on these columns skip files).
-    - ``zorder_by``: two-column Morton clustering instead of a linear
-      sort (mutually exclusive with ``sort_by``); the synthetic key is
-      dropped from the output.
-    - ``target_file_rows``: caps rows per file (``maxRecordsPerFile``) —
-      bounds both file size and the blast radius of a single straggler.
-    - ``n_files_per_partition``: repartition count per partition value;
-      defaults to the session's shuffle parallelism for unpartitioned
-      writes and 1 file per hive partition otherwise (small dimension
-      exports); raise it for large fact tables.
-
-    The repartition-by-partition-columns step is what keeps the write
-    scalable: without it every task holds open files for every hive
-    partition it happens to see (the classic small-files + OOM write
-    pattern); with it each partition's rows converge to dedicated tasks.
-    """
-    if sort_by and zorder_by:
-        raise ValueError("sort_by and zorder_by are mutually exclusive")
-    out = df
-    zcol = "__zorder"
-    sort_cols: list[str] = []
-    if zorder_by is not None:
-        out = out.withColumn(zcol, zorder_key(F.col(zorder_by[0]), F.col(zorder_by[1])))
-        sort_cols = [zcol]
-    elif sort_by:
-        sort_cols = list(sort_by)
-
-    if partition_by:
-        n = n_files_per_partition or 1
-        if n == 1:
-            out = out.repartition(*[F.col(c) for c in partition_by])
-        else:
-            # salt spreads one hive partition over n tasks/files. The
-            # salt is a SHUFFLE KEY, so it must be deterministic under
-            # task recompute (fetch failure / executor loss): a content
-            # hash, never spark_partition_id()/monotonically_increasing_id()
-            # (an earlier draft used partition id — stable only while the
-            # upstream row->partition map is; the hash is unconditionally
-            # stable). Exact duplicate rows share a salt, which for file
-            # spreading costs at most mild imbalance, not correctness.
-            from ..operators.skew import hashable_salt_cols
-
-            hashable = hashable_salt_cols(out)
-            if not [c for c in hashable if c not in (partition_by or [])]:
-                # with only partition columns hashable, the salt is
-                # CONSTANT within each hive partition — every partition
-                # silently converges to one task/file, re-creating the
-                # exact straggler problem the salt exists to fix
-                # (round-8 review finding). Fail with the real reason.
-                raise ValueError(
-                    "write_layout: no hashable (map-free) column outside "
-                    "partition_by to derive the file-spread salt from — "
-                    "add a non-map payload column or use "
-                    "n_files_per_partition=1"
-                )
-            out = out.repartition(
-                *[F.col(c) for c in partition_by],
-                F.pmod(
-                    F.xxhash64(*[F.col(c) for c in hashable]), F.lit(n)
-                ).alias("__salt"),
-            )
-    elif n_files_per_partition:
-        out = out.repartition(n_files_per_partition)
-
-    if sort_cols:
-        out = out.sortWithinPartitions(*(partition_by or []), *sort_cols)
-    if zorder_by is not None:
-        # the synthetic key ordered the rows; the projection that drops it
-        # does not reorder them
-        out = out.drop(zcol)
-    writer = out.write.mode(mode)
-    if target_file_rows:
-        writer = writer.option("maxRecordsPerFile", target_file_rows)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
