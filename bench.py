@@ -141,7 +141,9 @@ def dedup_tier(spark, sf_dir: str, base_docs: int, variants: int) -> dict:
         # tier). ``key`` is now the honest end-to-end wall;
         # ``{key}_action`` keeps the pre-r15 action-only convention so
         # cross-round tables remain comparable.
-        walls, walls_action = [], []
+        # ``{key}_build`` is the construction wall alone (Python-side
+        # plan building plus whatever the build executes eagerly).
+        walls, walls_action, walls_build = [], [], []
         for _ in range(3):
             spark.catalog.clearCache()
             t0 = time.perf_counter()
@@ -151,9 +153,11 @@ def dedup_tier(spark, sf_dir: str, base_docs: int, variants: int) -> dict:
             t2 = time.perf_counter()
             walls.append(round(t2 - t0, 3))
             walls_action.append(round(t2 - t1, 3))
+            walls_build.append(round(t1 - t0, 3))
         out[key] = sorted(walls)[1]
         out[f"{key}_runs"] = walls
         out[f"{key}_action"] = sorted(walls_action)[1]
+        out[f"{key}_build"] = sorted(walls_build)[1]
 
     # same shapes as the SCALE.md probe (16 hashes / 2 bands; hamming<=3
     # at a 20-bit block)
@@ -713,6 +717,9 @@ def main() -> None:
     # must be readable from the artifact so round-over-round drift can
     # be separated from VM noise without a footnote)
     timings_runs: dict[str, list] = {}
+    # the median construction wall (query function call, no action) of
+    # the same three warm runs, beside the end-to-end wall
+    timings_build: dict[str, float] = {}
     for name in HEADLINE:
         fn = SPARK_QUERIES[name]
         t0 = time.perf_counter()
@@ -723,13 +730,16 @@ def main() -> None:
         # downward; the median is still robust to ONE host-transient
         # window — this VM has documented CPU-contention spells that
         # inflate every wall ~4x — without the optimistic bias).
-        warm = []
+        warm, builds = [], []
         for _ in range(3):
             t1 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            df = fn(spark, sf_dir)
+            builds.append(round(time.perf_counter() - t1, 3))
+            df.write.format("noop").mode("overwrite").save()
             warm.append(round(time.perf_counter() - t1, 3))
         timings[name] = sorted(warm)[1]
         timings_runs[name] = warm
+        timings_build[name] = sorted(builds)[1]
 
     total = round(sum(timings.values()), 3)
     result = {
@@ -749,6 +759,7 @@ def main() -> None:
         "queries": timings,
         "queries_cold": timings_cold,
         "queries_runs": timings_runs,
+        "queries_build": timings_build,
         "total_cold": round(sum(timings_cold.values()), 3),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "sf_dir": sf_dir,

@@ -7,24 +7,26 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from wordpress_sql_to_contentstack_exporter_spark.sinks import zorder_key
+from wordpress_sql_to_contentstack_exporter_spark.operators import layout as lay
 
 
 def test_zorder_key_is_morton_interleave(spark):
+    # inputs masked to ``bits`` first, as zorder_key asks of its callers
+    mask = F.lit((1 << 3) - 1)
     rows = spark.range(1).select(
-        zorder_key(F.lit(0b101), F.lit(0b011), bits=3).alias("z")
+        lay.zorder_key(
+            [F.lit(0b101).bitwiseAND(mask), F.lit(0b1011).bitwiseAND(mask)], bits=3
+        ).alias("z")
     ).collect()
-    # a=101, b=011 -> interleave (a even positions, b odd):
+    # a=101, b=1011 masked to 011 -> interleave (a even positions, b odd):
     # bit0=a0=1, bit1=b0=1, bit2=a1=0, bit3=b1=1, bit4=a2=1, bit5=b2=0
     assert rows[0]["z"] == 0b011011
 
 
 # ---------------------------------------------------------------------------
-# operators/layout.py — the analysis side (n-dim key, deterministic file
-# assignment, min/max skip audit)
+# the analysis side (n-dim key, deterministic file assignment, min/max
+# skip audit)
 # ---------------------------------------------------------------------------
-
-from wordpress_sql_to_contentstack_exporter_spark.operators import layout as lay
 
 
 def _py_morton(vals, bits):

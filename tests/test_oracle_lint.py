@@ -202,8 +202,8 @@ def test_family_e_no_raw_ts_window_ordering():
 # (or partial aggregates) are duplicated or dropped. Failure-free local
 # runs are multiset-identical either way, so no oracle can catch it;
 # only this lint can. Deterministic replacement: xxhash64 over a unique
-# id / the whole row (operators/skew.py, operators/temporal.py,
-# sinks/layout.py all carry the worked fix).
+# id / the whole row (operators/skew.py and operators/temporal.py carry
+# the worked fix).
 # NOTE the matching is over TOKENIZED code re-joined with single spaces
 # ("F.rand()" reads "F . rand ( )"), so qualifier-anchored patterns like
 # \bF\.rand can never fire (round-8 review finding) — match the bare

@@ -7,7 +7,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from wordpress_sql_to_contentstack_exporter_spark.sinks.layout import zorder_key
+from wordpress_sql_to_contentstack_exporter_spark.operators.layout import zorder_key
 
 
 def _deinterleave(z: int, bits: int) -> tuple[int, int]:
@@ -24,8 +24,9 @@ def _deinterleave(z: int, bits: int) -> tuple[int, int]:
     st.integers(min_value=0, max_value=(1 << 21) - 1),
 )
 def test_zorder_key_roundtrips(spark, a, b):
+    mask = F.lit((1 << 21) - 1)
     z = spark.range(1).select(
-        zorder_key(F.lit(a), F.lit(b), bits=21).alias("z")
+        zorder_key([F.lit(a).bitwiseAND(mask), F.lit(b).bitwiseAND(mask)], bits=21).alias("z")
     ).collect()[0]["z"]
     assert z >= 0
     assert _deinterleave(z, 21) == (a, b)

@@ -138,7 +138,7 @@ def test_dlq_merge_semantics(tmp_path):
 
 
 def test_unique_validation_ignores_nulls(spark):
-    from wordpress_sql_to_contentstack_exporter_spark.plans.validate import ContentType, FieldRule
+    from test_wordpress_pipeline import ContentType, FieldRule
 
     ct = ContentType("t", [FieldRule("url", unique=True)])
     df = spark.createDataFrame([(None,), (None,), ("a",), ("a",)], "url string")

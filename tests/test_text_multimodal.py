@@ -6,9 +6,31 @@ from __future__ import annotations
 import hashlib
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from wordpress_sql_to_contentstack_exporter_spark.operators import multimodal as mm
 from wordpress_sql_to_contentstack_exporter_spark.operators import text as tx
+
+#: The media-row shape the multimodal operators read: payload + typed
+#: metadata.
+MEDIA_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("content", T.BinaryType(), True),
+        T.StructField(
+            "meta",
+            T.StructType(
+                [
+                    T.StructField("mime", T.StringType(), True),
+                    T.StructField("width", T.IntegerType(), True),
+                    T.StructField("height", T.IntegerType(), True),
+                    T.StructField("duration_ms", T.LongType(), True),
+                ]
+            ),
+            True,
+        ),
+    ]
+)
 
 
 def test_token_counts(spark):
@@ -653,7 +675,7 @@ def test_sample_frames_y4m_real_extraction(spark):
             (1, bytearray(stream), ("video/y4m", w, h, None)),
             (2, bytearray(b"JUNKJUNKJUNK"), ("video/mp4", None, None, 1500)),
         ],
-        mm.MEDIA_SCHEMA,
+        MEDIA_SCHEMA,
     )
     rows = {
         (r["media_id"], r["frame_idx"]): r
@@ -768,7 +790,7 @@ def test_audio_features_real_wav_and_stub_fallback(spark):
             (2, bytearray(b"JUNK"), ("audio/mp3", None, None, None)),
             (3, None, ("audio/wav", None, None, None)),
         ],
-        mm.MEDIA_SCHEMA,
+        MEDIA_SCHEMA,
     )
     rows = {r["media_id"]: r for r in mm.audio_features(media, decoder="auto").collect()}
     r1 = rows[1]

@@ -31,8 +31,6 @@ from pyspark.sql import functions as F
 
 from .dates import padded_day, padded_month, year_str
 
-_PLACEHOLDERS = {"%post_id%", "%year%", "%monthnum%", "%day%", "%postname%"}
-
 
 def _segment_expr(
     segment: str, post_id: Column, date_gmt: Column, post_name: Column

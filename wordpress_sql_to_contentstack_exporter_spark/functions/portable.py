@@ -89,11 +89,6 @@ from pyspark.sql import functions as F
 PORTABLE_WS = r"[ \t\n\r\f\x0b]"
 PORTABLE_WS_PLUS = PORTABLE_WS + "+"
 
-# The same pattern for embedding in DuckDB oracle SQL (RE2 reads the
-# backslash escapes; keep ONE source of truth so the two sides cannot
-# drift).
-SQL_WS_PLUS = PORTABLE_WS_PLUS
-
 
 def portable_lower(col: Column) -> Column:
     """Unicode lowercase with the two JVM/utf8proc divergences removed.

@@ -10,18 +10,14 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: The reference's host-strip regex ``/^(?:\/\/|[^\/]+)*\//`` (posts.js:149).
-#: NOT used directly: the pattern has catastrophic backtracking (ReDoS) —
-#: a slash-free input of n chars costs O(2^n) in both Java and JS regex
-#: engines, which at scale means one malformed guid hangs an executor
-#: task. The implementation below reproduces its exact semantics in
-#: linear time.
-_HOST_STRIP_RE = r"^(?:\/\/|[^\/]+)*\/"
+# The reference's host-strip regex ``/^(?:\/\/|[^\/]+)*\//`` (posts.js:149)
+# is not used: it backtracks catastrophically (ReDoS) — a slash-free
+# input of n chars costs O(2^n) in both Java and JS regex engines, which
+# at scale means one malformed guid hangs an executor task. ``host_strip``
+# below reproduces its exact semantics in linear time.
 
 #: First MAXIMAL odd-length slash run (not preceded/followed by '/').
 _ODD_RUN_RE = r"(?<![/])(?:(?:[/]{2})*[/])(?![/])"
-#: The LAST '/' of the string (and everything after it).
-_LAST_RUN_RE = r"/[^/]*$"
 
 
 def host_strip(url: Column | str) -> Column:

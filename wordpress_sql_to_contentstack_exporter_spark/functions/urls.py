@@ -95,12 +95,6 @@ def registrable_domain(host: Column) -> Column:
     return F.when(h == "", F.lit("")).otherwise(F.coalesce(three, two, h))
 
 
-#: Query parameters dropped by url_normalize: analytics/click trackers
-#: that never change the resource. Prefix-matched as "<name>=" except
-#: utm_ which covers the whole utm_* family.
-_TRACKING_PREFIXES = ["utm_", "ref=", "fbclid=", "gclid=", "mc_cid=", "mc_eid="]
-
-
 def url_normalize(url: Column) -> Column:
     """Canonical URL form for crawl/link dedup — the normalization pass
     that runs BEFORE URL-keyed dedup so `HTTP://Site.com:80/a?utm_x=1`

@@ -4,16 +4,10 @@ from .relational import (
     eav_pivot,
     hierarchy_parent_join,
 )
-from . import classify, dedup, multimodal, similarity, text
 
 __all__ = [
     "broadcast_lookup",
     "decorrelated_group_concat",
     "eav_pivot",
     "hierarchy_parent_join",
-    "classify",
-    "dedup",
-    "multimodal",
-    "similarity",
-    "text",
 ]

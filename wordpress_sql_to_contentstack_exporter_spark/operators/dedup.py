@@ -10,6 +10,16 @@ Scale design notes (the point of this module):
   tunable bucket sizes (more bands/rows per band trade recall vs cost).
 - All signature math is built-in expressions over arrays (xxhash64,
   transform/aggregate) — JVM-side, no Python.
+- Wide expressions are SQL text. An expression of tens of terms (the
+  per-bit aggregates and sign folds of SimHash, combo keys, the
+  intact-block mask, literal lookup tables, MinHash seeds and band
+  keys) is built as one ``F.expr``/``selectExpr`` string, not as a tree
+  of Column calls: every Column node costs Python->JVM round trips at
+  build time, and the SimHash headline query built node by node made
+  ~16,000 of them (2.6 s of building for a 0.64 s action). The strings
+  parse to the same expressions, so outputs are unchanged
+  (``tests/test_build_layer.py`` compares them with the Column-built
+  forms).
 """
 
 from __future__ import annotations
@@ -194,7 +204,7 @@ def minhash_signatures_df(
             F.explode(char_shingles(F.col(text_col), shingle_k)).alias("sh"),
         )
     return exploded.groupBy("id").agg(
-        *[F.min(F.xxhash64("sh", F.lit(s))).alias(f"h{s}") for s in range(num_hashes)]
+        *[F.expr(f"min(xxhash64(sh, {s})) AS h{s}") for s in range(num_hashes)]
     )
 
 
@@ -236,20 +246,14 @@ def minhash_banded(
     )
     rows_per_band = num_hashes // bands
     h_cols = [f"h{i}" for i in range(num_hashes)]
-
-    band_struct = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[F.col(f"h{i}") for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
+    band_struct = ", ".join(
+        f"named_struct('band', {b}, 'bucket', xxhash64("
+        + ", ".join(h_cols[b * rows_per_band : (b + 1) * rows_per_band])
+        + "))"
+        for b in range(bands)
     )
-    return sigs.select("id", *h_cols, F.explode(band_struct).alias("bb")).select(
-        "id", *h_cols, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    return sigs.selectExpr("id", *h_cols, f"explode(array({band_struct})) AS bb").selectExpr(
+        "id", *h_cols, "bb.band AS band", "bb.bucket AS bucket"
     )
 
 
@@ -387,22 +391,18 @@ def minhash_lsh_candidates(
     # pipeline; shrinking it ~10x beats saving duplicate 16-element
     # comparisons. The estimate itself is a codegen'd sum of primitive
     # column equalities (see ``minhash_banded`` on why not zip_with).
-    matches = None
-    for i in range(num_hashes):
-        piece = (F.col(f"l.h{i}") == F.col(f"r.h{i}")).cast("int")
-        matches = piece if matches is None else matches + piece
-    est = matches / F.lit(num_hashes)
+    matches = " + ".join(
+        f"CAST(l.h{i} = r.h{i} AS INT)" for i in range(num_hashes)
+    )
     return (
         left.join(
             right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
+            F.expr("l.band = r.band AND l.bucket = r.bucket AND l.id < r.id"),
         )
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.round(est, 4).alias("est_jaccard"),
+        .selectExpr(
+            "l.id AS id_a",
+            "r.id AS id_b",
+            f"round(({matches}) / {num_hashes}, 4) AS est_jaccard",
         )
         .filter(F.col("est_jaccard") >= min_est_jaccard)
         .dropDuplicates(["id_a", "id_b"])
@@ -460,17 +460,15 @@ def simhash_df(
     bit_sums = toks.groupBy("id").agg(
         F.count(F.lit(1)).alias("__n"),
         *[
-            F.sum(F.shiftright("th", b).bitwiseAND(F.lit(1))).alias(f"b{b}")
+            F.expr(f"sum(shiftright(th, {b}) & 1) AS b{b}")
             for b in range(SIMHASH_BITS)
         ],
     )
-    value = None
-    for b in range(SIMHASH_BITS):
-        piece = F.when(
-            F.col(f"b{b}") * 2 > F.col("__n"), F.lit(1 << b).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        value = piece if value is None else value + piece
-    return bit_sums.select("id", value.alias(out_col))
+    value = " + ".join(
+        f"CASE WHEN b{b} * 2 > __n THEN {1 << b}L ELSE 0L END"
+        for b in range(SIMHASH_BITS)
+    )
+    return bit_sums.selectExpr("id", f"{value} AS `{out_col}`")
 
 
 def _rotl63(v: Column, s: int) -> Column:
@@ -792,10 +790,10 @@ def simhash_blocked_pairs_from_sigs(
         key = None
         for b in subset:
             off, w = splits[b]
-            piece = F.shiftright(F.col("sh"), off).bitwiseAND(F.lit((1 << w) - 1))
-            key = piece if key is None else F.shiftleft(key, w).bitwiseOR(piece)
-        combos.append(F.shiftleft(F.lit(t).cast("long"), key_width).bitwiseOR(key))
-    keyed = sigs.select("id", "sh", F.explode(F.array(*combos)).alias("k"))
+            piece = f"(shiftright(sh, {off}) & {(1 << w) - 1})"
+            key = piece if key is None else f"(shiftleft({key}, {w}) | {piece})"
+        combos.append(f"(shiftleft({t}L, {key_width}) | {key})")
+    keyed = sigs.selectExpr("id", "sh", f"explode(array({', '.join(combos)})) AS k")
     if materialize:
         # keyed feeds the cap count AND both sides of the self-join —
         # checkpoint BEFORE the cap so the explode runs once, not three
@@ -815,34 +813,23 @@ def simhash_blocked_pairs_from_sigs(
         )
         keyed = keyed.join(F.broadcast(hot), ["k"], "left_anti")
     left, right = keyed.alias("l"), keyed.alias("r")
-    x = F.col("l.sh").bitwiseXOR(F.col("r.sh"))
-    intact_mask = None
-    for b, (off, w) in enumerate(splits):
-        bit = F.when(
-            F.shiftright(x, off).bitwiseAND(F.lit((1 << w) - 1)) == 0,
-            F.lit(1 << b),
-        ).otherwise(F.lit(0))
-        intact_mask = bit if intact_mask is None else intact_mask + bit
-    out_cols = [
-        F.col("l.id").alias("id_a"),
-        F.col("r.id").alias("id_b"),
-        F.bit_count(x).alias("hamming"),
-    ]
+    x = "(l.sh ^ r.sh)"
+    intact_mask = " + ".join(
+        f"CASE WHEN (shiftright({x}, {off}) & {(1 << w) - 1}) = 0 THEN {1 << b} ELSE 0 END"
+        for b, (off, w) in enumerate(splits)
+    )
+    lookup = f"array({', '.join(map(str, first_combo))})"
+    out_cols = ["l.id AS id_a", "r.id AS id_b", f"bit_count({x}) AS hamming"]
     if include_signatures:
-        out_cols += [F.col("l.sh").alias("sh_a"), F.col("r.sh").alias("sh_b")]
+        out_cols += ["l.sh AS sh_a", "r.sh AS sh_b"]
     return (
-        left.join(
-            right,
-            (F.col("l.k") == F.col("r.k")) & (F.col("l.id") < F.col("r.id")),
-        )
-        .filter(F.bit_count(x) <= max_hamming)
+        left.join(right, F.expr("l.k = r.k AND l.id < r.id"))
+        .filter(f"bit_count({x}) <= {max_hamming}")
         .filter(
-            F.shiftright(F.col("l.k"), key_width)
-            == F.element_at(F.lit(first_combo), (intact_mask + 1).cast("int")).cast(
-                "long"
-            )
+            f"shiftright(l.k, {key_width}) = "
+            f"CAST(element_at({lookup}, CAST({intact_mask} + 1 AS INT)) AS BIGINT)"
         )
-        .select(*out_cols)
+        .selectExpr(*out_cols)
     )
 
 
@@ -1694,18 +1681,15 @@ def simhash_portable_signatures(
     per_tok = tf.select("id", "tf", h.alias("h"))
     sums = per_tok.groupBy("id").agg(
         *[
-            F.sum(
-                F.col("tf")
-                * (F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) * 2 - 1)
-            ).alias(f"s{j}")
+            F.expr(f"sum(tf * ((shiftright(h, {j}) & 1) * 2 - 1)) AS s{j}")
             for j in range(SIMHASH_PORTABLE_BITS)
         ]
     )
-    simhash = None
-    for j in range(SIMHASH_PORTABLE_BITS):
-        piece = F.when(F.col(f"s{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        simhash = piece if simhash is None else simhash + piece
-    return sums.select("id", simhash.cast("long").alias("sh"))
+    simhash = " + ".join(
+        f"CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END"
+        for j in range(SIMHASH_PORTABLE_BITS)
+    )
+    return sums.selectExpr("id", f"CAST({simhash} AS BIGINT) AS sh")
 
 
 def simhash_portable_pairs(

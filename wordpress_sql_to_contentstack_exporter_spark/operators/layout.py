@@ -27,13 +27,11 @@ Pieces:
   a file is scanned iff its [min,max] envelope intersects the box,
   which is exactly the pruning rule a stats-based reader applies.
 
-``sinks.layout.zorder_key`` is the 2-column write-side sort key and
-delegates its interleave to :func:`zorder_key` here; per-file stats of a
-written dataset come for free from the parquet footers. This module is
-the ANALYSIS side: the rank construction is the oracle-able skeleton of
-the same assignment (the audit needs deterministic file boundaries to
-be checkable cross-engine), and the audit quantifies what the layout
-buys.
+Per-file stats of a dataset written sorted by :func:`zorder_key` come
+for free from the parquet footers. This module is the ANALYSIS side:
+the rank construction is the oracle-able skeleton of the same
+assignment (the audit needs deterministic file boundaries to be
+checkable cross-engine), and the audit quantifies what the layout buys.
 """
 
 from __future__ import annotations

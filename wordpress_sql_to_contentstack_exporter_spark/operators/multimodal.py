@@ -30,26 +30,6 @@ from pyspark.sql import types as T
 
 from . import png as _png
 
-#: Canonical media-row schema: payload + typed metadata.
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType(), True),
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("duration_ms", T.LongType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
 #: Output of the (stubbed) feature-extraction stage.
 FEATURES_SCHEMA = T.StructType(
     [
@@ -171,7 +151,8 @@ def decode_stub(df: DataFrame, *, batch_hint: int = 1024) -> DataFrame:
 
 
 def synthesize_media_from_documents(docs: DataFrame) -> DataFrame:
-    """Build a MEDIA_SCHEMA-shaped DataFrame from the ``documents`` fixture
+    """Build a media-row DataFrame (``media_id``, binary ``content``,
+    ``meta`` struct of mime/width/height/duration_ms) from the ``documents`` fixture
     (text bytes as payload) so the multimodal plumbing is exercisable
     without binary fixtures."""
     return docs.select(

@@ -906,11 +906,14 @@ def hyperplane_signature(
     array expressions — broadcast by the plan, no side channel.
     """
     vd = _as_double(vec)
-    bits = [
-        F.when(
-            dot(vd, F.array(*[F.lit(float(p)) for p in plane])) >= 0, F.lit(1)
-        ).otherwise(F.lit(0))
+    # one SQL array literal per plane: F.array(*[F.lit(p) ...]) costs a
+    # few Python->JVM calls per coordinate at build time
+    arrays = [
+        F.expr("array(" + ", ".join(f"{float(p)!r}D" for p in plane) + ")")
         for plane in planes
+    ]
+    bits = [
+        F.when(dot(vd, arr) >= 0, F.lit(1)).otherwise(F.lit(0)) for arr in arrays
     ]
     # long accumulator: an int fold overflows (ANSI abort) at >= 32 planes
     sig = bits[0].cast("long")
