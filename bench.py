@@ -106,13 +106,6 @@ def dedup_tier(spark, sf_dir: str, base_docs: int, variants: int) -> dict:
         "base_docs": base_docs,
         "variants": variants,
         "docs": base_docs * variants,
-        # Schema marker (ADVICE r15 #1): since r15 the bare ``{key}``
-        # walls are END-TO-END (build + action; the build executes
-        # checkpointed shuffle stages under AQE) while ``{key}_action``
-        # keeps the pre-r15 action-only convention. Cross-round tooling
-        # must compare bare keys only against artifacts carrying this
-        # marker, and pre-r15 bare keys against ``{key}_action``.
-        "wall_convention": "e2e_build_plus_action_since_r15",
     }
 
     def timed(key: str, build) -> None:
@@ -130,20 +123,16 @@ def dedup_tier(spark, sf_dir: str, base_docs: int, variants: int) -> dict:
         # and a cache-hit wall is not a steady-state wall. Nothing else
         # in this tier caches, so the clear has no collateral.
         #
-        # r15 MEASUREMENT FIX (guide §1.4, disclosed in
-        # OPTIMIZATION_r15.md): the timer now starts BEFORE build().
-        # Under AQE, ``localCheckpoint(eager=False)`` executes every
-        # upstream shuffle stage when the plan is converted to an RDD —
-        # i.e. at CONSTRUCTION — so operators built around internal
-        # checkpoints (setsim_join, simhash/minhash candidate gens) ran
-        # most of their work outside the old timed region (measured:
-        # setsim_join construct 48-51 s vs action 12-15 s at the 200k-doc
-        # tier). ``key`` is now the honest end-to-end wall;
-        # ``{key}_action`` keeps the pre-r15 action-only convention so
-        # cross-round tables remain comparable.
+        # The timer starts BEFORE build(): under AQE,
+        # ``localCheckpoint(eager=False)`` executes every upstream
+        # shuffle stage when the plan is converted to an RDD — i.e. at
+        # CONSTRUCTION — so operators built around internal checkpoints
+        # (setsim_join, simhash/minhash candidate gens) do most of their
+        # work there (measured: setsim_join construct 48-51 s vs action
+        # 12-15 s at the 200k-doc tier). ``key`` is the end-to-end wall;
         # ``{key}_build`` is the construction wall alone (Python-side
         # plan building plus whatever the build executes eagerly).
-        walls, walls_action, walls_build = [], [], []
+        walls, walls_build = [], []
         for _ in range(3):
             spark.catalog.clearCache()
             t0 = time.perf_counter()
@@ -152,21 +141,17 @@ def dedup_tier(spark, sf_dir: str, base_docs: int, variants: int) -> dict:
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
             walls.append(round(t2 - t0, 3))
-            walls_action.append(round(t2 - t1, 3))
             walls_build.append(round(t1 - t0, 3))
         out[key] = sorted(walls)[1]
         out[f"{key}_runs"] = walls
-        out[f"{key}_action"] = sorted(walls_action)[1]
         out[f"{key}_build"] = sorted(walls_build)[1]
 
-    # same shapes as the SCALE.md probe (16 hashes / 2 bands; hamming<=3
-    # at a 20-bit block)
+    # same shapes as the SCALE.md probe (16 hashes / 2 bands; hamming<=3)
     timed("exact_dedup", lambda: dd.exact_dedup(corpus))
     timed("minhash_neardup", lambda: dd.minhash_lsh_candidates(corpus, num_hashes=16, bands=2))
-    # round 12: unified on the exact combination blocking (k=3 -> 5
-    # blocks, 10 pair-of-block tables, ~25-bit keys) — same operator the
-    # registry headline ships; the rotation sweep stays available but is
-    # no longer the benched path (VERDICT r11 #3 A/B in SCALE.md)
+    # exact combination blocking (k=3 -> 5 blocks, 10 pair-of-block
+    # tables, ~25-bit keys) — the same operator the registry headline
+    # ships
     timed("simhash_neardup", lambda: dd.simhash_neardups_blocked(corpus, max_hamming=3, combo_r=2, max_block_size=1000))
     timed("paragraph_dedup", lambda: dd.paragraph_dedup(corpus))
     # round-5 doc-corpus additions: exact-recall set-similarity join
@@ -196,12 +181,6 @@ def dedup_tier(spark, sf_dir: str, base_docs: int, variants: int) -> dict:
     out.update(
         dd.minhash_bucket_stats(corpus, num_hashes=16, bands=2, max_bucket_size=1000)
     )
-    # SimHash block-skew telemetry (symmetric with the LSH bucket stats:
-    # correlated signatures pile non-near-dups into shared prefix blocks).
-    sim_stats = dd.simhash_block_stats(
-        dd.simhash_df(corpus), prefix_bits=20, max_block_size=1000
-    )
-    out.update({f"sim_{k}": v for k, v in sim_stats.items()})
     return out
 
 
@@ -325,7 +304,7 @@ def events_tier(spark, n_events: int) -> dict:
 def rolling_tier(spark, n_events: int) -> dict:
     """The rolling-window crossover probe (VERDICT r5 #4): at 1M events
     the plain (key-partitioned) window beat the chunked one (9.7 s vs
-    10.9 s, BENCH_r05) — this tier measures BOTH variants plus the
+    10.9 s) — this tier measures BOTH variants plus the
     ``rolling_anomaly_auto`` dispatcher at a 10x size, demonstrating the
     crossover the chunked docstring promises and recording which side
     the dispatcher chose at each tier (the 1M decision is in
@@ -484,210 +463,12 @@ def posts_tier(spark, n_posts: int) -> dict:
     }
 
 
-def _cpu_calibration() -> dict:
-    """Deterministic machine-speed probes, run before the JVM exists:
-
-    - ``sha256_256mib_s``: hash 256 MiB of fixed bytes on ONE thread —
-      C-speed, allocation-free, proportional to effective CPU frequency.
-    - ``pyloop_20m_s``: a 20M-iteration pure-Python integer loop —
-      interpreter dispatch speed (the driver-side cost component).
-
-    Both are single-threaded on purpose (a parallel probe would measure
-    co-tenancy, which the load stamps already cover) and sized to ~1 s
-    on current hardware so the stamp costs ~2 s per run."""
-    import hashlib
-
-    buf = bytes(range(256)) * 4096  # 1 MiB, deterministic
-    t0 = time.perf_counter()
-    h = hashlib.sha256()
-    for _ in range(256):
-        h.update(buf)
-    sha_s = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    acc = 0
-    for i in range(20_000_000):
-        acc += i
-    loop_s = time.perf_counter() - t0
-    return {
-        "sha256_256mib_s": round(sha_s, 4),
-        "pyloop_20m_s": round(loop_s, 4),
-    }
-
-
-def _calib_reference() -> dict | None:
-    """Latest driver-committed BENCH_r{N}.json at the repo root — the
-    reference walls + machine calibration for calib-adjusted deltas
-    (VERDICT r13 #4). Self-maintaining: every round the driver commits
-    its artifact, so the next run compares against it mechanically."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    # ADVICE r14 #3: once the CURRENT round's own BENCH_r{N}.json
-    # exists (the driver writes it before the next session opens), the
-    # newest-file rule would compare a re-run against itself (machine
-    # factor ~1, labeled a prior-round reference). The round being
-    # produced is VERDICT.md's round + 1 (the judge writes VERDICT for
-    # round N after round N's driver artifacts land), overridable via
-    # SPARK_GRAFT_ROUND; skip candidates at or past it.
-    cur_round = 0
-    if os.environ.get("SPARK_GRAFT_ROUND"):
-        cur_round = int(os.environ["SPARK_GRAFT_ROUND"])
-    else:
-        try:
-            # case-insensitive over the first few lines, not line 1
-            # only: a judge retitling "# Round 15 VERDICT" or moving
-            # the number down a line must not silently disable the
-            # own-round skip (review r15)
-            with open(os.path.join(here, "VERDICT.md")) as fh:
-                head = "".join(fh.readline() for _ in range(5))
-            m = re.search(r"round (\d+)", head, re.IGNORECASE)
-            if m:
-                cur_round = int(m.group(1)) + 1
-        except OSError:
-            pass
-    cands: list[tuple[int, str]] = []
-    for f in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", f)
-        if m and not (cur_round and int(m.group(1)) >= cur_round):
-            cands.append((int(m.group(1)), f))
-    # newest first; SKIP polluted references (review r14c #1: a
-    # load-contaminated baseline's walls and single-thread probes are
-    # contaminated DIFFERENTLY, so the machine factor would mis-correct
-    # and every adjusted ratio would read as a spurious code delta —
-    # the exact misreading this mechanism exists to prevent)
-    for rnd, f in sorted(cands, reverse=True):
-        try:
-            with open(f) as fh:
-                parsed = json.load(fh).get("parsed") or {}
-        except Exception:
-            continue
-        if parsed.get("polluted"):
-            continue
-        q, c = parsed.get("queries"), parsed.get("cpu_calib")
-        if not (isinstance(q, dict) and isinstance(c, dict)):
-            continue
-        if not all(
-            isinstance(v, (int, float)) and v > 0 for v in c.values()
-        ):
-            continue  # review r14c #2: a null/string probe value must
-            # not crash a 12-minute run at its final step
-        return {
-            "round": rnd,
-            "file": os.path.basename(f),
-            "queries": q,
-            "cpu_calib": c,
-            "value": parsed.get("value"),
-        }
-    return None
-
-
-def _calib_meta(timings: dict, cpu_calib: dict) -> dict | None:
-    """Calibration-normalized round-over-round deltas (VERDICT r13 #4).
-
-    Rounds 11-13 each spent verdict space re-litigating uniform wall
-    drift that the in-artifact calibration already explained (the
-    assigned VM's CPU class moves between rounds; r13 ran 18-24% slower
-    probes than r12). This makes the separation mechanical:
-    ``machine_factor`` is the geometric mean of this run's two probe
-    ratios vs the reference round's, and each headline line carries
-    ``raw_ratio`` (wall / ref_wall — what a naive compare reads) next
-    to ``calib_adjusted_ratio`` (raw_ratio / machine_factor — the
-    code-attributable delta). A real regression moves the adjusted
-    number; a VM spell moves only the raw one."""
-    ref = _calib_reference()
-    if ref is None:
-        return None
-    rc, tc = ref["cpu_calib"], cpu_calib
-    try:
-        f_sha = tc["sha256_256mib_s"] / rc["sha256_256mib_s"]
-        f_loop = tc["pyloop_20m_s"] / rc["pyloop_20m_s"]
-    except (KeyError, ZeroDivisionError, TypeError):
-        # never let the calib annotation kill the run's one stdout line
-        return None
-    machine_factor = round((f_sha * f_loop) ** 0.5, 4)
-    per_query = {}
-    shared_this = shared_ref = 0.0
-    for name, wall in timings.items():
-        rw = ref["queries"].get(name)
-        if not isinstance(rw, (int, float)) or rw <= 0:
-            continue
-        shared_this += wall
-        shared_ref += rw
-        per_query[name] = {
-            "wall": wall,
-            "ref_wall": rw,
-            "raw_ratio": round(wall / rw, 3),
-            "calib_adjusted_ratio": round(wall / rw / machine_factor, 3),
-        }
-    if not per_query:
-        return None
-    return {
-        "ref_round": ref["round"],
-        "ref_file": ref["file"],
-        "machine_factor": machine_factor,
-        "probe_ratios": {"sha256": round(f_sha, 4), "pyloop": round(f_loop, 4)},
-        "per_query": per_query,
-        "shared_total": round(shared_this, 3),
-        "shared_ref_total": round(shared_ref, 3),
-        "shared_raw_ratio": round(shared_this / shared_ref, 3),
-        "shared_calib_adjusted_ratio": round(
-            shared_this / shared_ref / machine_factor, 3
-        ),
-    }
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # host-load stamp (VERDICT r6 #3): r6's 59 s setsim_join reading was
-    # co-tenant noise (A/B band 24.7-27.7 s) and nothing in the artifact
-    # could say so; a load average at start/end makes a polluted run
-    # self-identifying.
-    #
-    # Load GUARD (VERDICT r8 #2): BENCH_r08 was taken at load1_end 5.77
-    # and read a uniform +29% vs r7 — a polluted artifact that
-    # masqueraded as a code regression until an idle-box re-timing
-    # disproved it. A stamp alone was not enough; now a loaded host is
-    # actively handled: wait up to SPARK_GRAFT_LOAD_WAIT seconds
-    # (default 600) for load1 to fall below SPARK_GRAFT_LOAD_MAX
-    # (default 2.5), and if it never does, run anyway but stamp
-    # "polluted": true in BOTH artifacts so the number can never again
-    # be read as a regression. Running-with-stamp beats refusing: the
-    # driver invokes bench unattended, and no artifact is worse than a
-    # self-identifying one.
-    load_max = float(os.environ.get("SPARK_GRAFT_LOAD_MAX", "2.5"))
-    load_wait = int(os.environ.get("SPARK_GRAFT_LOAD_WAIT", "600"))
-    waited = 0
-    while os.getloadavg()[0] > load_max and waited < load_wait:
-        print(
-            f"# bench: load1 {os.getloadavg()[0]:.2f} > {load_max}; "
-            f"waiting for quiet host ({waited}/{load_wait}s)",
-            flush=True,
-        )
-        time.sleep(30)
-        waited += 30
+    # host-load stamp: a load average at start and end makes a run
+    # taken on a busy host self-identifying.
     load_start = round(os.getloadavg()[0], 2)
-    polluted = load_start > load_max
-    if polluted:
-        print(
-            f"# bench: PROCEEDING ON LOADED HOST (load1 {load_start} > "
-            f"{load_max} after {load_wait}s) — artifact will be stamped "
-            "polluted; do not read it as a regression",
-            flush=True,
-        )
-    # Machine-speed calibration stamp (round 9): rounds 7→9 showed a
-    # UNIFORM wall drift (+29%, then +10% more) across queries whose
-    # code never changed, on idle hosts — the assigned VM's CPU class
-    # drifts between rounds, and without a machine stamp every such
-    # shift reads as a code regression until hand-adjudicated. Two
-    # fixed single-thread workloads timed before Spark starts give each
-    # artifact a deterministic hardware score; cross-round wall
-    # comparisons should be read as wall / calib ratio. (The DuckDB
-    # bench_compare ratio is the environment-neutral number either way —
-    # both engines run on the same machine.)
-    cpu_calib = _cpu_calibration()
-    print(f"# bench: cpu_calib {json.dumps(cpu_calib)}", flush=True)
 
     spark = get_spark("bench")
 
@@ -695,10 +476,9 @@ def main() -> None:
     # including one full untimed pass through the SAME noop-write path
     # the timed loop uses: the very first SQL write pays one-time costs
     # (codegen infra, AQE init, noop sink registration) that otherwise
-    # land on whichever query happens to run first. BENCH_r05 showed the
-    # hazard: agg_stats, first in HEADLINE, was the round's only cold
-    # regression (+23%) while its warm number improved — suite-position
-    # cost misattributed to the query (VERDICT r5 #7).
+    # land on whichever query happens to run first (measured: agg_stats,
+    # first in HEADLINE, read a +23% cold regression while its warm
+    # number improved — suite-position cost misattributed to the query).
     spark.read.parquet(f"{sf_dir}/orders.parquet").count()
     SPARK_QUERIES["count_group_by"](spark, sf_dir).write.format("noop").mode(
         "overwrite"
@@ -764,29 +544,6 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "sf_dir": sf_dir,
         "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-        # r14 REBASELINE (VERDICT r13 #2, option c — recorded, not
-        # silent): the exact-recall blocked simhash headline is accepted
-        # at its measured wall ± session spread; the ≤3 s ABSOLUTE bar
-        # is retired. Evidence: (1) the remaining wall decomposes into
-        # an irreducible 9.07M-candidate probe + signature build +
-        # per-action floor (SCALE.md round 13); (2) the prescribed
-        # final attack — an Arrow mapInPandas numpy-popcount signature
-        # build, byte-identical outputs — was implemented and A/B'd
-        # this round: 1.6x faster in isolation at 10k docs but
-        # equal-to-WORSE end-to-end and 1.5-4x slower at the 200k-doc
-        # dedup tier (SCALE.md round 14), so the JVM partial-agg build
-        # stays shipped; (3) the same shipped code measured 1.5-1.9 s
-        # on the r14 session vs 3.6-5.7 s on the r13 session — the bar
-        # was tracking VM class, not code. Going forward the line is
-        # judged by calib_vs_prev.per_query.simhash_neardup
-        # .calib_adjusted_ratio (~1.0 = no code regression), the
-        # measure this artifact now carries for every headline line.
-        "notes": (
-            "simhash_neardup r14: exact-recall wall rebaselined; <=3s "
-            "absolute bar retired in favor of calib_adjusted_ratio "
-            "(see calib_vs_prev); Arrow numpy sig-build A/B rejected "
-            "at tier scale (SCALE.md round 14)"
-        ),
     }
 
     # Flagship-pipeline scale tier (SPARK_GRAFT_POSTS=0 disables). Runs
@@ -835,30 +592,11 @@ def main() -> None:
 
     result["load1_start"] = load_start
     result["load1_end"] = round(os.getloadavg()[0], 2)
-    result["cpu_calib"] = cpu_calib
-    # polluted iff the host was loaded at START. The r9 clean run
-    # disproved the previous load1_end clause: bench's own final tier
-    # (rolling, ~2.5 min at 32 threads) leaves load1 at ~5 on a machine
-    # that was at 0.26 when the run began, so an end-load condition
-    # stamps EVERY artifact polluted and the flag stops carrying
-    # information. load1_end stays recorded so a mid-run co-tenant is
-    # still visible as an end-load far above bench's own tail (~5), but
-    # the stamp keys on the one number bench cannot self-inflate.
-    result["polluted"] = polluted
-    # VERDICT r13 #4: calib-adjusted deltas vs the previous round's
-    # committed driver artifact, so VM-class drift separates from code
-    # regressions mechanically instead of by per-round adjudication.
-    calib_meta = _calib_meta(result["queries"], cpu_calib)
-    if calib_meta is not None:
-        result["calib_vs_prev"] = calib_meta
-
-    # Two-artifact emission (VERDICT r6 #3): BENCH_r06's final JSON line
-    # outgrew the driver's tail capture as tiers were added ("parsed":
-    # null — the round's headline number was unrecoverable). The FULL
-    # result now goes to a committed repo file (the evidence of record),
-    # and the absolute last stdout line is a COMPACT headline (<1.5 KB:
-    # totals, per-query medians, per-tier totals, load stamps) that can
-    # never outgrow a tail buffer again.
+    # Two-artifact emission: a single final JSON line once outgrew a
+    # tail capture as tiers were added, losing the headline number. The
+    # FULL result goes to a repo file, and the last stdout line is a
+    # COMPACT headline (<1.5 KB: totals, per-query medians, per-tier
+    # totals, load stamps) that cannot outgrow a tail buffer.
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "BENCH_detail.json")
     with open(detail_path, "w") as f:
@@ -893,9 +631,8 @@ def _tier_total(tier: str, d: dict) -> float:
 
 def compact_line(result: dict) -> str:
     """The last stdout line: totals, per-query medians, per-tier totals,
-    load and calibration stamps, and the cores and table dir the run
-    used. Falls back to ``fallback_line`` when it would reach 1,500
-    characters."""
+    load stamps, and the cores and table dir the run used. Falls back to
+    ``fallback_line`` when it would reach 1,500 characters."""
     compact = {
         "metric": result["metric"],
         "value": result["value"],
@@ -907,9 +644,7 @@ def compact_line(result: dict) -> str:
         "total_cold": result["total_cold"],
         "methodology": result["methodology"],
         "load1_start": result["load1_start"],
-        "cpu_calib": result["cpu_calib"],
         "load1_end": result["load1_end"],
-        "polluted": result["polluted"],
         "detail_file": "BENCH_detail.json",
     }
     for tier in ("posts_tier", "dedup_tier", "events_tier", "rolling_tier"):
@@ -921,11 +656,6 @@ def compact_line(result: dict) -> str:
         compact["posts_slope_entries_per_s"] = result["posts_tier_slope"][
             "entries_per_s"
         ]
-    if "calib_vs_prev" in result:
-        cm = result["calib_vs_prev"]
-        compact["calib_ref_round"] = cm["ref_round"]
-        compact["calib_machine_factor"] = cm["machine_factor"]
-        compact["calib_adj_total_ratio"] = cm["shared_calib_adjusted_ratio"]
     line = json.dumps(compact)
     if len(line) >= 1500:
         # NEVER raise here: asserting after a ~12-minute run would
@@ -938,7 +668,7 @@ def compact_line(result: dict) -> str:
 
 def fallback_line(result: dict) -> str:
     """Minimal parseable headline for when the compact line outgrows the
-    tail buffer. BOUNDED by construction: ten fixed scalar fields, no
+    tail buffer. BOUNDED by construction: nine fixed scalar fields, no
     per-query dict — the one component that grows as gates accumulate
     (ADVICE r8). Per-query numbers live in the detail file.
     test_bench_contract pins the bound against regression."""
@@ -951,7 +681,6 @@ def fallback_line(result: dict) -> str:
             "sf_dir": result["sf_dir"],
             "cpus": result["cpus"],
             "total_cold": result["total_cold"],
-            "polluted": result["polluted"],
             "detail_file": "BENCH_detail.json",
             "truncated": True,
         }

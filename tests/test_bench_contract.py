@@ -23,13 +23,11 @@ def _result(n_queries: int) -> dict:
         "sf": 0.1,
         "queries": {f"q{i}": 0.123 for i in range(n_queries)},
         "total_cold": 45.678,
-        "polluted": False,
         "sf_dir": "/data/sf0.1",
         "cpus": 4,
         "methodology": "median-of-3 warm",
         "load1_start": 0.5,
         "load1_end": 1.5,
-        "cpu_calib": {"int_loop_s": 1.0},
     }
 
 

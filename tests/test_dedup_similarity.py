@@ -43,7 +43,7 @@ def test_simhash_identical_zero_hamming(spark, docs):
     sh = dd.simhash_df(docs)
     rows = {r["id"]: r["sh"] for r in sh.collect()}
     assert rows[1] == rows[4]  # normalized-identical -> same simhash
-    pairs = dd.simhash_neardups(docs, max_hamming=10, prefix_bits=12)
+    pairs = dd.simhash_neardups_blocked(docs, max_hamming=10)
     got = {(r["id_a"], r["id_b"]): r["hamming"] for r in pairs.collect()}
     assert got.get((1, 4)) == 0
     # NULL text has no tokens, so explode drops the row: no signature
@@ -137,36 +137,6 @@ def test_embedding_neardup_lsh_recall_and_plan(spark):
     assert not re.search(r"CartesianProduct|BroadcastNestedLoopJoin", plan), plan
 
 
-def test_simhash_rotation_sweep_recovers_prefix_blind_pairs(spark):
-    """A pair differing only inside the top-16-bit block is invisible to
-    single-prefix blocking but found once a rotation moves those bits out
-    of the window (round-1 review fix). Uses precomputed signatures so the
-    differing bit positions are exact."""
-    sig1 = 1 << 62 | 1 << 40 | 1  # arbitrary 63-bit signature
-    sig2 = sig1 ^ (1 << 62) ^ (1 << 58)  # differs at bits 62 and 58: both in top-16
-    sigs = spark.createDataFrame([(1, sig1), (2, sig2)], "id long, sh long")
-
-    blind = dd.simhash_pairs_from_sigs(sigs, max_hamming=4, n_rotations=1)
-    assert blind.count() == 0  # prefixes differ -> never paired
-
-    swept = dd.simhash_pairs_from_sigs(sigs, max_hamming=4, n_rotations=4)
-    rows = swept.collect()
-    assert [(r["id_a"], r["id_b"], r["hamming"]) for r in rows] == [(1, 2, 2)]
-
-
-def test_simhash_rotation_default_matches_legacy_blocking(docs):
-    """n_rotations=1 must reproduce the original single-prefix behavior."""
-    legacy = {
-        (r["id_a"], r["id_b"])
-        for r in dd.simhash_neardups(docs, max_hamming=10).collect()
-    }
-    explicit = {
-        (r["id_a"], r["id_b"])
-        for r in dd.simhash_neardups(docs, max_hamming=10, n_rotations=1).collect()
-    }
-    assert legacy == explicit
-
-
 def test_simhash_blocked_exact_recall_vs_brute_force(spark):
     """The combination blocking is EXACT: over random-ish signatures,
     the blocked pair set equals the brute-force set of all pairs within
@@ -210,8 +180,9 @@ def test_simhash_blocked_exact_recall_vs_brute_force(spark):
 def test_simhash_blocked_cap_and_validation(spark):
     """The (table, key) cap drops pathological groups whole — an
     all-identical signature corpus yields zero pairs under a small cap
-    (identical docs belong to exact dedup) — and parameter validation
-    rejects geometries that break the pigeonhole guarantee."""
+    (identical docs belong to exact dedup) while a cap far above a
+    benign corpus's block sizes changes nothing — and parameter
+    validation rejects geometries that break the pigeonhole guarantee."""
     n = 40
     sigs = spark.createDataFrame(
         [(i, 123456789) for i in range(n)], "id long, sh long"
@@ -222,6 +193,14 @@ def test_simhash_blocked_cap_and_validation(spark):
         sigs, max_hamming=4, max_block_size=10
     )
     assert capped.count() == 0
+    benign = spark.range(40).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("doc "), F.col("id").cast("string"),
+                 F.lit(" totally unique words "), (F.col("id") * 7).cast("string")).alias("text"),
+    )
+    plain = sorted(map(tuple, dd.simhash_neardups_blocked(benign).collect()))
+    wide = dd.simhash_neardups_blocked(benign, max_block_size=10_000)
+    assert plain and plain == sorted(map(tuple, wide.collect()))
 
     with pytest.raises(ValueError, match="pigeonhole"):
         dd.simhash_blocked_pairs_from_sigs(sigs, max_hamming=6, n_blocks=7)
@@ -259,66 +238,6 @@ def test_minhash_bucket_cap_bounds_pathological_corpus(spark):
         ).collect()
     }
     assert base == wide
-
-
-def test_rotl63_properties(spark):
-    """Rotation invariants, checked in one Spark action over random
-    63-bit values: popcount-preserving, full-cycle identity, and
-    composition (rot(rot(v, a), b) == rot(v, a+b mod 63))."""
-    import random
-
-    from wordpress_sql_to_contentstack_exporter_spark.operators.dedup import (
-        SIMHASH_BITS,
-        _rotl63,
-    )
-
-    rng = random.Random(7)
-    vals = [rng.getrandbits(SIMHASH_BITS) for _ in range(200)] + [
-        0, 1, (1 << SIMHASH_BITS) - 1, 1 << (SIMHASH_BITS - 1)
-    ]
-    df = spark.createDataFrame([(v,) for v in vals], "v long")
-    a, b = 13, 37
-    checked = df.select(
-        (F.bit_count(_rotl63(F.col("v"), a)) == F.bit_count(F.col("v"))).alias("pop_ok"),
-        (_rotl63(_rotl63(F.col("v"), a), SIMHASH_BITS - a) == F.col("v")).alias("cycle_ok"),
-        (
-            _rotl63(_rotl63(F.col("v"), a), b)
-            == _rotl63(F.col("v"), (a + b) % SIMHASH_BITS)
-        ).alias("compose_ok"),
-        (_rotl63(F.col("v"), a) >= 0).alias("nonneg_ok"),  # ANSI-safety: bit 63 clear
-    )
-    bad = checked.filter(
-        ~F.col("pop_ok") | ~F.col("cycle_ok") | ~F.col("compose_ok") | ~F.col("nonneg_ok")
-    ).count()
-    assert bad == 0
-
-
-def test_rotation_sweep_is_monotone_in_recall(spark):
-    """Pairs found with fewer rotations are a subset of pairs found with
-    more (the sweep only ever adds blockings)."""
-    import random
-
-    from wordpress_sql_to_contentstack_exporter_spark.operators.dedup import SIMHASH_BITS
-
-    rng = random.Random(11)
-    base = [rng.getrandbits(SIMHASH_BITS) for _ in range(30)]
-    rows = [(i, v) for i, v in enumerate(base)]
-    # add near-dups: flip 1-3 random bits of each
-    for i, v in enumerate(base):
-        flipped = v
-        for _ in range(rng.randint(1, 3)):
-            flipped ^= 1 << rng.randrange(SIMHASH_BITS)
-        rows.append((1000 + i, flipped))
-    sigs = spark.createDataFrame(rows, "id long, sh long")
-
-    found = {}
-    for n in (1, 3, 7):
-        found[n] = {
-            (r["id_a"], r["id_b"])
-            for r in dd.simhash_pairs_from_sigs(sigs, max_hamming=3, n_rotations=n).collect()
-        }
-    assert found[1] <= found[3] <= found[7]
-    assert len(found[7]) > len(found[1])  # the sweep actually recovers pairs
 
 
 def test_minhash_bucket_stats_reports_skew(spark):
@@ -372,47 +291,6 @@ def test_paragraph_dedup_within_doc_repeats(spark):
     row = paragraph_dedup(docs).collect()[0]
     assert row["text_dedup"] == "x\ny\nz"
     assert (row["n_paras"], row["n_kept"]) == (5, 3)
-
-
-def test_simhash_block_cap_bounds_pathological_corpus(spark):
-    """A corpus of near-identical docs piles everything into shared prefix
-    blocks (correlated per-bit majorities); max_block_size must drop the
-    giant blocks instead of materializing C(n,2) pairs — while a benign
-    corpus is unaffected by a cap far above its block sizes."""
-    from pyspark.sql import functions as F
-
-    from wordpress_sql_to_contentstack_exporter_spark.operators.dedup import (
-        simhash_block_stats,
-        simhash_df,
-        simhash_neardups,
-    )
-
-    n = 400
-    docs = spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        F.concat(
-            F.lit("identical boilerplate text repeated everywhere variant "),
-            (F.col("id") % 3).cast("string"),
-        ).alias("text"),
-    )
-    stats = simhash_block_stats(simhash_df(docs), prefix_bits=16, n_rotations=4,
-                                max_block_size=50)
-    assert stats["max_block"] >= n // 3  # pathology confirmed
-    assert stats["capped_blocks"] >= 1
-    capped = simhash_neardups(
-        docs, prefix_bits=16, n_rotations=4, max_block_size=50
-    ).count()
-    assert capped == 0  # every giant block dropped, no quadratic pairs
-    # benign corpus: cap far above block sizes changes nothing
-    benign = spark.range(40).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("doc "), F.col("id").cast("string"),
-                 F.lit(" totally unique words "), (F.col("id") * 7).cast("string")).alias("text"),
-    )
-    uncapped = simhash_neardups(benign, prefix_bits=16, n_rotations=2)
-    with_cap = simhash_neardups(benign, prefix_bits=16, n_rotations=2,
-                                max_block_size=10_000)
-    assert sorted(map(tuple, uncapped.collect())) == sorted(map(tuple, with_cap.collect()))
 
 
 def test_pq_topk_recall_and_compressed_scan(spark):

@@ -244,17 +244,6 @@ def test_pii_counts_match_placeholders(spark):
     assert r["redacted"].count("<IP>") == r["n_ip"]
 
 
-def test_simhash_rotation_count_validated(spark):
-    import pytest
-
-    from wordpress_sql_to_contentstack_exporter_spark.operators import dedup as dd
-
-    sigs = spark.createDataFrame([(1, 5)], "id long, sh long")
-    for bad in (0, -1, 64):
-        with pytest.raises(ValueError, match="n_rotations"):
-            dd.simhash_pairs_from_sigs(sigs, n_rotations=bad)
-
-
 def test_lsh_queries_empty_embeddings_table(spark, tmp_path):
     """Empty embeddings must yield empty results, not a TypeError from the
     dimension probe."""

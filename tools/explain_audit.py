@@ -137,33 +137,10 @@ def main() -> int:
         ("bucket cap is not a window", r"\A(?s:(?!.*\(\d+\) Window).*)\Z"),
         ("signature agg partial-combines", r"HashAggregate"),
     )
-    simhash_plan = plan_of(
-        dd.simhash_neardups(
-            docs, max_hamming=3, prefix_bits=20, n_rotations=4, materialize=False
-        )
-    )
-    check_plan(
-        "simhash_neardup[full-lineage]",
-        simhash_plan,
-        ("text never enters a shuffle", no_text_in_exchange),
-        ("blocked join, not all-pairs", r"\A(?s:(?!.*(?:CartesianProduct|BroadcastNestedLoopJoin)).*)\Z"),
-    )
-    simhash_capped_plan = plan_of(
-        dd.simhash_neardups(
-            docs, max_hamming=3, prefix_bits=20, n_rotations=4,
-            max_block_size=1000, materialize=False,
-        )
-    )
-    check_plan(
-        "simhash_neardup[block-cap]",
-        simhash_capped_plan,
-        ("block cap is a semi-join", r"LeftSemi"),
-        ("block cap is not a window", r"\A(?s:(?!.*\(\d+\) Window).*)\Z"),
-    )
-    # Round-12 headline path: exact combination blocking. The defining
-    # plan property is NO pair-level exchange — candidates carry both
-    # signatures through the (table, key) join and the first-intact-
-    # combo filter dedupes map-side, so the plan must contain no
+    # SimHash: exact combination blocking. The defining plan property
+    # is NO pair-level exchange — candidates carry both signatures
+    # through the (table, key) join and the first-intact-combo filter
+    # dedupes map-side, so the plan must contain no
     # HashAggregate/Exchange ABOVE the join (no distinct) and no
     # all-pairs join.
     simhash_blocked_plan = plan_of(

@@ -414,11 +414,6 @@ def minhash_lsh_candidates(
 #: near-dup power.
 SIMHASH_BITS = 63
 
-#: Rotation stride for the permuted-table blocking sweep. Coprime to 63,
-#: so 63 distinct offsets before repeating; fixed (independent of
-#: n_rotations) so recall is structurally monotone in n_rotations.
-_ROT_STRIDE = 29
-
 
 def simhash_df(
     df: DataFrame,
@@ -469,186 +464,6 @@ def simhash_df(
         for b in range(SIMHASH_BITS)
     )
     return bit_sums.selectExpr("id", f"{value} AS `{out_col}`")
-
-
-def _rotl63(v: Column, s: int) -> Column:
-    """Rotate a 63-bit value left by ``s`` bits (bit 63 stays clear, so
-    the result remains a non-negative long — ANSI-safe)."""
-    if s == 0:
-        return v
-    mask = F.lit((1 << SIMHASH_BITS) - 1)
-    return F.shiftleft(v, s).bitwiseAND(mask).bitwiseOR(
-        F.shiftrightunsigned(v, SIMHASH_BITS - s)
-    )
-
-
-def simhash_rotated_blocks(
-    sigs: DataFrame,
-    *,
-    prefix_bits: int = 16,
-    n_rotations: int = 1,
-) -> DataFrame:
-    """(id, sh, rot, block) — the rotated prefix-block assignment shared
-    by ``simhash_pairs_from_sigs`` (candidate self-join) and
-    ``simhash_block_stats`` (skew telemetry)."""
-    if not 1 <= n_rotations <= SIMHASH_BITS:
-        raise ValueError(
-            f"n_rotations must be in [1, {SIMHASH_BITS}], got {n_rotations} "
-            "(offsets repeat beyond the signature width)"
-        )
-    rot_blocks = F.array(
-        *[
-            F.struct(
-                F.lit(r).alias("rot"),
-                F.shiftrightunsigned(
-                    _rotl63(F.col("sh"), (r * _ROT_STRIDE) % SIMHASH_BITS),
-                    SIMHASH_BITS - prefix_bits,
-                ).alias("block"),
-            )
-            for r in range(n_rotations)
-        ]
-    )
-    return sigs.select("id", "sh", F.explode(rot_blocks).alias("rb")).select(
-        "id", "sh", F.col("rb.rot").alias("rot"), F.col("rb.block").alias("block")
-    )
-
-
-def simhash_block_stats(
-    sigs: DataFrame,
-    *,
-    prefix_bits: int = 16,
-    n_rotations: int = 1,
-    max_block_size: int = 1000,
-) -> dict:
-    """Skew telemetry for the SimHash prefix-block distribution —
-    symmetric with ``minhash_bucket_stats``. SimHash signatures of a
-    small-vocabulary / boilerplate-heavy corpus are highly CORRELATED
-    (the per-bit majority votes agree), so many documents share a
-    prefix block even when they are not near-dups — blocks, like LSH
-    buckets, can go quadratic. Returns ``{"blocks", "max_block",
-    "capped_blocks"}`` from one aggregation; never materializes pairs.
-    """
-    counts = (
-        simhash_rotated_blocks(
-            sigs, prefix_bits=prefix_bits, n_rotations=n_rotations
-        )
-        .groupBy("rot", "block")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    row = counts.agg(
-        F.count(F.lit(1)).alias("blocks"),
-        F.max("n").alias("max_block"),
-        F.sum((F.col("n") > max_block_size).cast("long")).alias("capped_blocks"),
-    ).first()
-    return {
-        "blocks": row["blocks"],
-        "max_block": row["max_block"] or 0,
-        "capped_blocks": row["capped_blocks"] or 0,
-    }
-
-
-def simhash_pairs_from_sigs(
-    sigs: DataFrame,
-    *,
-    max_hamming: int = 8,
-    prefix_bits: int = 16,
-    n_rotations: int = 1,
-    max_block_size: int | None = None,
-    materialize: bool = True,
-) -> DataFrame:
-    """Near-dup pairs from precomputed (id, sh) SimHash rows: block on the
-    top ``prefix_bits`` bits, exact Hamming filter within blocks.
-
-    A single fixed prefix is blind to near-dups whose few differing bits
-    happen to fall inside it. ``n_rotations > 1`` runs the blocking over
-    additional bit rotations of the signature and unions the results: a
-    pair with ``d`` differing bits survives whenever SOME rotation moves
-    all ``d`` bits outside the prefix window, which for small ``d`` is
-    almost always (the standard Manku et al. permuted-table trick, done
-    here as one exploded join instead of N sequential jobs). Rotation
-    offsets come from a FIXED stride sequence (r * 29 mod 63, 29 coprime
-    to 63 so offsets never repeat), independent of ``n_rotations`` — so
-    the blockings used at n rotations are a strict prefix of those at
-    n+1, making recall structurally monotone in ``n_rotations`` (more
-    rotations can only add pairs). Cost grows linearly with
-    ``n_rotations`` (more exploded rows), never quadratically PER PAIR —
-    but block sizes themselves are data-dependent: correlated signatures
-    (small-vocabulary or boilerplate-heavy corpora, where per-bit
-    majorities agree across documents) can pile thousands of non-near-dup
-    docs into one prefix block, and a block of n rows contributes C(n,2)
-    join outputs. ``max_block_size`` drops whole (rot, block) groups over
-    the cap before the self-join — the same aggregate+semi-join guard as
-    ``minhash_lsh_candidates`` (and NOT a window, for the same skew
-    reason). Recall note: a capped block never yields pairs in THAT
-    rotation, but other rotations re-block the same docs differently, so
-    genuine near-dups usually survive capping; identical docs are the
-    degenerate case and belong to (linear) exact dedup anyway.
-    """
-    sh = simhash_rotated_blocks(
-        sigs, prefix_bits=prefix_bits, n_rotations=n_rotations
-    )
-    if max_block_size is not None:
-        small_blocks = (
-            sh.groupBy("rot", "block")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") <= max_block_size)
-            .select("rot", "block")
-        )
-        sh = sh.join(small_blocks, ["rot", "block"], "left_semi")
-    # Reused on both sides of the self-join below; lazy localCheckpoint
-    # (vs persist) so storage is auto-released after consumption and no
-    # job runs at build time. Lineage-truncation/executor-loss tradeoff
-    # documented at minhash_lsh_candidates (same reasoning);
-    # materialize=False exposes full lineage to explain tooling.
-    if materialize:
-        sh = sh.localCheckpoint(eager=False)
-    a, b = sh.alias("a"), sh.alias("b")
-    ham = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh")))
-    return (
-        a.join(
-            b,
-            (F.col("a.rot") == F.col("b.rot"))
-            & (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            ham.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
-def simhash_neardups(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    max_hamming: int = 8,
-    prefix_bits: int = 16,
-    n_rotations: int = 1,
-    max_block_size: int | None = None,
-    materialize: bool = True,
-) -> DataFrame:
-    """SimHash near-dup pairs: block on the top ``prefix_bits`` bits (a
-    cheap LSH — identical prefixes required), then exact Hamming filter.
-    See ``simhash_pairs_from_sigs`` for the rotation-sweep recall knob
-    and the ``max_block_size`` quadratic-blowup guard. For EXACT
-    candidate recall at the same gate, prefer
-    :func:`simhash_blocked_pairs_from_sigs` (the round-12 headline
-    path) — the sweep is kept for parity with permuted-table designs
-    and for corpora where a small rotation count is measurably cheaper.
-    """
-    return simhash_pairs_from_sigs(
-        simhash_df(df, text_col, id_col),
-        max_hamming=max_hamming,
-        prefix_bits=prefix_bits,
-        n_rotations=n_rotations,
-        max_block_size=max_block_size,
-        materialize=materialize,
-    )
 
 
 def _equal_splits(bits: int, n: int) -> list[tuple[int, int]]:
@@ -719,10 +534,8 @@ def simhash_blocked_pairs_from_sigs(
     concatenated). Pigeonhole: a pair within ``max_hamming`` differing
     bits leaves at least ``n_blocks - max_hamming`` slices untouched,
     so with ``n_blocks >= max_hamming + combo_r`` some keyed subset is
-    fully intact — candidate recall is EXACT by construction, unlike
-    the probabilistic rotation sweep (``simhash_pairs_from_sigs``,
-    measured 0.872 planted recall at the same gate where this path
-    measures the true h<=8 fraction, 0.99).
+    fully intact — candidate recall is EXACT by construction: on a
+    planted corpus this path returns the true h<=8 fraction, 0.99.
 
     Why combinations instead of the portable family's single-block
     keys: at ``max_hamming=8`` a single 63/9 = 7-bit slice has only 128
@@ -754,8 +567,7 @@ def simhash_blocked_pairs_from_sigs(
     via a later table) — deterministic, mirrorable semantics; the
     45-subset spread keeps genuine near-dups rare in hot buckets.
 
-    Output: (id_a, id_b, hamming), id_a < id_b — the
-    ``simhash_pairs_from_sigs`` contract, so callers can swap schemes;
+    Output: (id_a, id_b, hamming), id_a < id_b;
     ``include_signatures=True`` appends (sh_a, sh_b) for callers whose
     contract carries the signatures (the portable gate).
     """
@@ -844,8 +656,9 @@ def simhash_neardups_blocked(
     max_block_size: int | None = None,
     materialize: bool = True,
 ) -> DataFrame:
-    """xxhash64 SimHash near-dups via the exact combination blocking —
-    the end-to-end convenience mirroring :func:`simhash_neardups`."""
+    """xxhash64 SimHash near-dups via the exact combination blocking:
+    :func:`simhash_df` signatures into
+    :func:`simhash_blocked_pairs_from_sigs`."""
     return simhash_blocked_pairs_from_sigs(
         simhash_df(df, text_col, id_col),
         max_hamming=max_hamming,
@@ -895,8 +708,8 @@ def paragraph_dedup(
        no exchange ever carries a paragraph. (Pre-r16 the winner join
        and the reassembly ``collect_list`` both shuffled full paragraph
        text — the corpus crossed the network twice to decide what
-       amounts to a per-doc bitmap. Measured at the 200k-doc tier: see
-       OPTIMIZATION_r16.md.)
+       amounts to a per-doc bitmap. Measured at the 200k-doc tier:
+       4.03 -> 2.69 s median, interleaved.)
 
     The paragraph key is ``xxhash64`` — 8 bytes on the winner-selection
     shuffle (vs 32 for a hex digest; measured 14% on the sf0.1 pass).
@@ -1313,9 +1126,8 @@ def banded_hamming_pairs(
     The 64-bit signature splits into ``bands`` equal blocks; two rows
     become a candidate pair iff they agree on at least one whole block
     (pigeonhole-guaranteed for Hamming distance < ``bands``; a
-    measured-recall heuristic above that, the SimHash rotation
-    trade-off). Candidates are verified exactly with
-    ``bit_count(a ^ b) <= max_hamming``.
+    measured-recall heuristic above that). Candidates are verified
+    exactly with ``bit_count(a ^ b) <= max_hamming``.
 
     Scale shape: the self-join shuffles (band_no, block) keys — a few
     bytes per row, never the underlying media — and the verify is a

@@ -144,12 +144,6 @@ def decode_features(
     return df.select("media_id", "content").mapInPandas(run, FEATURES_SCHEMA)
 
 
-def decode_stub(df: DataFrame, *, batch_hint: int = 1024) -> DataFrame:
-    """Deterministic decode stage (round-1 name, kept for compatibility):
-    ``decode_features(decoder="stub")``."""
-    return decode_features(df, decoder="stub", batch_hint=batch_hint)
-
-
 def synthesize_media_from_documents(docs: DataFrame) -> DataFrame:
     """Build a media-row DataFrame (``media_id``, binary ``content``,
     ``meta`` struct of mime/width/height/duration_ms) from the ``documents`` fixture

@@ -69,9 +69,9 @@ def rolling_anomaly(
     Spark maintains incrementally, minus their ``lag(.., W)`` value —
     O(1) per row, bit-identical integer results (see
     ``_trailing_window_sums`` for the NULL-window equivalence argument).
-    Measured at the 10M-row rolling tier: plain 66.2 s -> see
-    OPTIMIZATION_r15.md. Overflow note: prefix sums grow with partition
-    length, not window length, so the square-sum prefix accumulates as
+    Measured at the 10M-row rolling tier: plain 66.2 -> 33.2 s.
+    Overflow note: prefix sums grow with partition length, not window
+    length, so the square-sum prefix accumulates as
     decimal(38,0) (no realistic partition can overflow it) and only the
     window-bounded frame difference casts back to long — the WINDOW
     budget (``(n*x - s)^2 < 2^63``) is unchanged from the sliding form.
@@ -367,7 +367,7 @@ def choose_rolling_variant(
     size; the chunked form restores |keys| x |chunks| tasks but pays a
     second window pass plus the carry-union shuffle. Measured crossover
     (bench.py rolling tier, 5 keys, local[32]): at 1M rows (200k
-    rows/key) plain wins (9.7 s vs 10.9 s, BENCH_r05); at 10M rows (2M
+    rows/key) plain wins (9.7 s vs 10.9 s); at 10M rows (2M
     rows/key) chunked wins — so the dispatch threshold
     ``min_rows_per_key`` sits between the two measured points at 500k.
 

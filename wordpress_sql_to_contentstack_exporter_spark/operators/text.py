@@ -978,7 +978,7 @@ def _anchored_span_arrays(
     len < span, len == span, newlines, NULL). Measured at the 200k-doc
     dedup tier (interleaved A/B, 3 rounds): span_coverage 21.7 -> 12.6 s
     (it consumes the anchor pass three times), repeated_spans
-    14.3 -> 13.4 s (aggregation-bound; see OPTIMIZATION_r15.md);
+    14.3 -> 13.4 s (aggregation-bound);
     the regex scan also dodges a projection-shape hazard where the
     WHEN-guarded positions transform re-evaluates under a bound column
     (the winnow_fingerprints lesson-1 family).
@@ -1937,7 +1937,7 @@ def _winnow_fingerprints_binary(
     # output converts the few SELECTED fingerprints back to lowercase
     # hex. Halves the bytes the w-1 zip_with folds copy and compare —
     # measured 13.5 -> 10.4 s on the fingerprint stage of the 10k-doc
-    # winnow_overlap corpus (exceptAll 0/0; see OPTIMIZATION_r15.md).
+    # winnow_overlap corpus (exceptAll 0/0).
     grams_expr = F.transform(
         F.sequence(F.lit(1), F.col("__wng")),
         lambda i: F.struct(

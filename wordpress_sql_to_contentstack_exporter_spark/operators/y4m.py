@@ -90,25 +90,3 @@ def frame_offsets(data: bytes, hdr: dict) -> list[int]:
         offs.append(start)
         pos = start + fb
     return offs
-
-
-def encode(
-    width: int,
-    height: int,
-    frames: list[bytes],
-    *,
-    fps: tuple[int, int] = (25, 1),
-    colorspace: str = "420jpeg",
-) -> bytes:
-    """Assemble a Y4M stream (test-fixture writer). Each element of
-    ``frames`` must be exactly the plane size for the colorspace."""
-    fb = _plane_bytes(width, height, colorspace)
-    for i, fr in enumerate(frames):
-        if len(fr) != fb:
-            raise ValueError(f"frame {i}: {len(fr)} bytes, expected {fb}")
-    head = f"YUV4MPEG2 W{width} H{height} F{fps[0]}:{fps[1]} Ip A1:1 C{colorspace}\n"
-    out = bytearray(head.encode("ascii"))
-    for fr in frames:
-        out += b"FRAME\n"
-        out += fr
-    return bytes(out)

@@ -3642,7 +3642,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     stubbed; Spark plumbing real). Oracle covers the deterministic columns."""
     d = _t(spark, sf_dir, "documents")
     media = mm.synthesize_media_from_documents(d)
-    feats = mm.decode_stub(media)
+    feats = mm.decode_features(media, decoder="stub")
     return feats.select("media_id", "n_bytes", "content_sha256")
 
 
@@ -7914,41 +7914,13 @@ def q_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # Ordering contract: every ORACLE_SQL-backed query comes FIRST, rows-only
-# (hash/recall-tested) queries LAST. The correctness driver snapshots the
-# first DRIVER_SNAPSHOT_WINDOW entries; keeping oracle-able queries inside
-# that window is what turns local green into recorded evidence.
-# tests/test_registry_contract.py pins this invariant.
+# (hash/recall-tested) queries LAST, except for the deliberate rows-only
+# slots inside the correctness driver's snapshot window (the first 50
+# entries). Keeping oracle-able queries inside that window is what turns
+# local green into recorded evidence. tests/test_registry_contract.py
+# pins the window set and this order.
 
-# The driver's snapshot size. Single-sourced here so the contract tests
-# and any tooling share one definition (ADVICE r3: the test previously
-# duplicated the literal 50 and would have pinned a stale invariant if
-# the driver's window ever changed).
-DRIVER_SNAPSHOT_WINDOW = 50
 
-# Registry order IS the driver contract: the correctness driver
-# snapshots the FIRST ``DRIVER_SNAPSHOT_WINDOW`` (50) entries each
-# round. Round-10 window: the round-9 driver artifacts never
-# materialized (no CORRECTNESS_r09.json / BENCH_r09.json were written),
-# so EVERY query the round-9 rotation put in for first driver contact
-# still has zero driver-environment evidence — they all keep their
-# slots. (a) the r8/r9 additions with no driver row: the five r8
-# additions (incremental_dedup, html_text, windowed_dedup,
-# compaction_plan, expectations_exemplars), the two r9-early additions
-# (incremental_dedup_bucketed, html_quality), and the five r9-late
-# additions that sat past the r9 cut (gapfill_interp,
-# tokenizer_fertility, html_links, bm25_score, bm25_topk); (b)
-# re-verification slots for implementations changed in round 9 with no
-# driver row since: source_overlap (join-free groupBy/collect_set
-# restructure), range_join / range_join_bucketed (reserved-column
-# guards, ADVICE r8), span_coverage + the minhash family's signature
-# stage (input-spread path; minhash_neardup itself is rows-only and
-# cannot hold a window slot); (c) retained anchors and prior
-# first-greens. Rotated out to fund the five new slots: salted_agg,
-# zorder_layout, interval_overlap, expectations, sentence_split — all
-# driver-green in r8 on code untouched since (same single-green
-# rotation precedent as the r8/r9 rotation-outs). Everything rotated
-# out stays green in the committed full-registry local sweeps at both
-# scales.
 def q_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-fill with LINEAR interpolation
     (operators/temporal.gapfill_buckets interp_cols — TimescaleDB
@@ -9956,14 +9928,7 @@ SQL_CURATION_CAPSTONE_SOFT = SQL_CURATION_CAPSTONE.replace(
 
 
 SPARK_QUERIES = {
-    # --- window part (a): round-15 first contacts (percentiles_skew /
-    # grouped_topk_skew — the dominant-group skew decompositions,
-    # VERDICT r14 #2; posts_export_sharded — the no-collect export
-    # path's bytes made oracle-able, VERDICT r14 #5; manifest_diff —
-    # the between-snapshot release audit) + retained r14 first
-    # contacts + the r15 stats-family re-greens (the stats module grew
-    # the skew variant and shared quantile-spec validation) and
-    # global_rank (the device the skew variants reuse) ---
+    # --- the driver snapshot window (first 50 entries) ---
     "percentiles_skew": q_percentiles_skew,
     "grouped_topk_skew": q_grouped_topk_skew,
     "posts_export_sharded": q_posts_export_sharded,
@@ -9984,30 +9949,15 @@ SPARK_QUERIES = {
     "sentence_split": q_sentence_split,
     "ann_lsh_portable": q_ann_lsh_portable,
     "soft_dedup_weights": q_soft_dedup_weights,
-    # --- r16 re-green slots (VERDICT r15 correctness-gate residual):
-    # the three r15-optimized queries whose physical plans changed
-    # AFTER the r15 window was pinned — rotated in so the r16 driver
-    # run independently re-proves them (span_coverage: regex anchor
-    # scan + hash-fused explode; rolling_anomaly: O(1) prefix-sum
-    # trailing windows; moving_average: growing-frame difference).
-    # Funded by rotating out kmeans_lloyd / ann_ivf_portable /
-    # ann_pq_portable — all r15 oracle-green on code untouched since
-    # (pinned by test_rotated_out_r16_were_clean_in_r15) ---
     "span_coverage": q_span_coverage,
     "rolling_anomaly": q_rolling_anomaly,
     "moving_average": q_moving_average,
     "incremental_neardup_portable": q_incremental_neardup_portable,
-    # --- window part (b): deliberate rows-only slots (simhash_neardup
-    # re-contacts its r13-optimized path; ann_recall_sweep's evidence
-    # block now carries the ivfpq_portable recall row) ---
     "simhash_neardup": q_simhash_neardup,
     "ann_recall_sweep": q_ann_recall_sweep,
-    # --- window part (c): retained anchors ---
     "flagship_posts_export": q_flagship_posts_export,
     "bloom_prune_join": q_bloom_prune_join,
     "shard_manifest": q_shard_manifest,
-    # --- window part (d): the capstone component family (bisection
-    # on a capstone red) + retained greens ---
     "winnow_dedup": q_winnow_dedup,
     "winnow_spans": q_winnow_spans,
     "leakage_safe_split": q_leakage_safe_split,
@@ -10024,34 +9974,19 @@ SPARK_QUERIES = {
     "global_rank": q_global_rank,
     "setsim_join": q_setsim_join,
     "ngram_lm": q_ngram_lm,
-    # --- window part (e): reference-core greens (retained; funded in
-    # r14 by rotating out url_normalize, fd_profile AND join_blowup —
-    # all three r13 oracle-green on code untouched since, pinned by
-    # test_rotated_out_r14_were_clean_in_r13) ---
     "eav_pivot": q_eav_pivot,
     "group_concat": q_group_concat,
     "hierarchy_parent": q_hierarchy_parent,
     "broadcast_lookup": q_broadcast_lookup,
     "semi_join": q_semi_join,
-    # --- oracle-backed / rows-only, OUTSIDE the round-13 window ---
-    # rotated out in r13: the eleven r12 rows-only first contacts
-    # (incremental_neardup, sliding_hll, compression_ratio,
-    # approx_aggs, hll_sketches, ann_{ivf,pq,ivfpq}_topk, freq_items,
-    # image_neardup, audio_neardup) plus unicode_clean - all clean
-    # in CORRECTNESS_r12.json on code untouched since. Oracle-backed
-    # tail entries precede the rows-only tail (ordering contract).
+    # --- outside the window: oracle-backed entries, then the
+    # rows-only tail ---
     "url_normalize": q_url_normalize,
     "fd_profile": q_fd_profile,
     "join_blowup": q_join_blowup,
-    # rotated out in r16 (funded the three r16 re-green slots) — all
-    # r15 oracle-green on code untouched since, pinned by
-    # test_rotated_out_r16_were_clean_in_r15:
     "kmeans_lloyd": q_kmeans_lloyd,
     "ann_ivf_portable": q_ann_ivf_portable,
     "ann_pq_portable": q_ann_pq_portable,
-    # rotated out in r15 (funded the four r15 first-contact slots) —
-    # all r14 oracle-green on code untouched since, pinned by
-    # test_rotated_out_r15_were_clean_in_r14:
     "source_overlap": q_source_overlap,
     "audio_features": q_audio_features,
     "frame_sample": q_frame_sample,
