@@ -8,9 +8,10 @@ queries the registry holds (VERDICT r10 ask #6).
 """
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 

@@ -32,10 +32,11 @@ plus a summary; transcribe into SCALE.md (round 15 section).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def synth_vectors(spark, n: int, variants: int = 10):

@@ -19,10 +19,11 @@ selection is mechanical, never a per-round judgment call.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def one_run(spark, con, sf_dir: str) -> dict:

@@ -10,10 +10,11 @@ is known-small, whole-stage codegen coverage. Run:
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from contextlib import redirect_stdout
 

@@ -6,6 +6,9 @@ SURVEY.md §2 row 43).
 
 Module selection and the resume-by-ID file behave like the reference CLI;
 with no module, all four run (concurrently, see ``plans.pipeline``).
+
+``main`` leaves the session up for its caller; the command itself stops
+the session and waits for its JVM before it returns (``session.stop_spark``).
 """
 
 from __future__ import annotations
@@ -133,5 +136,16 @@ def main(argv: list[str] | None = None) -> int:
     return 0
 
 
+def run() -> int:
+    """The command: ``main``, then stop the session it started and wait
+    for its JVM (which may be writing its class-data archive)."""
+    try:
+        return main()
+    finally:
+        from .session import stop_spark
+
+        stop_spark()
+
+
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(run())
