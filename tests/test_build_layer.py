@@ -278,7 +278,7 @@ def test_blocked_pairs_equal_column_form(corpus, max_hamming, combo_r, max_block
     sigs = _simhash_df_columns(corpus).localCheckpoint()
     got = dd.simhash_blocked_pairs_from_sigs(
         sigs, max_hamming=max_hamming, combo_r=combo_r,
-        max_block_size=max_block_size, materialize=False,
+        max_block_size=max_block_size,
     )
     want = _blocked_pairs_columns(
         sigs, max_hamming=max_hamming, combo_r=combo_r, max_block_size=max_block_size
@@ -290,7 +290,7 @@ def test_portable_blocked_pairs_equal_column_form(corpus):
     sigs = _simhash_portable_signatures_columns(corpus).localCheckpoint()
     got = dd.simhash_blocked_pairs_from_sigs(
         sigs, bits=dd.SIMHASH_PORTABLE_BITS, max_hamming=7, max_block_size=100,
-        materialize=False, include_signatures=True,
+        include_signatures=True,
     )
     want = _blocked_pairs_columns(
         sigs, bits=dd.SIMHASH_PORTABLE_BITS, max_hamming=7, max_block_size=100,
@@ -302,8 +302,7 @@ def test_portable_blocked_pairs_equal_column_form(corpus):
 @pytest.mark.parametrize("bands,max_bucket_size", [(2, None), (4, 3)])
 def test_minhash_lsh_candidates_equal_column_form(corpus, bands, max_bucket_size):
     got = dd.minhash_lsh_candidates(
-        corpus, num_hashes=16, bands=bands, max_bucket_size=max_bucket_size,
-        materialize=False,
+        corpus, num_hashes=16, bands=bands, max_bucket_size=max_bucket_size
     )
     want = _minhash_lsh_candidates_columns(
         corpus, num_hashes=16, bands=bands, max_bucket_size=max_bucket_size

@@ -9,7 +9,7 @@ import logging
 import pytest
 
 from wordpress_sql_to_contentstack_exporter_spark.config import ExportConfig, build_catalog
-from wordpress_sql_to_contentstack_exporter_spark.logging_utils import JsonFormatter
+from wordpress_sql_to_contentstack_exporter_spark.logging_utils import JsonFormatter, get_logger
 
 
 def test_config_roundtrip(tmp_path):
@@ -80,6 +80,21 @@ def test_json_log_format():
     assert doc["message"] == "exported post '16'"
     assert doc["metrics"] == {"rows": 3}
     assert doc["timestamp"].endswith("Z")
+
+
+def test_default_log_stream_is_stderr_at_emit_time(monkeypatch):
+    """A logger set up before ``sys.stderr`` is replaced writes to the
+    replacement (at interpreter exit the first stream may be closed)."""
+    import sys
+
+    logger = get_logger("stderr-at-emit-probe")
+    first, later = io.StringIO(), io.StringIO()
+    monkeypatch.setattr(sys, "stderr", first)
+    logger.info("one")
+    monkeypatch.setattr(sys, "stderr", later)
+    first.close()
+    logger.info("two", extra={"metrics": {"n": 2}})
+    assert json.loads(later.getvalue())["metrics"] == {"n": 2}
 
 
 def test_cli_locale_threads_into_paths_and_master(spark, tmp_path):

@@ -454,7 +454,7 @@ def test_semantic_decontaminate_prenormalized_matches_default(spark):
         map(
             tuple,
             sim.semantic_decontaminate(
-                corpus_u, bdf_u, threshold=0.9, prenormalized=True, materialize=False
+                corpus_u, bdf_u, threshold=0.9, prenormalized=True
             ).collect(),
         )
     )

@@ -242,10 +242,7 @@ def test_winnow_overlap_binary_pipeline_equals_hex_pipeline(spark):
 
     old = _collect_sorted(hex_pipeline())
     new = _collect_sorted(
-        tx.winnow_overlap(
-            df, k=k, w=w, min_shared=min_shared, max_fp_docs=cap,
-            materialize=False,
-        )
+        tx.winnow_overlap(df, k=k, w=w, min_shared=min_shared, max_fp_docs=cap)
     )
     assert old == new
     assert any((a, b) == (1, 2) for (a, b, *_rest) in new)  # planted pair

@@ -155,8 +155,8 @@ def one_run(spark, con, sf_dir: str) -> dict:
     #    (checkpoints already materialized) — the long-job steady state.
     #  * semantic_decontaminate_prenorm: unit vectors stored upstream
     #    (one-time untimed prep — the operator docstring's recommended
-    #    production shape), prenormalized=True + materialize=False so no
-    #    checkpoint exists at all; DuckDB mirrors with dot-product-only
+    #    production shape), prenormalized=True so no checkpoint exists
+    #    at all; DuckDB mirrors with dot-product-only
     #    SQL over the same prenormalized fixture.
     import os
     import tempfile
@@ -265,7 +265,6 @@ def one_run(spark, con, sf_dir: str) -> dict:
                 bench,
                 threshold=0.40,
                 prenormalized=True,
-                materialize=False,
             ).orderBy("vec_id")
 
         build().write.format("noop").mode("overwrite").save()

@@ -2,7 +2,9 @@
 
 Checks (per query): filters pushed to the parquet scan, column pruning
 (ReadSchema only carries referenced columns), broadcast joins where a side
-is known-small, whole-stage codegen coverage. Run:
+is known-small, whole-stage codegen coverage. The operators whose plans
+pass through lazy localCheckpoints are audited on the plans Spark executed
+(``executed_plans``), so the audit sees exactly what production runs. Run:
 
     python tools/explain_audit.py [sf_dir]
 """
@@ -19,11 +21,47 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from contextlib import redirect_stdout
 
 
+# Ban raw text from every KEY exchange (hash/range partitioning and
+# broadcast) — the algorithmic shuffles whose volume scales with the
+# corpus. A leading ROUND-ROBIN exchange is exempt: that is
+# spread_small_scan's input-layout fix, which only fires when a
+# single-row-group fixture file under-parallelizes the map side and
+# is a no-op on any real multi-file corpus (sources/catalog.py).
+NO_TEXT_IN_EXCHANGE = (
+    r"\A(?s:(?!.*\(\d+\) (?:Broadcast)?Exchange\s*\nInput \[\d+\]: "
+    r"\[[^\]]*text#[^\]]*\]\s*\nArguments: [^\n]*"
+    r"(?:hashpartitioning|rangepartitioning|SinglePartition|HashedRelation|IdentityBroadcastMode)).*)\Z"
+)
+
+
 def plan_of(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def executed_plans(spark, build) -> list[str]:
+    """Build a frame with ``build()``, run it into a ``noop`` sink and
+    return the formatted physical plan of every SQL execution that ran
+    from the build on, as Spark's SQL status store recorded it (the final
+    adaptive plan). Under AQE each lazy localCheckpoint runs at build as
+    its own execution, whose plan reaches back to the scan."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        bus.waitUntilEmpty()  # the store is fed asynchronously
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    last = max((e.executionId() for e in executions()), default=-1)
+    build().write.format("noop").mode("overwrite").save()
+    return [e.physicalPlanDescription() for e in executions() if e.executionId() > last]
+
+
+def executed_plan(spark, build) -> str:
+    return "\n".join(executed_plans(spark, build))
 
 
 def main() -> int:
@@ -100,10 +138,8 @@ def main() -> int:
         ("no all-pairs join", r"\A(?s:(?!.*(?:CartesianProduct|BroadcastNestedLoopJoin)).*)\Z"),
     )
 
-    # Dedup family (VERDICT r3 ask #6) — audited on the un-checkpointed
-    # plans (materialize=False; the localCheckpoint otherwise truncates
-    # everything upstream into a Scan ExistingRDD). Two hand-verified
-    # properties most likely to silently regress:
+    # Dedup family (VERDICT r3 ask #6) — audited on the executed plans.
+    # Two hand-verified properties most likely to silently regress:
     #   1. Document text never rides a shuffle: every (Broadcast)Exchange's
     #      input column list must be free of the raw text column.
     #   2. The bucket cap compiles to aggregate + semi-join — NOT a window
@@ -111,29 +147,17 @@ def main() -> int:
     #      bucket into one un-splittable partition.
     from wordpress_sql_to_contentstack_exporter_spark.operators import dedup as dd
 
-    # Ban raw text from every KEY exchange (hash/range partitioning and
-    # broadcast) — the algorithmic shuffles whose volume scales with the
-    # corpus. A leading ROUND-ROBIN exchange is exempt: that is
-    # spread_small_scan's input-layout fix, which only fires when a
-    # single-row-group fixture file under-parallelizes the map side and
-    # is a no-op on any real multi-file corpus (sources/catalog.py).
-    no_text_in_exchange = (
-        r"\A(?s:(?!.*\(\d+\) (?:Broadcast)?Exchange\s*\nInput \[\d+\]: "
-        r"\[[^\]]*text#[^\]]*\]\s*\nArguments: [^\n]*"
-        r"(?:hashpartitioning|rangepartitioning|SinglePartition|HashedRelation|IdentityBroadcastMode)).*)\Z"
-    )
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     )
-    minhash_plan = plan_of(
-        dd.minhash_lsh_candidates(
-            docs, num_hashes=16, bands=2, max_bucket_size=1000, materialize=False
-        )
+    minhash_plan = executed_plan(
+        spark,
+        lambda: dd.minhash_lsh_candidates(docs, num_hashes=16, bands=2, max_bucket_size=1000),
     )
     check_plan(
         "minhash_neardup[full-lineage]",
         minhash_plan,
-        ("text never enters a shuffle", no_text_in_exchange),
+        ("text never enters a shuffle", NO_TEXT_IN_EXCHANGE),
         ("bucket cap is a semi-join", r"LeftSemi"),
         ("bucket cap is not a window", r"\A(?s:(?!.*\(\d+\) Window).*)\Z"),
         ("signature agg partial-combines", r"HashAggregate"),
@@ -144,16 +168,14 @@ def main() -> int:
     # dedupes map-side, so the plan must contain no
     # HashAggregate/Exchange ABOVE the join (no distinct) and no
     # all-pairs join.
-    simhash_blocked_plan = plan_of(
-        dd.simhash_neardups_blocked(
-            docs, max_hamming=6, combo_r=2, max_block_size=1000,
-            materialize=False,
-        )
+    simhash_blocked_plan = executed_plan(
+        spark,
+        lambda: dd.simhash_neardups_blocked(docs, max_hamming=6, combo_r=2, max_block_size=1000),
     )
     check_plan(
         "simhash_neardup[blocked-exact]",
         simhash_blocked_plan,
-        ("text never enters a shuffle", no_text_in_exchange),
+        ("text never enters a shuffle", NO_TEXT_IN_EXCHANGE),
         ("blocked join, not all-pairs", r"\A(?s:(?!.*(?:CartesianProduct|BroadcastNestedLoopJoin)).*)\Z"),
         # round 13: the cap became a broadcast ANTI join against the
         # hot-key list (usually empty) instead of a semi-join against
@@ -456,10 +478,7 @@ def main() -> int:
 
     # setsim_join: candidates must come from the prefix equi-join — no
     # cartesian/nested-loop anywhere, and verify joins are hash joins
-    # on ids. Audited on the un-checkpointed plan (materialize=False,
-    # same reason as the minhash/simhash full-lineage checks: the r7
-    # localCheckpoint of the thrice-consumed `ordered` frame otherwise
-    # truncates everything upstream into a Scan ExistingRDD).
+    # on ids.
     setsim_docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter("doc_id < 1000")
@@ -467,15 +486,15 @@ def main() -> int:
     )
     check_plan(
         "setsim_join[full-lineage]",
-        plan_of(
-            dd.setsim_join(
-                setsim_docs, id_col="doc_id", text_col="text",
-                tau_num=6, tau_den=10, materialize=False,
-            )
+        executed_plan(
+            spark,
+            lambda: dd.setsim_join(
+                setsim_docs, id_col="doc_id", text_col="text", tau_num=6, tau_den=10
+            ),
         ),
         ("no cartesian product", r"\A(?s:(?!.*CartesianProduct).*)\Z"),
         ("no nested-loop join", r"\A(?s:(?!.*BroadcastNestedLoopJoin).*)\Z"),
-        ("text never enters a shuffle", no_text_in_exchange),
+        ("text never enters a shuffle", NO_TEXT_IN_EXCHANGE),
     )
 
     # ngram_lm: exactly ONE parquet scan of the corpus — every derived
@@ -795,7 +814,7 @@ def main() -> int:
         ("band-bucket equi-join", r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin"),
         ("no cartesian product", r"\A(?s:(?!.*CartesianProduct).*)\Z"),
         ("no nested-loop join", r"\A(?s:(?!.*BroadcastNestedLoopJoin).*)\Z"),
-        ("raw text never rides a key exchange", no_text_in_exchange),
+        ("raw text never rides a key exchange", NO_TEXT_IN_EXCHANGE),
         ("signatures never ride the bucket exchange",
          r"\A(?s:(?!.*\(\d+\) Exchange\s*\nInput \[\d+\]: "
          r"\[[^\]]*h0#[^\]]*\]\s*\nArguments: [^\n]*hashpartitioning"
@@ -809,7 +828,7 @@ def main() -> int:
         "bm25_topk",
         ("broadcast joins for terms/df/totals", r"BroadcastHashJoin"),
         ("no cartesian product", r"\A(?s:(?!.*CartesianProduct).*)\Z"),
-        ("raw text never rides a key exchange", no_text_in_exchange),
+        ("raw text never rides a key exchange", NO_TEXT_IN_EXCHANGE),
     )
     # dsir (round 9): the B-row weight table broadcasts back to the
     # per-doc scoring join — the only corpus-keyed exchanges are the
@@ -818,7 +837,7 @@ def main() -> int:
         "dsir",
         ("weights broadcast to scoring join", r"BroadcastHashJoin"),
         ("no cartesian product", r"\A(?s:(?!.*CartesianProduct).*)\Z"),
-        ("raw text never rides a key exchange", no_text_in_exchange),
+        ("raw text never rides a key exchange", NO_TEXT_IN_EXCHANGE),
     )
     # semdedup (round 9): ONE corpus exchange — the groupBy(cell) feeding
     # the per-cell Arrow prune; assignment is map-only.
@@ -891,13 +910,11 @@ def main() -> int:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    sdc_plan = plan_of(
-        _simo.semantic_decontaminate(
-            emb.filter("vec_id % 50 <> 0"),
-            emb.filter("vec_id % 50 = 0"),
-            threshold=0.4,
-            materialize=False,  # expose full lineage past the checkpoints
-        )
+    sdc_plan = executed_plan(
+        spark,
+        lambda: _simo.semantic_decontaminate(
+            emb.filter("vec_id % 50 <> 0"), emb.filter("vec_id % 50 = 0"), threshold=0.4
+        ),
     )
     no_vec_in_hash_exchange = (
         r"\A(?s:(?!.*\(\d+\) Exchange\s*\nInput \[\d+\]: "
@@ -914,43 +931,33 @@ def main() -> int:
     # lm_perplexity (round 10): ngram_lm exchange budget — bigram-keyed
     # aggregations/joins (word pairs, never document text) and no
     # cartesian/nested-loop anywhere.
-    # materialize=False: the production localCheckpoint would truncate
-    # the tokenize/first-aggregation stage out of the audited plan
-    # (Scan ExistingRDD), making both checks vacuous
-    lm_plan = plan_of(
-        _tx.lm_perplexity(
-            _lt(spark, sf_dir, "documents").select("doc_id", "text"),
-            materialize=False,
-        )
+    lm_plan = executed_plan(
+        spark, lambda: _tx.lm_perplexity(_lt(spark, sf_dir, "documents").select("doc_id", "text"))
     )
     check_plan(
         "lm_perplexity",
         lm_plan,
         ("no cartesian product", r"\A(?s:(?!.*CartesianProduct).*)\Z"),
-        ("document text never enters a shuffle", no_text_in_exchange),
+        ("document text never enters a shuffle", NO_TEXT_IN_EXCHANGE),
     )
     # winnow_overlap (round 10/11; winnow_dedup's expensive stage — the
     # closure rounds after it exchange (long, long) labels only, behind
     # checkpoints): the pair build must be a fingerprint-keyed EQUI-join
     # (no cartesian/nested-loop), and document text must never ride an
     # exchange — fingerprints are md5-hex + longs by construction.
-    # materialize=False exposes the full lineage past the checkpoints.
-    wo_plan = plan_of(
-        _tx.winnow_overlap(
+    wo_plan = executed_plan(
+        spark,
+        lambda: _tx.winnow_overlap(
             _lt(spark, sf_dir, "documents").select("doc_id", "text"),
-            k=8,
-            w=4,
-            min_shared=3,
-            max_fp_docs=20,
-            materialize=False,
-        )
+            k=8, w=4, min_shared=3, max_fp_docs=20,
+        ),
     )
     check_plan(
         "winnow_overlap",
         wo_plan,
         ("no cartesian product", r"\A(?s:(?!.*CartesianProduct).*)\Z"),
         ("no nested-loop join", r"\A(?s:(?!.*BroadcastNestedLoop).*)\Z"),
-        ("document text never enters a shuffle", no_text_in_exchange),
+        ("document text never enters a shuffle", NO_TEXT_IN_EXCHANGE),
     )
 
     # ann_lsh_portable (round 12): the compact-bucket discipline — the
@@ -1058,12 +1065,9 @@ def main() -> int:
     # kmeans_lloyd (round 12): assignment is MAP-ONLY — centroids are
     # driver-side literals, so the returned frame's plan has NO join and
     # NO exchange at all (updates ran as separate bounded jobs; the
-    # final frame is scan + project). materialize=False exposes the full
-    # input-prep lineage past the localCheckpoint — with the checkpoint
-    # the plan starts at Scan ExistingRDD and the no-exchange check
-    # would be vacuous (review r12b #5, the lm_perplexity rule).
-    km_plan = plan_of(
-        _simo.kmeans_lloyd_distributed(emb, k=8, iters=0, materialize=False)
+    # final frame is scan + project).
+    km_plan = executed_plan(
+        spark, lambda: _simo.kmeans_lloyd_distributed(emb, k=8, iters=0)
     )
     check_plan(
         "kmeans_lloyd",

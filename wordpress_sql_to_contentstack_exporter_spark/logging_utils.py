@@ -35,6 +35,14 @@ class JsonFormatter(logging.Formatter):
         return json.dumps(doc)
 
 
+class _StderrHandler(logging.StreamHandler):
+    """Writes to ``sys.stderr`` as it is when each record is emitted: the
+    stream bound at set-up may be closed by then (a test runner's capture
+    stream at interpreter exit)."""
+
+    stream = property(lambda self: sys.stderr, lambda self, _: None)
+
+
 _SETUP = threading.Lock()  # export modules log from concurrent threads
 
 
@@ -42,7 +50,7 @@ def get_logger(name: str = "wordpress_sql_to_contentstack_exporter_spark", strea
     logger = logging.getLogger(name)
     with _SETUP:
         if not logger.handlers:
-            handler = logging.StreamHandler(stream or sys.stderr)
+            handler = logging.StreamHandler(stream) if stream else _StderrHandler()
             handler.setFormatter(JsonFormatter())
             logger.addHandler(handler)
             logger.setLevel(logging.INFO)

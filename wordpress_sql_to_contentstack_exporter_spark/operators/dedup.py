@@ -57,26 +57,6 @@ def exact_dedup(
     )
 
 
-
-
-def char_shingles(text: Column, k: int = 5) -> Column:
-    """Distinct k-char shingles of normalized text (shorter texts yield the
-    whole text as a single shingle). The normalized string is let-bound
-    (``_let``) so the per-index lambda references a bound value instead
-    of re-running the normalization regex per character."""
-    return _let(
-        normalize_text(text),
-        lambda norm: F.array_distinct(
-            F.transform(
-                F.sequence(
-                    F.lit(1), F.greatest(F.length(norm) - (k - 1), F.lit(1))
-                ),
-                lambda i: norm.substr(i, F.lit(k)),
-            )
-        ),
-    )
-
-
 def word_shingles(text: Column, k: int = 3) -> Column:
     """Distinct k-word shingles (n-grams) of normalized text.
 
@@ -165,7 +145,6 @@ def minhash_signatures_df(
     *,
     num_hashes: int = 16,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
 ) -> DataFrame:
     """MinHash signatures via explode + hash-aggregate — the scale path.
 
@@ -176,13 +155,11 @@ def minhash_signatures_df(
     all-in-one-expression form is ~50x slower: interpreted HOF lambdas,
     shingling re-evaluated per seed). Output: (id, h0..h{n-1}).
 
-    ``shingle_mode='word'`` (default) never materializes shingle strings:
-    tokens are hashed once and k-gram hashes derived arithmetically
-    (``word_shingle_hashes`` — ~7x faster at 200k docs, measured). The
-    per-seed family is then ``xxhash64(shingle_hash, seed)`` — two-long
-    input, fixed width, instead of re-hashing a variable-length string
-    per seed. ``shingle_mode='char'`` keeps string shingles (substrings
-    can't be derived from token hashes).
+    Shingle strings are never materialized: tokens are hashed once and
+    k-word-gram hashes derived arithmetically (``word_shingle_hashes`` —
+    ~7x faster at 200k docs, measured). The per-seed family is then
+    ``xxhash64(shingle_hash, seed)`` — two-long input, fixed width,
+    instead of re-hashing a variable-length string per seed.
     """
     # Input spread: this operator's per-row map work is heavy enough
     # that parallelizing it beats the one-time text shuffle on an
@@ -193,16 +170,10 @@ def minhash_signatures_df(
     # shuffle cost, so they deliberately do NOT spread. No-op on any
     # multi-partition input — see sources/catalog.spread_small_scan.
     df = spread_small_scan(df)
-    if shingle_mode == "word":
-        exploded = df.select(
-            F.col(id_col).alias("id"),
-            F.explode(word_shingle_hashes(F.col(text_col), shingle_k)).alias("sh"),
-        )
-    else:
-        exploded = df.select(
-            F.col(id_col).alias("id"),
-            F.explode(char_shingles(F.col(text_col), shingle_k)).alias("sh"),
-        )
+    exploded = df.select(
+        F.col(id_col).alias("id"),
+        F.explode(word_shingle_hashes(F.col(text_col), shingle_k)).alias("sh"),
+    )
     return exploded.groupBy("id").agg(
         *[F.expr(f"min(xxhash64(sh, {s})) AS h{s}") for s in range(num_hashes)]
     )
@@ -216,7 +187,6 @@ def minhash_banded(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
 ) -> DataFrame:
     """(id, h0..h{n-1}, band, bucket) — the banded MinHash bucket
     assignment shared by ``minhash_lsh_candidates`` (candidate self-join)
@@ -242,7 +212,6 @@ def minhash_banded(
         id_col,
         num_hashes=num_hashes,
         shingle_k=shingle_k,
-        shingle_mode=shingle_mode,
     )
     rows_per_band = num_hashes // bands
     h_cols = [f"h{i}" for i in range(num_hashes)]
@@ -265,7 +234,6 @@ def minhash_bucket_stats(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
     max_bucket_size: int = 1000,
 ) -> dict:
     """Skew telemetry for the LSH bucket distribution (VERDICT r2 ask #8).
@@ -287,7 +255,6 @@ def minhash_bucket_stats(
             num_hashes=num_hashes,
             bands=bands,
             shingle_k=shingle_k,
-            shingle_mode=shingle_mode,
         )
         .groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -312,10 +279,8 @@ def minhash_lsh_candidates(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
     min_est_jaccard: float = 0.5,
     max_bucket_size: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash-LSH.
 
@@ -333,8 +298,7 @@ def minhash_lsh_candidates(
     blow-up at web scale. Capped-away *identical* documents are still
     collapsed by the (linear) ``exact_dedup`` pass, which is why dropping
     giant buckets is safe in the standard exact-then-near dedup pipeline.
-    ``shingle_mode='word'``
-    (default) is far more selective than char shingles on
+    Word shingles are far more selective than char shingles on
     small-vocabulary corpora — fewer bucket collisions, smaller
     candidate sets.
     """
@@ -345,7 +309,6 @@ def minhash_lsh_candidates(
         num_hashes=num_hashes,
         bands=bands,
         shingle_k=shingle_k,
-        shingle_mode=shingle_mode,
     )
     if max_bucket_size is not None:
         # Aggregate + semi-join, NOT a window over (band, bucket): a window
@@ -374,11 +337,7 @@ def minhash_lsh_candidates(
     # the job instead of recomputing. For clusters with aggressive
     # dynamic allocation, a reliable df.checkpoint() into the configured
     # checkpoint dir is the drop-in safer (slower) swap.
-    # ``materialize=False`` skips the checkpoint so explain tooling sees
-    # the FULL lineage (a checkpoint truncates the visible plan at a
-    # Scan ExistingRDD) — audit/explain only; execution should keep it.
-    if materialize:
-        banded = banded.localCheckpoint(eager=False)
+    banded = banded.localCheckpoint(eager=False)
 
     left = banded.alias("l")
     right = banded.alias("r")
@@ -523,7 +482,6 @@ def simhash_blocked_pairs_from_sigs(
     combo_r: int = 2,
     n_blocks: int | None = None,
     max_block_size: int | None = None,
-    materialize: bool = True,
     include_signatures: bool = False,
 ) -> DataFrame:
     """Near-dup pairs from (id, sh) rows with EXACT candidate recall:
@@ -606,12 +564,11 @@ def simhash_blocked_pairs_from_sigs(
             key = piece if key is None else f"(shiftleft({key}, {w}) | {piece})"
         combos.append(f"(shiftleft({t}L, {key_width}) | {key})")
     keyed = sigs.selectExpr("id", "sh", f"explode(array({', '.join(combos)})) AS k")
-    if materialize:
-        # keyed feeds the cap count AND both sides of the self-join —
-        # checkpoint BEFORE the cap so the explode runs once, not three
-        # times (round 13: the cap previously recomputed signatures per
-        # consumer; reordering cut its cost ~1.3 s -> ~0.15 s at sf0.1)
-        keyed = keyed.localCheckpoint(eager=False)
+    # keyed feeds the cap count AND both sides of the self-join —
+    # checkpoint BEFORE the cap so the explode runs once, not three
+    # times (round 13: the cap previously recomputed signatures per
+    # consumer; reordering cut its cost ~1.3 s -> ~0.15 s at sf0.1)
+    keyed = keyed.localCheckpoint(eager=False)
     if max_block_size is not None:
         # drop over-cap (table, key) groups whole — phrased as an ANTI
         # join against the HOT keys (usually none) rather than a semi
@@ -654,7 +611,6 @@ def simhash_neardups_blocked(
     combo_r: int = 2,
     n_blocks: int | None = None,
     max_block_size: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """xxhash64 SimHash near-dups via the exact combination blocking:
     :func:`simhash_df` signatures into
@@ -665,7 +621,6 @@ def simhash_neardups_blocked(
         combo_r=combo_r,
         n_blocks=n_blocks,
         max_block_size=max_block_size,
-        materialize=materialize,
     )
 
 
@@ -893,7 +848,6 @@ def setsim_join(
     text_col: str,
     tau_num: int = 6,
     tau_den: int = 10,
-    materialize: bool = True,
     broadcast_vocab: bool = True,
 ) -> DataFrame:
     """EXACT-recall set-similarity self-join: all document pairs whose
@@ -967,8 +921,7 @@ def setsim_join(
     # form runs it ONCE (r16; measured at the 200k-doc tier: ordered
     # build 28-30 s -> 12.9 s combined with the broadcast attach below).
     # Same lazy-localCheckpoint pattern/tradeoffs as ``ordered``.
-    if materialize:
-        sets = sets.localCheckpoint(eager=False)
+    sets = sets.localCheckpoint(eager=False)
     ex = sets.select("id", F.explode("g").alias("h"))
     # Repeated-shingle vocabulary only (df >= 2): df-1 shingles get
     # their order key from coalesce's literal 1 — identical structs,
@@ -995,10 +948,8 @@ def setsim_join(
     # (measured 3x wall on the 200k-doc tier: 34-40 s -> 11-12 s
     # isolated). Lazy localCheckpoint,
     # same pattern/tradeoffs as minhash_lsh_candidates (no build-time
-    # job; blocks auto-released; lineage truncation documented there);
-    # materialize=False keeps full lineage visible to explain tooling.
-    if materialize:
-        ordered = ordered.localCheckpoint(eager=False)
+    # job; blocks auto-released; lineage truncation documented there).
+    ordered = ordered.localCheckpoint(eager=False)
     k = F.size("sorted_g")
     # p = k - ceil(tau*k) + 1, integer ceil
     p = k - F.floor((F.lit(tau_num) * k + F.lit(tau_den - 1)) / F.lit(tau_den)).cast(
@@ -1366,7 +1317,6 @@ def minhash_portable_pairs(
     shingle_k: int = 3,
     min_agree: int = 8,
     max_bucket_size: int = 50,
-    materialize: bool = True,
 ) -> DataFrame:
     """ENGINE-PORTABLE banded MinHash near-dup pairs — md5 hash family
     instead of ``xxhash64``, making this the registry's first fully
@@ -1422,10 +1372,9 @@ def minhash_portable_pairs(
         df, text_col=text_col, id_col=id_col,
         num_hashes=num_hashes, shingle_k=shingle_k,
     )
-    if materialize:
-        # sigs feeds the band explode AND both agreement joins below —
-        # one signature build, three consumers
-        sigs = sigs.localCheckpoint(eager=False)
+    # sigs feeds the band explode AND both agreement joins below —
+    # one signature build, three consumers
+    sigs = sigs.localCheckpoint(eager=False)
     # the band frame carries (id, band, 32-char bucket) ONLY: replicating
     # the full num_hashes x 32-byte signature once per band through the
     # cap exchange and both self-join sides would make the signatures the
@@ -1512,7 +1461,6 @@ def simhash_portable_pairs(
     max_hamming: int = 7,
     combo_r: int = 2,
     max_block_size: int = 100,
-    materialize: bool = True,
 ) -> DataFrame:
     """ENGINE-PORTABLE SimHash near-dup pairs with EXACT Hamming
     semantics — the SimHash analogue of :func:`minhash_portable_pairs`:
@@ -1572,7 +1520,6 @@ def simhash_portable_pairs(
         max_hamming=max_hamming,
         combo_r=combo_r,
         max_block_size=max_block_size,
-        materialize=materialize,
         include_signatures=True,
     )
     return out.select(

@@ -213,7 +213,6 @@ def build_neardup_manifest(
     num_hashes: int = 16,
     bands: int = 2,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
     run_id: str | None = None,
 ) -> DataFrame:
     """The NEAR-dup analogue of ``build_manifest``: one row per
@@ -225,7 +224,7 @@ def build_neardup_manifest(
     repeats per band row; at web scale, normalize into a signature
     table + a band table if bands is large). Text is never stored.
 
-    The (num_hashes, bands, shingle_k, shingle_mode) configuration is
+    The (num_hashes, bands, shingle_k) configuration is
     BAKED INTO the stored signatures: probing with a different
     configuration silently finds nothing, so the parameters must be
     pinned for the manifest's lifetime (store them alongside the path).
@@ -239,7 +238,6 @@ def build_neardup_manifest(
         num_hashes=num_hashes,
         bands=bands,
         shingle_k=shingle_k,
-        shingle_mode=shingle_mode,
     )
     return banded.withColumn("first_seen_run", F.lit(run_id).cast("string"))
 
@@ -253,7 +251,6 @@ def neardup_manifest_dedup(
     num_hashes: int = 16,
     bands: int = 2,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
     min_est_jaccard: float = 0.9,
     max_bucket_size: int | None = 200_000,
 ) -> DataFrame:
@@ -287,7 +284,6 @@ def neardup_manifest_dedup(
         num_hashes=num_hashes,
         bands=bands,
         shingle_k=shingle_k,
-        shingle_mode=shingle_mode,
     ).localCheckpoint(eager=False)
 
     m = manifest

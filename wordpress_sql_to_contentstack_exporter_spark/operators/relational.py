@@ -70,9 +70,6 @@ def decorrelated_group_concat(
     value: Column,
     *,
     alias: str = "group_concat",
-    sep: str = ",",
-    sort: bool = True,
-    as_array: bool = False,
 ) -> DataFrame:
     """Per-outer-row aggregate of an inner relation — the decorrelated form
     of the reference's correlated ``group_concat`` scalar subquery
@@ -85,18 +82,16 @@ def decorrelated_group_concat(
     the partitioning. Rows with no inner matches get NULL (MySQL
     group_concat semantics), preserved here.
 
-    ``sort=True`` makes the concat deterministic (MySQL's order is not —
-    SURVEY.md §7 risk register), which both our tests and the DuckDB
-    oracle rely on.
+    Values are sorted and joined with ``,``: the sort makes the concat
+    deterministic (MySQL's order is not — SURVEY.md §7 risk register),
+    which both our tests and the DuckDB oracle rely on.
     """
     grouped = inner.groupBy(F.col(inner_key).alias(outer_key)).agg(
         F.collect_list(value).alias("__vals")
     )
-    vals = F.col("__vals")
-    if sort:
-        vals = F.array_sort(vals)
-    out_col = vals if as_array else F.array_join(vals, sep)
-    grouped = grouped.select(outer_key, out_col.alias(alias))
+    grouped = grouped.select(
+        outer_key, F.array_join(F.array_sort("__vals"), ",").alias(alias)
+    )
     return outer.join(grouped, on=outer_key, how="left")
 
 

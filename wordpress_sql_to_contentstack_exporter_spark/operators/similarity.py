@@ -1227,7 +1227,6 @@ def semantic_decontaminate(
     vec_col: str = "embedding",
     bench_id_col: str | None = None,
     bench_vec_col: str | None = None,
-    materialize: bool = True,
     prenormalized: bool = False,
 ) -> DataFrame:
     """Embedding-space decontamination: flag every corpus item whose
@@ -1267,8 +1266,6 @@ def semantic_decontaminate(
        is one map-side broadcast scan + argmax aggregation. The caller
        owns the invariant that the vectors really are unit-normalized;
        feeding raw vectors computes raw dot products, not cosines.
-       ``materialize=False`` exposes full lineage to plan-audit tooling
-       (dedup.py convention).
     3. per-item argmax is ``max(struct(sim, -bench_id))`` — an
        AGGREGATION, not a window: partial aggregation collapses each
        item's |benchmark| scored rows to ONE row map-side, so the
@@ -1323,7 +1320,7 @@ def semantic_decontaminate(
     b = benchmark.select(
         F.col(b_id).alias("bench_id"), prep(F.col(b_vec)).alias("bu")
     )
-    if materialize and not prenormalized:
+    if not prenormalized:
         # prenormalized inputs have no per-row normalization to buffer —
         # a checkpoint would only add a materialization pass
         c = c.localCheckpoint(eager=False)
@@ -1894,7 +1891,6 @@ def kmeans_lloyd_distributed(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale_bits: int = 20,
-    materialize: bool = True,
 ) -> DataFrame:
     """Lloyd's k-means as a DISTRIBUTED DataFrame loop with an exact
     cross-engine contract — the registry's first hash-verifiable
@@ -1932,7 +1928,7 @@ def kmeans_lloyd_distributed(
     """
     if k < 1:
         raise ValueError("k >= 1 required")
-    e = _kmeans_frame(df, id_col=id_col, vec_col=vec_col, materialize=materialize)
+    e = _kmeans_frame(df, id_col=id_col, vec_col=vec_col)
     cents = kmeans_centroid_list(
         e, k=k, iters=iters, scale_bits=scale_bits, prepared=True
     )
@@ -1944,18 +1940,13 @@ def kmeans_lloyd_distributed(
     )
 
 
-def _kmeans_frame(
-    df: DataFrame, *, id_col: str, vec_col: str, materialize: bool = True
-) -> DataFrame:
+def _kmeans_frame(df: DataFrame, *, id_col: str, vec_col: str) -> DataFrame:
     """(__vid, __v double-array, __vv) — checkpointed once, reused by
-    every k-means/IVF job against the same input. ``materialize=False``
-    exposes the full lineage for the plan audit (the lm_perplexity
-    rule: a checkpoint truncates everything upstream into a Scan
-    ExistingRDD, making upstream plan checks vacuous)."""
+    every k-means/IVF job against the same input."""
     out = df.select(
         F.col(id_col).alias("__vid"), _as_double(F.col(vec_col)).alias("__v")
     ).withColumn("__vv", dot(F.col("__v"), F.col("__v")))
-    return out.localCheckpoint(eager=False) if materialize else out
+    return out.localCheckpoint(eager=False)
 
 
 # --- SQL-text expression builders -------------------------------------

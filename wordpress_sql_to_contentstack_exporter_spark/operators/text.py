@@ -171,7 +171,6 @@ def ngram_decontaminate(
     k: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: count distinct word ``k``-grams each
     document shares with a benchmark/eval corpus (the standard
@@ -180,9 +179,8 @@ def ngram_decontaminate(
 
     Plan shape for 100 TB: explode each side to distinct (id, gram) /
     (gram) rows, inner-join on the gram, count per document. Benchmark
-    corpora are small (eval sets), so the gram side broadcasts by default
-    — the 100 TB document stream never shuffles; with
-    ``broadcast_benchmark=False`` AQE decides. Gram normalization is the
+    corpora are small (eval sets), so the gram side is always broadcast
+    — the 100 TB document stream never shuffles. Gram normalization is the
     dedup family's canonical form (shared ``word_shingles``), so
     decontamination and near-dup can't disagree on tokenization.
     """
@@ -196,10 +194,8 @@ def ngram_decontaminate(
         benchmark.select(F.explode(word_shingles(F.col(text_col), k)).alias("g"))
         .distinct()
     )
-    if broadcast_benchmark:
-        bench_grams = F.broadcast(bench_grams)
     overlap = (
-        doc_grams.join(bench_grams, "g")
+        doc_grams.join(F.broadcast(bench_grams), "g")
         .groupBy("__did")
         .agg(F.count(F.lit(1)).alias("n_overlap"))  # doc grams are distinct per doc
     )
@@ -1700,7 +1696,6 @@ def lm_perplexity(
     *,
     add_k: int = 1,
     scale_bits: int = 20,
-    materialize: bool = True,
 ) -> DataFrame:
     """Per-document cross-entropy under an add-k bigram LM trained on
     the corpus itself — the CCNet-style fluency axis: OCR noise,
@@ -1756,13 +1751,9 @@ def lm_perplexity(
     docbg = pairs.groupBy("id", "w1", "w2").agg(
         F.count(F.lit(1)).alias("c_doc")
     )
-    if materialize:
-        # the frame feeds both the model build and the scoring join —
-        # without the checkpoint the corpus tokenizes twice. The flag
-        # exists because localCheckpoint REPLACES upstream lineage with
-        # Scan ExistingRDD in explain output; plan-audit tooling passes
-        # materialize=False to see the full lineage (dedup.py precedent).
-        docbg = docbg.localCheckpoint(eager=False)
+    # the frame feeds both the model build and the scoring join —
+    # without the checkpoint the corpus tokenizes twice
+    docbg = docbg.localCheckpoint(eager=False)
     big = docbg.groupBy("w1", "w2").agg(F.sum("c_doc").cast("long").alias("c_big"))
     uni = big.groupBy("w1").agg(F.sum("c_big").cast("long").alias("c_uni"))
     vocab = big.agg(F.countDistinct("w2").cast("long").alias("v_size"))
@@ -1983,7 +1974,6 @@ def winnow_overlap(
     w: int = 4,
     min_shared: int = 2,
     max_fp_docs: int = 50,
-    materialize: bool = True,
 ) -> DataFrame:
     """Document-pair overlap via shared winnowing fingerprints — what
     MOSS actually reports: pairs ranked by how many selected
@@ -2025,19 +2015,17 @@ def winnow_overlap(
         .select(F.col(id_col).alias("id"), "fp_bin")
         .distinct()
     )
-    if materialize:
-        # fps feeds the frequency build AND the cap join; kept feeds
-        # totals and both self-join sides — without the checkpoints the
-        # md5 fingerprinting pass re-runs once per consumer (the
-        # setsim_join materialization discipline)
-        fps = fps.localCheckpoint(eager=False)
+    # fps feeds the frequency build AND the cap join; kept feeds
+    # totals and both self-join sides — without the checkpoints the
+    # md5 fingerprinting pass re-runs once per consumer (the
+    # setsim_join materialization discipline)
+    fps = fps.localCheckpoint(eager=False)
     freq = fps.groupBy("fp_bin").agg(F.count(F.lit(1)).alias("n_docs"))
     kept = fps.join(
         freq.filter(F.col("n_docs") <= max_fp_docs).select("fp_bin"),
         "fp_bin",
     )
-    if materialize:
-        kept = kept.localCheckpoint(eager=False)
+    kept = kept.localCheckpoint(eager=False)
     totals = kept.groupBy("id").agg(F.count(F.lit(1)).alias("n_fp"))
     a = kept.select(F.col("id").alias("id_a"), "fp_bin")
     b = kept.select(F.col("id").alias("id_b"), "fp_bin")
@@ -2158,7 +2146,6 @@ def winnow_spans(
     w: int = 4,
     min_shared: int = 2,
     max_fp_docs: int = 50,
-    materialize: bool = True,
 ) -> DataFrame:
     """MOSS-style matched-REGION localization: for every qualifying
     overlap pair, the maximal character spans each shared fingerprint
@@ -2206,11 +2193,8 @@ def winnow_spans(
     fps = _winnow_fingerprints_binary(df, text_col, id_col, k=k, w=w).select(
         F.col(id_col).alias("id"), "fp_bin", "pos"
     )
-    if materialize:
-        fps = fps.localCheckpoint(eager=False)
-    fpsd = fps.select("id", "fp_bin").distinct()
-    if materialize:
-        fpsd = fpsd.localCheckpoint(eager=False)
+    fps = fps.localCheckpoint(eager=False)
+    fpsd = fps.select("id", "fp_bin").distinct().localCheckpoint(eager=False)
     freq = fpsd.groupBy("fp_bin").agg(F.count(F.lit(1)).alias("n_docs"))
     kept = fpsd.join(
         freq.filter(F.col("n_docs") <= max_fp_docs).select("fp_bin"),
@@ -2219,9 +2203,8 @@ def winnow_spans(
     a = kept.select(F.col("id").alias("id_a"), "fp_bin")
     b = kept.select(F.col("id").alias("id_b"), "fp_bin")
     shared = a.join(b, "fp_bin").filter(F.col("id_a") < F.col("id_b"))
-    if materialize:
-        # feeds the qualification count AND the qualified-pair join
-        shared = shared.localCheckpoint(eager=False)
+    # feeds the qualification count AND the qualified-pair join
+    shared = shared.localCheckpoint(eager=False)
     qualifying = (
         shared.groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))

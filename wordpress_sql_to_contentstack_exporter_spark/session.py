@@ -7,8 +7,8 @@ local[N] test runs.
 
 When ``get_spark`` launches the driver JVM, the JVM starts from the
 class-data-sharing archive of ``jvm_archive`` (or dumps it at exit), and
-``stop_spark`` — run at interpreter exit too — stops the session and waits
-for that JVM, so no process outlives the program.
+``stop_spark`` — run at interpreter exit too — ends that JVM and waits
+for it, so no process outlives the program.
 """
 
 from __future__ import annotations
@@ -129,20 +129,25 @@ def _started(spark: SparkSession, launch: jvm_archive.Launch) -> None:
 
 
 def stop_spark() -> None:
-    """Stop the session get_spark launched its JVM for, wait for that JVM
-    to exit and publish the archive it dumped. A no-op when get_spark
-    launched no JVM or this already ran; also right after a caller
-    stopped the session and JVM itself."""
+    """End the driver JVM get_spark launched, wait for it to exit and
+    publish the archive it dumped. A no-op when get_spark launched no JVM
+    or this already ran; also right after a caller stopped the session
+    and JVM itself."""
     if not _launched:
         return
     spark, gateway, proc, launch = _launched.pop()
     t0 = time.perf_counter()
     if proc.poll() is None:
-        with contextlib.suppress(Py4JError):
-            spark.stop()
+        # the JVM's exit ends its connection to pyspark's accumulator
+        # server: an expected EOF, not an error to print
+        acc = getattr(spark.sparkContext, "_accumulatorServer", None)
+        if acc is not None:
+            acc.handle_error = lambda *_: None
         with contextlib.suppress(Py4JError):
             gateway.shutdown()
-        proc.stdin.close()  # the gateway JVM exits when its stdin closes
+        # the gateway JVM exits with status 0 when its stdin closes, and
+        # Spark's shutdown hook stops the context
+        proc.stdin.close()
         try:
             proc.wait(EXIT_WAIT_S)
         except subprocess.TimeoutExpired:
@@ -150,5 +155,9 @@ def stop_spark() -> None:
             proc.wait()
     if SparkContext._gateway is gateway:
         SparkContext._gateway = SparkContext._jvm = None
+        # drop pyspark's handles on the stopped context too, so a later
+        # get_spark starts a new one instead of reusing the dead session
+        SparkContext._active_spark_context = None
+        SparkSession._instantiatedSession = SparkSession._activeSession = None
     if launch.state == "dump":
         _log_archive(jvm_archive.publish(launch, proc.returncode, time.perf_counter() - t0))

@@ -128,7 +128,6 @@ def download_assets(
     timeout: float = 60.0,
     retries: int = 1,
     parallelism: int = 2,
-    skip_existing: bool = True,
     fetch: Optional[Callable[[str, float], bytes]] = None,
 ) -> DataFrame:
     """Download every asset row to ``<dest_dir>/<id>/<filename>``.
@@ -137,7 +136,10 @@ def download_assets(
     for tests; it must be picklable (a module-level function or closure).
     Without an injected fetch, each partition builds a pooled keep-alive
     fetcher (``pooled_fetch_factory``). Defaults mirror the reference:
-    timeout 60 s, one retry, 2-way parallelism.
+    timeout 60 s, one retry, 2-way parallelism. A target file that
+    already exists is not fetched again (status ``skipped``): writes go
+    through ``<target>.part`` and an atomic rename, so an existing
+    target is always complete.
     """
     injected = fetch
     rows = assets.selectExpr(
@@ -154,7 +156,7 @@ def download_assets(
                 target_dir = os.path.join(dest_dir, str(rid))
                 target = os.path.join(target_dir, name)
                 status, error, tries = "downloaded", None, 0
-                if skip_existing and os.path.exists(target):
+                if os.path.exists(target):
                     status = "skipped"
                 else:
                     last_err = None
